@@ -8,13 +8,13 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
 /** Incrementally-maintained JOIN rollup over two [[VersionedTable]]s —
   * the two-table extension of [[IncrementalRollup]]: materialize
   * `SELECT g, COUNT(*), SUM(m)… FROM A JOIN B ON A.lk = B.rk GROUP BY g`
-  * and refresh it from the CDC deltas of BOTH base tables, never by
-  * re-joining the tables.
+  * and refresh it from the signed file diffs of BOTH base tables,
+  * never by re-joining the tables.
   *
   * Maintenance uses the signed-multiset delta-join identity (the
   * classical incremental view maintenance result, also the DBSP/
-  * differential-dataflow bilinear rule): with Δ = inserts(+1) ∪
-  * deletes(−1) as signed multisets,
+  * differential-dataflow bilinear rule): with Δ = rows of the added
+  * files (+1) ∪ rows of the removed files (−1) as signed multisets,
   *
   *   Δ(A ⋈ B) = ΔA ⋈ B_new  ∪  A_old ⋈ ΔB
   *
@@ -22,18 +22,26 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * A_old⋈B_old leaves A_old⋈ΔB + ΔA⋈B_old + ΔA⋈ΔB, and the last two
   * terms regroup as ΔA⋈B_new). Signs multiply through the join and
   * fold into the same mergeable COUNT/SUM partial state the
-  * single-table rollup keeps, so deletes and updates (CDC
-  * delete+insert) maintain exactly.
+  * single-table rollup keeps, so every commit kind maintains exactly.
+  * Δ is taken from the manifest FILE diff, not the row diff: a row
+  * copy-on-write carried from a removed file into an added one joins
+  * with +1 and −1 and cancels in the linear partials, so a refresh
+  * needs no row-level `exceptAll`. `VersionedTable.changes` (that row
+  * diff) serves CDC readers only.
   *
   * The reference ships the ingredients — VSS version diffs
   * (`versioning/BRM/vss.h`) and mergeable 2-phase aggregate state
   * (`utils/rowgroup/rowaggregation.cpp`) — but not the composed
   * operator; warehouse users re-run the join. At 100 TB the refresh
-  * here is: two delta-sized CDC reads, a delta⋈table join per side
+  * here is: two delta-sized file-diff reads, a delta⋈table join per
+  * side that moved
   * (the delta side is a handful of files, so AQE broadcasts it and
   * the big side is scanned once with the join key filterable by
   * row-group stats — never shuffled), and a state-sized merge. The
-  * base join is computed exactly once, at `create`.
+  * base join is computed exactly once, at `create`. Both tables'
+  * schemas are fixed at create, and the state is read with the schema
+  * `partial` derives from them, so no read launches a
+  * schema-inference job.
   *
   * Same crash-safe persistence contract as [[IncrementalRollup]]:
   * parquet state generations + an atomically-renamed `_meta` pointer.
@@ -142,10 +150,24 @@ final class IncrementalJoinRollup private (
 
   private def s1(df: DataFrame): DataFrame = df.withColumn("_sign", lit(1))
 
-  private def signedCdc(cdc: DataFrame): DataFrame =
-    cdc.withColumn("_sign",
-      when(col("_change") === "insert", lit(1)).otherwise(lit(-1)))
-      .drop("_change")
+  /** Signed rows of `t`'s file diff between two versions: the added
+    * files' rows at +1, the removed files' at −1; None when no file
+    * changed. */
+  private def signedDiff(t: VersionedTable, from: Int, to: Int): Option[DataFrame] = {
+    val (added, removed) = t.fileDiff(from, to)
+    Seq(added -> 1, removed -> -1).collect {
+      case (files, sign) if files.nonEmpty => t.readFiles(files).withColumn("_sign", lit(sign))
+    }.reduceOption(_ unionByName _)
+  }
+
+  /** The state's schema, derived from `partial`'s output type by
+    * analysis alone — reading state files with it plans no footer
+    * read. */
+  private lazy val stateSchema =
+    partial(signedJoin(s1(left.readFiles(Nil)), s1(right.readFiles(Nil)))).schema
+
+  private def readState(dir: String): DataFrame =
+    spark.read.schema(stateSchema).parquet(dir)
 
   /** From-scratch state at the given base versions (init + audits). */
   def full(lv: Int = left.currentVersion,
@@ -154,7 +176,7 @@ final class IncrementalJoinRollup private (
 
   /** Current view contents (groups + count + sums + derived avg). */
   def read(): DataFrame = {
-    val st = spark.read.parquet(readMeta().stateDir)
+    val st = readState(readMeta().stateDir)
     sumCols.foldLeft(st) { (d, c) =>
       d.withColumn(s"_avg_$c",
         col(s"_sum_$c").cast(DecimalType(38, 2)).cast("double") / col("_cnt"))
@@ -171,22 +193,22 @@ final class IncrementalJoinRollup private (
     writeMeta(Meta(dir.toString, lv, rv, gen))
   }
 
-  /** Fold both tables' CDC deltas since the recorded base versions
-    * into the state. Returns the new (left, right) base versions. */
+  /** Fold both tables' signed file diffs since the recorded base
+    * versions into the state. Returns the new (left, right) base
+    * versions. */
   def refresh(): (Int, Int) = {
     val m = readMeta()
     val (lv, rv) = (left.currentVersion, right.currentVersion)
     if (lv == m.baseLeft && rv == m.baseRight) return (lv, rv)
-    val dL = signedCdc(left.changes(m.baseLeft, lv))
-    val dR = signedCdc(right.changes(m.baseRight, rv))
     // ΔA ⋈ B_new ∪ A_old ⋈ ΔB — each term delta-sized on one side,
-    // so the planner broadcasts the delta and never shuffles the table
-    val term1 = signedJoin(dL, s1(right.read(rv)))
-    val term2 = signedJoin(s1(left.read(m.baseLeft)), dR)
-    val delta = partial(term1.unionByName(term2))
+    // so the planner broadcasts the delta and never shuffles the table;
+    // a side whose files did not change contributes no term
+    val terms =
+      signedDiff(left, m.baseLeft, lv).map(signedJoin(_, s1(right.read(rv)))) ++
+        signedDiff(right, m.baseRight, rv).map(signedJoin(s1(left.read(m.baseLeft)), _))
+    val deltas = terms.reduceOption(_ unionByName _).map(partial)
     // state parquet holds only _cnt/_sum_* — avg is derived in read()
-    val merged = spark.read.parquet(m.stateDir)
-      .unionByName(delta)
+    val merged = deltas.foldLeft(readState(m.stateDir))(_ unionByName _)
       .groupBy(groupCols.map(col): _*)
       .agg(
         sum("_cnt").cast(LongType).as("_cnt"),

@@ -11,23 +11,36 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * the last transactions, never by rescanning the corpus.
   *
   * The reference has the ingredients but not the operator: its VSS
-  * version diff (the analog of `VersionedTable.changes`) tells you
+  * version diff (the analog of the manifest file diff) tells you
   * what a transaction touched, and its 2-phase aggregation engine
   * (`utils/rowgroup/rowaggregation.cpp`) is exactly a mergeable-state
   * evaluator. This composes the two: maintained state = the PARTIAL
-  * (merge-phase) aggregate per group, and a CDC batch merges in as
-  * `state ⊕ delta(inserts) ⊖ delta(deletes)`.
+  * (merge-phase) aggregate per group, and the versions since the last
+  * refresh merge in as `state ⊕ partial(added files) ⊖ partial(removed
+  * files)`.
   *
-  * Maintained exactly under arbitrary insert/delete/update (an update
-  * CDC-feeds as delete+insert): COUNT and SUM — the self-inverse
+  * Maintained exactly under arbitrary insert/delete/update/merge/
+  * optimize/rollback: COUNT and SUM — the self-inverse, linear
   * aggregates — plus anything derivable from them (AVG = sum/count).
+  * Linearity is what lets a refresh fold the signed FILE diff instead
+  * of a row diff: a row copy-on-write carried from a removed file into
+  * an added one counts +1 and −1 and cancels exactly in the long
+  * counts and DECIMAL sums. `VersionedTable.changes` (the row-level
+  * diff, two `exceptAll` shuffles) serves CDC readers only.
   * MIN/MAX are NOT delta-invertible under deletes; the standard
   * fallback (recompute only the groups whose delta removed rows) is
   * intentionally out of scope — callers who need it compose a
   * group-targeted recompute from the table itself.
   *
-  * Scale shape per refresh: one delta-sized aggregate shuffle + one
-  * state-sized outer join. The base table is never read. State
+  * Scale shape per refresh: one partial aggregate over the added files
+  * and one over the removed files (the files the versions since the
+  * last refresh wrote or dropped, never the untouched ones) + one
+  * state-sized merge aggregate. The untouched base table is never
+  * read; only an OPTIMIZE, which rewrites every file, makes the next
+  * refresh read all of it (twice, and the two halves cancel). No read
+  * launches a
+  * schema-inference job: the table's schema is fixed at create, and
+  * the state is read with the schema `partial` derives from it. State
   * persists as parquet generations under `location` with an
   * atomically-renamed `_meta` pointer (same FS-contract as the
   * VersionedTable manifests), so a crashed refresh leaves the old
@@ -114,14 +127,21 @@ final class IncrementalRollup private (
     df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** The state's schema, derived from `partial`'s output type by
+    * analysis alone — reading state files with it plans no footer
+    * read. */
+  private lazy val stateSchema = partial(table.readFiles(Nil), 1).schema
+
+  private def readState(dir: String): DataFrame =
+    spark.read.schema(stateSchema).parquet(dir)
+
   /** From-scratch state at a given table version (init + audits). */
   def full(version: Int = table.currentVersion): DataFrame =
     partial(table.read(version), 1)
 
   /** Current rollup contents (groups + count + sums + derived avg). */
   def read(): DataFrame = {
-    val m = readMeta()
-    val st = spark.read.parquet(m.stateDir)
+    val st = readState(readMeta().stateDir)
     val derived = sumCols.foldLeft(st) { (d, c) =>
       d.withColumn(s"_avg_$c",
         col(s"_sum_$c").cast(DecimalType(38, 2)).cast("double") / col("_cnt"))
@@ -138,18 +158,19 @@ final class IncrementalRollup private (
     writeMeta(Meta(dir.toString, base, gen))
   }
 
-  /** Fold the CDC delta since `baseVersion` into the state. Returns
-    * the new base version (== old when the table hasn't moved). */
+  /** Fold the signed file diff since `baseVersion` into the state.
+    * Returns the new base version (== old when the table hasn't
+    * moved). */
   def refresh(): Int = {
     val m = readMeta()
     val to = table.currentVersion
     if (to == m.baseVersion) return to
-    val cdc = table.changes(m.baseVersion, to)
-    val delta = partial(cdc.where(col("_change") === "insert").drop("_change"), 1)
-      .unionByName(
-        partial(cdc.where(col("_change") === "delete").drop("_change"), -1))
+    val (added, removed) = table.fileDiff(m.baseVersion, to)
+    val deltas = Seq(added -> 1, removed -> -1).collect {
+      case (files, sign) if files.nonEmpty => partial(table.readFiles(files), sign)
+    }
     // merge partials: state-sized + delta-sized, never table-sized
-    val merged = spark.read.parquet(m.stateDir).unionByName(delta)
+    val merged = deltas.foldLeft(readState(m.stateDir))(_ unionByName _)
       .groupBy(groupCols.map(col): _*)
       .agg(
         sum("_cnt").cast(LongType).as("_cnt"),

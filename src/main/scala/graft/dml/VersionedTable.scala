@@ -3,8 +3,9 @@ package graft.dml
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Copy-on-write DML over parquet with a versioned file manifest —
   * the MVCC analog of the reference's version buffer + VSS/VBBM
@@ -22,6 +23,15 @@ import org.apache.spark.sql.functions._
   *    so file ≈ version-buffer block.
   *  - old versions stay readable (`read(version)`) until `vacuum()` —
   *    exactly the VSS read-committed snapshot semantics.
+  *  - the schema is fixed at create, the way the reference fixes a
+  *    table's columns once in its system catalog
+  *    (`dbcon/execplan/calpontsystemcatalog.h`): `create` takes it from
+  *    the frame it writes, `open` infers it once per instance, and
+  *    every data read supplies it, so no read launches a
+  *    schema-inference job. Writes must conform: INSERT and MERGE align
+  *    the source by column name and require the declared types, and
+  *    UPDATE casts each assignment to its column's type, so a
+  *    version never mixes files of different types for one column.
   *  - concurrent writers are serialized by the manifest commit:
   *    version N+1's manifest is published exclusively (exactly one of
   *    two racing writers wins; the loser fails with
@@ -39,7 +49,7 @@ import org.apache.spark.sql.functions._
   * "which files match" scan reads only row-group stats for most files.
   */
 final class VersionedTable private (val location: String, val spark: SparkSession,
-    arbiter: Option[CommitArbiter]) {
+    arbiter: Option[CommitArbiter], createdSchema: Option[StructType]) {
 
   private val fs: FileSystem =
     new HPath(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -208,17 +218,54 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
       .filter(_.endsWith(".parquet")).sorted
   }
 
-  /** Read a version (default: latest). */
-  def read(version: Int = currentVersion): DataFrame = {
-    val fls = filesOf(version)
-    if (fls.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(fls: _*)
+  @volatile private var fixedSchema: Option[StructType] = createdSchema
+
+  /** The table's columns and types: the created frame's schema, or —
+    * for an opened table — the footer schema of its newest version
+    * that has data files, inferred once per instance. Empty only while
+    * no version has a data file left (everything deleted and
+    * vacuumed); it is not cached then, so the next insert defines it. */
+  def schema: StructType = fixedSchema.getOrElse {
+    val inferred = manifests.reverseIterator.flatMap(validFilesOf).find(_.nonEmpty)
+      .map(fls => spark.read.parquet(fls: _*).schema)
+    inferred.foreach(s => fixedSchema = Some(s))
+    inferred.getOrElse(new StructType())
   }
+
+  /** The one read path for data files: the table's schema is supplied,
+    * so Spark plans the scan without opening a footer. Nullability is
+    * free — parquet files hold nullable columns. */
+  private[dml] def readFiles(files: Seq[String]): DataFrame = {
+    val s = StructType(schema.fields.map(_.copy(nullable = true)))
+    if (files.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+    else spark.read.schema(s).parquet(files: _*)
+  }
+
+  /** Read a version (default: latest). */
+  def read(version: Int = currentVersion): DataFrame = readFiles(filesOf(version))
+
+  /** The write-side schema gate shared by INSERT and MERGE: align
+    * `df` to the table's columns by name and require each at its
+    * declared type (nullability free). A drifted type fails here,
+    * before any data file is written, instead of committing parquet
+    * footers that conflict with the table's on every later read. */
+  private def conform(df: DataFrame, what: String): DataFrame =
+    if (schema.isEmpty) df
+    else {
+      val aligned = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+      schema.zip(aligned.schema).foreach { case (t, s) =>
+        require(t.dataType == s.dataType,
+          s"$what column '${t.name}' is ${s.dataType.simpleString}, " +
+            s"table expects ${t.dataType.simpleString}")
+      }
+      aligned
+    }
 
   /** Append rows (INSERT). */
   def insert(df: DataFrame): Int = {
+    val rows = conform(df, "insert")
     val base = currentVersion
-    commit(filesOf(base) ++ writeData(df), base)
+    commit(filesOf(base) ++ writeData(rows), base)
   }
 
   /** input_file_name() yields a URI-encoded `file:///...` form;
@@ -227,41 +274,56 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
   private def normalizePath(f: String): String =
     new HPath(java.net.URI.create(f)).toString
 
-  /** Files of the current version that contain at least one matching
-    * row — a predicate-pushed scan that reads stats/dictionary pages
-    * for most files and row data only where stats cannot exclude. */
-  private def touchedFiles(cond: Column): Seq[String] = {
-    read().withColumn("_f", input_file_name())
+  /** Files of `files` that contain at least one matching row — a
+    * predicate-pushed scan that reads stats/dictionary pages for most
+    * files and row data only where stats cannot exclude. */
+  private def touchedFiles(files: Seq[String], cond: Column): Set[String] =
+    readFiles(files).withColumn("_f", input_file_name())
       .filter(cond).select("_f").distinct()
-      .collect().map(_.getString(0)).toSeq
-      .map(normalizePath)
+      .collect().map(r => normalizePath(r.getString(0))).toSet
+
+  /** `files` after DELETE WHERE cond: only the files containing
+    * matches are rewritten. */
+  private def deleteFrom(files: Seq[String], cond: Column): Seq[String] = {
+    val touched = touchedFiles(files, cond)
+    if (touched.isEmpty) files
+    else {
+      val kept = readFiles(touched.toSeq).filter(!cond || cond.isNull)
+      files.filterNot(touched.contains) ++
+        (if (kept.isEmpty) Seq.empty else writeData(kept))
+    }
+  }
+
+  /** `files` after UPDATE SET assignments WHERE cond, copy-on-write.
+    * Each assignment is cast to its column's declared type: `bal + 1`
+    * on a DECIMAL(10,2) column widens to DECIMAL(11,2), and a file of
+    * that type next to DECIMAL(10,2) ones would break the table's
+    * fixed-schema reads. */
+  private def updateIn(files: Seq[String], cond: Column,
+      assignments: Map[String, Column]): Seq[String] = {
+    val touched = touchedFiles(files, cond)
+    if (touched.isEmpty) files
+    else {
+      val updated = readFiles(touched.toSeq).select(schema.fields.toIndexedSeq.map { f =>
+        assignments.get(f.name) match {
+          case Some(e) => when(cond, e).otherwise(col(f.name)).cast(f.dataType).as(f.name)
+          case None => col(f.name)
+        }
+      }: _*)
+      files.filterNot(touched.contains) ++ writeData(updated)
+    }
   }
 
   /** DELETE WHERE cond: rewrite only the files containing matches. */
   def delete(cond: Column): Int = {
     val base = currentVersion
-    val current = filesOf(base)
-    val touched = touchedFiles(cond).toSet
-    if (touched.isEmpty) return commit(current, base)
-    val kept = spark.read.parquet(touched.toSeq: _*).filter(!cond || cond.isNull)
-    val newFiles = if (kept.isEmpty) Seq.empty else writeData(kept)
-    commit(current.filterNot(touched.contains) ++ newFiles, base)
+    commit(deleteFrom(filesOf(base), cond), base)
   }
 
   /** UPDATE SET assignments WHERE cond, copy-on-write. */
   def update(cond: Column, assignments: Map[String, Column]): Int = {
     val base = currentVersion
-    val current = filesOf(base)
-    val touched = touchedFiles(cond).toSet
-    if (touched.isEmpty) return commit(current, base)
-    val df = spark.read.parquet(touched.toSeq: _*)
-    val updated = df.columns.foldLeft(df) { (acc, c) =>
-      assignments.get(c) match {
-        case Some(expr) => acc.withColumn(c, when(cond, expr).otherwise(col(c)))
-        case None => acc
-      }
-    }
-    commit(current.filterNot(touched.contains) ++ writeData(updated), base)
+    commit(updateIn(filesOf(base), cond, assignments), base)
   }
 
   /** MERGE (upsert): rows of `source` whose `key` matches an existing
@@ -270,31 +332,20 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
     * only files containing matched keys are rewritten; at scale the
     * match probe is a predicate/stats-pruned scan joined against the
     * (typically much smaller, broadcast) source. Source must have the
-    * target's columns AT the target's types — validated up front, so
-    * a type drift fails the merge instead of committing parquet files
-    * whose footers conflict with the table's on later reads.
-    * Duplicate keys WITHIN source are rejected (the ambiguous-merge
-    * rule). */
+    * target's columns AT the target's types — the same gate as INSERT,
+    * checked before any data file is written. Duplicate keys WITHIN
+    * source are rejected (the ambiguous-merge rule). */
   def merge(source: DataFrame, key: String): Int = {
+    val aligned = conform(source, "merge source")
     val dupKeys = source.groupBy(col(key)).count().filter(col("count") > 1)
     require(dupKeys.isEmpty, s"source has duplicate values of merge key '$key'")
-    val target = read()
-    // schema gate (names AND types, nullability free): a source with
-    // matching names but e.g. int where the table holds bigint would
-    // commit fine and break every subsequent scan of the new version
-    val aligned = source.select(target.columns.map(col).toIndexedSeq: _*)
-    target.schema.zip(aligned.schema).foreach { case (t, s) =>
-      require(t.dataType == s.dataType,
-        s"merge source column '${t.name}' is ${s.dataType.simpleString}, " +
-          s"target expects ${t.dataType.simpleString}")
-    }
     val base = currentVersion
     val current = filesOf(base)
     val keys = source.select(col(key))
     val touched = {
       // files holding a matched key: semi-join instead of a literal
       // IN-list, so a wide source never builds a driver-side predicate
-      target.withColumn("_f", input_file_name())
+      readFiles(current).withColumn("_f", input_file_name())
         .join(broadcast(keys), Seq(key), "left_semi")
         .select("_f").distinct().collect().map(_.getString(0)).toSeq
         .map(normalizePath)
@@ -303,7 +354,7 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
     val survivors =
       if (touched.isEmpty) None
       else {
-        val s = spark.read.parquet(touched.toSeq: _*)
+        val s = readFiles(touched.toSeq)
           .join(broadcast(keys), Seq(key), "left_anti")
         if (s.isEmpty) None else Some(s)
       }
@@ -362,6 +413,17 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
   /** Snapshot read as of a wall-clock instant. */
   def readAsOf(ts: java.sql.Timestamp): DataFrame = read(versionAsOf(ts))
 
+  /** Data files of `toVersion` absent from `fromVersion` (added) and
+    * of `fromVersion` absent from `toVersion` (removed). A row that
+    * copy-on-write carried through a rewrite lies in both lists. */
+  private[dml] def fileDiff(fromVersion: Int, toVersion: Int): (Seq[String], Seq[String]) = {
+    val before = filesOf(fromVersion)
+    val after = filesOf(toVersion)
+    val beforeSet = before.toSet
+    val afterSet = after.toSet
+    (after.filterNot(beforeSet), before.filterNot(afterSet))
+  }
+
   /** Row-level change feed between two versions (CDC) — the snapshot
     * diff the reference's version buffer makes cheap (VSS tracks which
     * blocks each transaction superseded; here the manifest diff tracks
@@ -375,31 +437,31 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
     * the file-level diff up front; the row-level `exceptAll` (which
     * cancels the untouched rows CoW carried into a rewritten file)
     * then shuffles only the changed-file rows. At 100 TB a
-    * ten-file update diffs ten files. */
+    * ten-file update diffs ten files.
+    *
+    * This serves CDC readers only. The rollups do not call it: COUNT
+    * and SUM partials are linear, so they fold the signed file diff
+    * ([[fileDiff]]) directly and carried rows cancel in the sums,
+    * without these two row-level shuffles. */
   def changes(fromVersion: Int, toVersion: Int = currentVersion): DataFrame = {
     require(fromVersion <= toVersion,
       s"changes: fromVersion $fromVersion > toVersion $toVersion")
-    val before = filesOf(fromVersion)
-    val after = filesOf(toVersion)
-    val beforeSet = before.toSet
-    val afterSet = after.toSet
-    val addedF = after.filterNot(beforeSet)
-    val removedF = before.filterNot(afterSet)
-    def rows(files: Seq[String]) = spark.read.parquet(files: _*)
+    val (addedF, removedF) = fileDiff(fromVersion, toVersion)
     (addedF.nonEmpty, removedF.nonEmpty) match {
       case (false, false) =>
         read(toVersion).withColumn("_change", lit("insert")).limit(0)
       case (true, false) =>
-        rows(addedF).withColumn("_change", lit("insert"))
+        readFiles(addedF).withColumn("_change", lit("insert"))
       case (false, true) =>
-        rows(removedF).withColumn("_change", lit("delete"))
+        readFiles(removedF).withColumn("_change", lit("delete"))
       case (true, true) =>
         // multiset difference: a row CoW-carried verbatim through a
         // rewrite appears once per side and cancels; true inserts,
         // deletes, and both halves of an update survive
-        rows(addedF).exceptAll(rows(removedF)).withColumn("_change", lit("insert"))
-          .unionByName(
-            rows(removedF).exceptAll(rows(addedF)).withColumn("_change", lit("delete")))
+        readFiles(addedF).exceptAll(readFiles(removedF))
+          .withColumn("_change", lit("insert"))
+          .unionByName(readFiles(removedF).exceptAll(readFiles(addedF))
+            .withColumn("_change", lit("delete")))
     }
   }
 
@@ -424,9 +486,7 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
     private val base = t.currentVersion
     private var files: Seq[String] = t.filesOf(base)
     private var open = true
-    private def working: DataFrame =
-      if (files.isEmpty) t.spark.emptyDataFrame
-      else t.spark.read.parquet(files: _*)
+    private def working: DataFrame = t.readFiles(files)
     private def require_open(): Unit =
       require(open, "transaction is no longer open")
 
@@ -434,37 +494,17 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
 
     def insert(df: DataFrame): Unit = {
       require_open()
-      files = files ++ t.writeData(df)
+      files = files ++ t.writeData(t.conform(df, "insert"))
     }
 
     def delete(cond: Column): Unit = {
       require_open()
-      val touched = working.withColumn("_f", input_file_name())
-        .filter(cond).select("_f").distinct()
-        .collect().map(r => t.normalizePath(r.getString(0))).toSet
-      if (touched.nonEmpty) {
-        val kept = t.spark.read.parquet(touched.toSeq: _*)
-          .filter(!cond || cond.isNull)
-        val rewritten = if (kept.isEmpty) Seq.empty else t.writeData(kept)
-        files = files.filterNot(touched.contains) ++ rewritten
-      }
+      files = t.deleteFrom(files, cond)
     }
 
     def update(cond: Column, assignments: Map[String, Column]): Unit = {
       require_open()
-      val touched = working.withColumn("_f", input_file_name())
-        .filter(cond).select("_f").distinct()
-        .collect().map(r => t.normalizePath(r.getString(0))).toSet
-      if (touched.nonEmpty) {
-        val df = t.spark.read.parquet(touched.toSeq: _*)
-        val updated = df.columns.foldLeft(df) { (acc, c) =>
-          assignments.get(c) match {
-            case Some(e) => acc.withColumn(c, when(cond, e).otherwise(col(c)))
-            case None => acc
-          }
-        }
-        files = files.filterNot(touched.contains) ++ t.writeData(updated)
-      }
+      files = t.updateIn(files, cond, assignments)
     }
 
     /** Publish the working set as base+1; raises on a lost race. */
@@ -512,23 +552,26 @@ final class ConcurrentWriteException(msg: String, cause: Throwable)
   extends RuntimeException(msg, cause)
 
 object VersionedTable {
-  /** Create a new versioned table at `location` from initial data.
+  /** Create a new versioned table at `location` from initial data;
+    * `df`'s schema becomes the table's fixed schema.
     * `arbiter` overrides the commit-atomicity resolution — required on
     * object stores (see [[CommitArbiter]]); on local/HDFS schemes the
     * default create-exclusive is selected automatically. */
   def create(spark: SparkSession, location: String, df: DataFrame,
       initialFiles: Int = 4,
       arbiter: Option[CommitArbiter] = None): VersionedTable = {
-    val t = new VersionedTable(location, spark, arbiter)
+    val t = new VersionedTable(location, spark, arbiter, Some(df.schema))
     t.requireArbiter() // about to write: refuse BEFORE any data IO
     require(t.currentVersion == -1, s"table already exists at $location")
     t.commit(t.writeData(df.repartition(initialFiles)), -1)
     t
   }
 
+  /** Open an existing table. Its schema is inferred from the data
+    * files on first use and kept for the life of this handle. */
   def open(spark: SparkSession, location: String,
       arbiter: Option[CommitArbiter] = None): VersionedTable = {
-    val t = new VersionedTable(location, spark, arbiter)
+    val t = new VersionedTable(location, spark, arbiter, None)
     require(t.currentVersion >= 0, s"no table at $location")
     t
   }

@@ -52,7 +52,10 @@ object Bounds {
     if (budget <= 0) return None
     val rdd = df.rdd // finalizes the (AQE) plan; stages materialize once
     val parts = math.max(rdd.getNumPartitions, 1)
-    val cap = math.min(budget, math.max(2L * budget / parts, 4096L))
+    // saturating 2·budget: past Long.MaxValue / 2 the product would
+    // wrap negative and silently pin every partition to the floor cap
+    val twice = if (budget > Long.MaxValue / 2) Long.MaxValue else 2L * budget
+    val cap = math.min(budget, math.max(twice / parts, 4096L))
     try {
       val chunks = rdd.mapPartitions { it =>
         val buf = new scala.collection.mutable.ArrayBuilder.ofLong

@@ -33,4 +33,14 @@ class BoundsSpec extends SparkSpec {
     // exact-boundary input is complete
     assert(Bounds.collectLongPairsBounded(df, 1000L).map(_.length) == Some(2000))
   }
+
+  test("a budget near Long.MaxValue saturates instead of wrapping to the floor cap") {
+    // one partition of 10,000 rows: above the 4096-row floor, so a
+    // wrapped 2·budget (negative) would cap the partition and decline
+    val df = spark.range(0, 10000, 1, 1).select(col("id"), (col("id") + 1).as("y"))
+    for (budget <- Seq(Long.MaxValue, Long.MaxValue - 1, Long.MaxValue / 2 + 1)) {
+      val got = Bounds.collectLongPairsBounded(df, budget)
+      assert(got.map(_.length) == Some(20000), s"budget $budget")
+    }
+  }
 }

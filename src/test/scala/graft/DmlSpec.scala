@@ -341,4 +341,63 @@ class DmlSpec extends SparkSpec {
     assert(latest.count() == 150) // pinned at v0+2, not affected by insert
     assert(t.read().count() == 151)
   }
+
+  private def parquetFiles(loc: String): Int =
+    Files.walk(Paths.get(loc)).iterator().asScala.count(_.toString.endsWith(".parquet"))
+
+  test("update keeps a DECIMAL column's declared type across rewritten and untouched files") {
+    val loc = freshLoc()
+    def rows(lo: Long, hi: Long) =
+      spark.range(lo, hi).select(col("id"), (col("id") * 10).cast("decimal(10,2)").as("bal"))
+    val t = VersionedTable.create(spark, loc, rows(1, 101))
+    t.insert(rows(101, 201)) // files of their own: ids 101-200
+    val decType = org.apache.spark.sql.types.DecimalType(10, 2)
+    // `bal + 1` is DECIMAL(11,2); the statement casts it back. Each
+    // update rewrites one side's files and leaves the other's as they are
+    t.update(col("id") <= 10, Map("bal" -> (col("bal") + 1)))
+    val txn = t.begin()
+    txn.update(col("id") > 190, Map("bal" -> (col("bal") + 1)))
+    txn.commit()
+    val v = t.currentVersion
+    assert(t.changes(v - 2, v).count() == 40)
+    // v holds the first update's files, untouched, next to the txn's
+    assert(t.read(v).inputFiles.toSet.intersect(t.read(v - 1).inputFiles.toSet).nonEmpty)
+    assert(t.read(v).schema("bal").dataType == decType)
+    val sums = t.read(v).agg(sum("bal"), count(lit(1))).head()
+    assert(sums.getDecimal(0) == new java.math.BigDecimal((1 to 200).map(_ * 10).sum + 20)
+      .setScale(2))
+    assert(sums.getLong(1) == 200L)
+    assert(t.read(v).where(col("id") === 5 || col("id") === 195).select("bal")
+      .as[java.math.BigDecimal].collect().toSet ==
+      Set(new java.math.BigDecimal("51.00"), new java.math.BigDecimal("1951.00")))
+    // a reopened handle infers the same schema from the mixed files
+    assert(VersionedTable.open(spark, loc).read(v).schema("bal").dataType == decType)
+  }
+
+  test("insert aligns columns by name and rejects a drifted type before writing") {
+    val loc = freshLoc()
+    val t = VersionedTable.create(spark, loc,
+      (1 to 20).map(i => (i.toLong, s"n$i", i * 10.0)).toDF("id", "name", "bal"))
+    val v = t.currentVersion
+    val files = parquetFiles(loc)
+    // bal as int where the table holds double
+    intercept[IllegalArgumentException](
+      t.insert(Seq((21L, "x", 1)).toDF("id", "name", "bal")))
+    val txn = t.begin()
+    intercept[IllegalArgumentException](
+      txn.insert(Seq((21L, "x", 1)).toDF("id", "name", "bal")))
+    txn.rollback()
+    assert(t.currentVersion == v, "failed insert must not commit")
+    assert(parquetFiles(loc) == files, "failed insert must not write a data file")
+
+    // a reordered column list lands in the table's column order
+    t.insert(Seq((210.0, 21L, "n21")).toDF("bal", "id", "name"))
+    val txn2 = t.begin()
+    txn2.insert(Seq(("n22", 220.0, 22L)).toDF("name", "bal", "id"))
+    txn2.commit()
+    val now = t.read()
+    assert(now.columns.toSeq == Seq("id", "name", "bal"))
+    assert(now.where(col("id") >= 21).orderBy("id").as[(Long, String, Double)]
+      .collect().toSeq == Seq((21L, "n21", 210.0), (22L, "n22", 220.0)))
+  }
 }
