@@ -1057,11 +1057,11 @@ object Dedup {
     * Returns (_id, _comp) for every doc in ≥ 1 pair, _comp = the
     * component's minimum id (the canonical/keeper doc by convention).
     *
-    * Two execution paths, chosen at runtime from the pair count (the
-    * same adaptive philosophy as AQE's join-strategy choice): a pair
-    * graph within `driverMaxPairs` (≈16 MB at the default bound) runs
-    * bounded driver union-find — α(n), no rounds, no staging; larger
-    * graphs run the distributed loop below.
+    * Pairs with a NULL id are dropped. A pair graph within
+    * `driverMaxPairs` rows with integral ids runs driver union-find —
+    * α(n), no rounds; larger graphs run the distributed loop
+    * ([[graft.operators.Fixpoint]] owns the gate, the caches and the
+    * staging of the result).
     *
     * Distributed algorithm: min-label propagation as an iterative DataFrame job.
     * Each round every vertex takes the min label over itself and its
@@ -1074,72 +1074,40 @@ object Dedup {
     *
     * Scale shape: each round is ONE partial-aggregable shuffle
     * (groupBy over |E|+|V| rows keyed by vertex) — never all-pairs,
-    * no driver-side graph state. The loop persists the flow table
-    * once and each round's labels, unpersisting the previous round as
-    * soon as the convergence action materializes the next — so round
-    * k costs one join over cached inputs (O(k) total work, not the
-    * O(k²) of re-deriving every prior round from scratch), and peak
-    * BlockManager residency is edges + two label generations. Every
-    * persist is released before returning — zero residue survives the
-    * call (the round-3 leak lesson). The converged label table (one
-    * row per doc in ≥ 1 pair — far smaller than the corpus) is
-    * staged to storage and the returned frame READS it: returning
-    * the raw lineage instead would replay the whole k-round chain —
-    * including the expensive pair pipeline, once per round — at
-    * every downstream consumption (measured 8.9 s vs 1.5 s for the
-    * resolve query at sf0.1). Same role as the reference staging
-    * intermediate results between job steps; on a cluster the stage
-    * dir sits on shared storage. For
-    * webgraph-diameter inputs switch to the two-phase
+    * no driver-side graph state; round k joins cached inputs, so the
+    * loop does O(k) work, not the O(k²) of re-deriving every prior
+    * round. For webgraph-diameter inputs switch to the two-phase
     * large-star/small-star contraction (public literature: Kiveris et
     * al., "Connected Components in MapReduce and Beyond"), which
     * converges in O(log n) rounds with the same per-round shuffle. */
   def dupClusters(pairs: DataFrame, maxRounds: Int = 25,
       driverMaxPairs: Long = 1000000L): DataFrame = {
-    // Cache the (often expensive) pair pipeline for the duration so
-    // neither path re-derives it; free everything before returning.
-    val p = pairs.persist()
-    try {
-      // Adaptive path choice, the AQE/UM-vs-PM philosophy applied to
-      // graph connectivity: the pair GRAPH is usually tiny relative
-      // to the corpus (it holds only near-duplicate doc ids), and
-      // when it fits a bounded driver budget (≤ driverMaxPairs rows ·
-      // 16 B ≈ 16 MB at the default, further ceilinged by the
-      // session's maxResultSize budget), α(n) union-find beats k
-      // rounds of distributed joins whose per-round scheduling
-      // overhead dwarfs the data (measured 3.4 s of round overhead
-      // for a 256-pair graph at sf0.1).
-      //
-      // ONE action on this path (r16, VERDICT r15 #3 — was
-      // persist + count + collect, two full-result actions): the
-      // bounded single-job collect scans the pair pipeline exactly
-      // once, materializing the cache as a side effect, and returns
-      // BOTH the cardinality verdict and the complete rows. Web-scale
-      // pair sets come back None and take the distributed min-label
-      // loop below against the (partially) materialized cache.
-      val numericIds = {
-        import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-        Seq("id_a", "id_b").forall(c =>
-          Seq(ByteType, ShortType, IntegerType, LongType).contains(p.schema(c).dataType))
+    val p = graft.operators.Fixpoint.edgeList(pairs, "id_a", "id_b", "id_a", "id_b")
+    val dt = p.schema("id_a").dataType
+    // union-find keys on Long: only integral ids may take the driver step
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(dt)
+    graft.operators.Fixpoint.adaptive(p, if (integral) driverMaxPairs else 0L, "dupclusters")(
+      dupClustersDriver(_, dt, p.sparkSession)) { (r, p) =>
+      val e = p.select(col("id_a").as("_u"), col("id_b").as("_v"))
+      val edges = e.union(e.select(col("_v").as("_u"), col("_u").as("_v")))
+      val verts = edges.select(col("_u")).distinct()
+      // label flows u → v along every edge, plus v → v so a vertex
+      // keeps its own label (and `labels` is consumed exactly once)
+      val flows = r.hold(edges.union(verts.select(col("_u"), col("_u").as("_v"))))
+      def labelSum(l: DataFrame) =
+        Option(l.agg(sum(col("_comp").cast(DecimalType(38, 0)))).first().getDecimal(0))
+      val labels0 = verts.select(col("_u").as("_id"), col("_u").as("_comp"))
+      r.iterate(labels0, maxRounds)(labelSum)(_ == _) { labels =>
+        flows.join(labels, col("_u") === col("_id"))
+          .groupBy(col("_v")).agg(min(col("_comp")).as("_comp"))
+          .select(col("_v").as("_id"), col("_comp"))
       }
-      val budget = graft.operators.Bounds.driverRowBudget(
-        p.sparkSession, driverMaxPairs, 16L)
-      val packed = if (numericIds) graft.operators.Bounds.collectLongPairsBounded(
-        p.select(col("id_a").cast("long"), col("id_b").cast("long")), budget)
-      else None
-      packed match {
-        case Some(flat) =>
-          dupClustersDriver(flat, p.schema("id_a").dataType, p.sparkSession)
-        case None => dupClustersIterative(p, maxRounds)
-      }
-    } finally p.unpersist(blocking = false)
+    }
   }
 
-  /** Bounded driver union-find (path-compressed, union-by-min) over
-    * the packed [a0, b0, a1, b1, ...] pair array: the small-graph
-    * fast path. Returns a MATERIALIZED local frame — no staging
-    * needed, nothing recomputes downstream. */
-  private def dupClustersDriver(flat: Array[Long],
+  /** Driver step of [[dupClusters]]: union-find (path-compressed,
+    * union-by-min) over the collected pair rows — α(n), no rounds. */
+  private def dupClustersDriver(rows: Array[org.apache.spark.sql.Row],
       dt: org.apache.spark.sql.types.DataType,
       spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val parent = new java.util.HashMap[Long, Long]()
@@ -1151,71 +1119,20 @@ object Dedup {
       while (parent.get(c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
       r
     }
-    var i = 0
-    while (i < flat.length) {
-      val a = flat(i); val b = flat(i + 1)
+    rows.foreach { row =>
+      val a = row.get(0).asInstanceOf[Number].longValue
+      val b = row.get(1).asInstanceOf[Number].longValue
       add(a); add(b)
       val ra = find(a); val rb = find(b)
       // union by MIN id: a set's root stays its minimum element, so
       // the root IS the canonical keeper id the contract promises
       if (ra < rb) parent.put(rb, ra) else if (rb < ra) parent.put(ra, rb)
-      i += 2
     }
     import scala.jdk.CollectionConverters._
     import spark.implicits._
     parent.keySet().asScala.toSeq.map(x => (x, find(x)))
       .toDF("_id", "_comp")
       .select(col("_id").cast(dt).as("_id"), col("_comp").cast(dt).as("_comp"))
-  }
-
-  /** Distributed min-label propagation — the any-scale path (see
-    * [[dupClusters]] scaladoc for the algorithm and its shuffle
-    * contract). `p` must already be persisted by the caller. */
-  private def dupClustersIterative(p: DataFrame, maxRounds: Int): DataFrame = {
-    val e = p.select(col("id_a").as("_u"), col("id_b").as("_v"))
-    val edges = e.union(e.select(col("_v").as("_u"), col("_u").as("_v")))
-    val verts = edges.select(col("_u")).distinct()
-    // label flows u → v along every edge, plus v → v so a vertex
-    // keeps its own label (and `labels` is consumed exactly once)
-    val flows = edges.union(verts.select(col("_u"), col("_u").as("_v"))).persist()
-    var cachedPrev: DataFrame = null
-    try {
-      var labels = verts.select(col("_u").as("_id"), col("_u").as("_comp"))
-      def checksum(l: DataFrame): Option[java.math.BigDecimal] =
-        Option(l.agg(sum(col("_comp").cast(DecimalType(38, 0)))).first().getDecimal(0))
-      // no initial checksum action: round 0 strictly decreases the label
-      // sum whenever any edge exists, so it can never be the fixpoint
-      // confirmation (and None ≠ Some keeps the comparison safe)
-      var prev: Option[java.math.BigDecimal] = None
-      var round = 0
-      var converged = false
-      while (!converged && round < maxRounds) {
-        labels = flows.join(labels, col("_u") === col("_id"))
-          .groupBy(col("_v")).agg(min(col("_comp")).as("_comp"))
-          .select(col("_v").as("_id"), col("_comp"))
-          .persist()
-        val cur = checksum(labels) // materializes `labels` from cached inputs
-        if (cachedPrev ne null) cachedPrev.unpersist(blocking = false)
-        cachedPrev = labels
-        converged = cur == prev
-        prev = cur
-        round += 1
-      }
-      // stage the converged labels (cached — this re-reads, not
-      // recomputes) and hand consumers the read-back plan. The stage
-      // dir comes from the shared-storage scratch root (Hadoop FS —
-      // spark.graft.scratchRoot on a cluster), NOT a driver-local
-      // temp dir: executors must be able to read it back. One static
-      // hook reclaims all stage dirs at JVM exit.
-      val spark = labels.sparkSession
-      val stage = graft.sources.Scratch.newDir(spark, "dupclusters") + "/labels"
-      labels.write.mode("overwrite").parquet(stage)
-      spark.read.parquet(stage)
-    } finally {
-      // release loop caches (`p` is the caller's persist to release)
-      if (cachedPrev ne null) cachedPrev.unpersist(blocking = false)
-      flows.unpersist(blocking = false)
-    }
   }
 
   /** Near-dedup'd corpus view: every clustered doc except the cluster

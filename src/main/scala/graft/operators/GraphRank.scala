@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Fixed-iteration PageRank over an edge table — the graph-weighting
   * pass of web-corpus curation (domain/host ranking a la Common Crawl
@@ -24,14 +25,15 @@ import org.apache.spark.sql.functions._
   * keyed shuffle — then a partial-aggregable SUM keyed by dst; the
   * rank table stays |V| rows, edges are scanned once per round, and
   * nothing collects to the driver except the one |V| COUNT up front.
-  * Rounds are a driver loop exactly like `Recursion` (lineage depth
-  * = iterations; checkpoint past ~20 rounds).
+  * Graphs within `driverMaxEdges` run the same recurrence on the
+  * driver ([[Fixpoint]] owns the gate, the caches and the staging).
   */
 object GraphRank {
 
   /** @param edges directed edge table (multi-edges collapsed here)
     * @param src    source-node column name
     * @param dst    destination-node column name
+    * @param driverMaxEdges distinct-edge bound of the driver path
     * @param edgesAlreadyDistinct caller vouches `edges` holds no
     *               duplicate (src, dst) rows, so the operator's own
     *               distinct — a full shuffle of the edge table — is
@@ -43,13 +45,9 @@ object GraphRank {
     *               groupBy/distinct, or an injective mint of one).
     * @return (node, rank) — rank BIGINT in units of 1/scale
     *
-    * NULL endpoints are dropped up front: the equi-joins of the
-    * distributed rounds never route inflow through NULL anyway
-    * (ADVICE r15 — the driver HashMap accepted null keys, silently
-    * diverging from the distributed path on null-endpoint graphs),
-    * so the filter pins both paths to the same graph. `dst` is cast
-    * to `src`'s type for the same reason: the distributed union
-    * coerces, the driver Rows must match the declared schema.
+    * NULL endpoints are dropped and both endpoints cast to their wider
+    * common type up front ([[Fixpoint.edgeList]]), so both paths rank
+    * one graph.
     */
   def pageRank(
       edges: DataFrame, src: String, dst: String,
@@ -58,111 +56,63 @@ object GraphRank {
       scale: Long = 1000000000000L,
       driverMaxEdges: Long = 2000000L,
       edgesAlreadyDistinct: Boolean = false): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // e / nodes / outdeg feed EVERY round: without persist, round k's
-    // lineage recomputes the edge distinct + node union k times over
-    // (measured 8.2 s -> 5.0 s at sf0.1 for 3 rounds). Same
-    // persist-materialize-unpersist discipline as `Recursion`.
-    val srcType = edges.schema(src).dataType
-    val proj = edges
-      .select(col(src).as("src"), col(dst).cast(srcType).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e = (if (edgesAlreadyDistinct) proj else proj.distinct())
-      .persist(MEMORY_AND_DISK)
-    // Adaptive path choice (r15, guide §1.2/§2.4 — the dupClusters
-    // driverMaxPairs philosophy): the recurrence is exact-integer BY
-    // DESIGN (that is what makes it oracle-checkable), so a bounded
-    // driver iterate is bit-identical to the distributed one, and a
-    // ≤ driverMaxEdges graph finishes in local arithmetic where each
-    // distributed round pays a join + aggregate + count action of
-    // scheduling latency for kilobytes of data (measured ~1 s/round
-    // at sf0.1 on a 120k-edge graph). Web-scale graphs exceed the
-    // bound and run the loop below unchanged. The count doubles as
-    // the cache materialization the loop needed anyway.
-    // Memory envelope at the 2M default: collected edge Rows with two
-    // short string node ids are ~100-150 B/edge on-heap → ≤ ~300 MB
-    // transient on the driver (serialized collect ~30-60 MB). The
-    // effective bound is additionally ceilinged by the session's own
-    // collect budget (VERDICT r15 #7 — the dedup broadcast-gate
-    // discipline): ~32 B/edge serialized against maxResultSize/2, so
-    // a small-driver deployment lowers the gate automatically.
-    val bound = Bounds.driverRowBudget(edges.sparkSession, driverMaxEdges, 32L)
-    if (e.count() <= bound) {
-      val out = pageRankDriver(e, iterations, dampNum, dampDen, scale)
-      e.unpersist(blocking = false)
-      return out
+    val proj = Fixpoint.edgeList(edges, src, dst, "src", "dst")
+    val nodeType = proj.schema("src").dataType
+    val e = if (edgesAlreadyDistinct) proj else proj.distinct()
+    val driver = pageRankDriver(edges.sparkSession, _: Array[Row], nodeType,
+      iterations, dampNum, dampDen, scale)
+    Fixpoint.adaptive(e, driverMaxEdges, "pagerank")(driver) { (r, e) =>
+      val nodes = r.hold(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      // |V| is the one driver-side scalar (metadata-sized, like the IVF
+      // centroid pull): init and teleport base derive from it
+      val n = nodes.count()
+      val init = scale / n
+      val base = init * (dampDen - dampNum) / dampDen
+      // out-degree is loop-invariant: staple it onto the edge rows ONCE
+      // so each round joins rank to edges exactly once (rank ⋈ eo on
+      // src) instead of rank ⋈ outdeg ⋈ e — one join fewer per
+      // iteration (~10% at sf0.1)
+      val eo = r.hold(e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src"))
+      val rank0 = nodes.withColumn("rank", lit(init))
+      r.iterate(rank0, iterations)(_.count())((_, _) => false) { rank =>
+        val contrib = rank // dangling nodes contribute nothing (inner join)
+          .join(eo, col("node") === col("src"))
+          .withColumn("c", expr("rank div outdeg"))
+          .groupBy(col("dst").as("node"))
+          .agg(sum(col("c")).as("inflow"))
+        nodes.join(contrib, Seq("node"), "left")
+          // `div` (integer) — `/` on BIGINT is DOUBLE division in Spark
+          .withColumn("rank",
+            expr(s"$base + (coalesce(inflow, 0) * $dampNum) div $dampDen"))
+          .select(col("node"), col("rank").cast("long"))
+      }
     }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(MEMORY_AND_DISK)
-    // |V| is the one driver-side scalar (metadata-sized, like the IVF
-    // centroid pull): init and teleport base derive from it. The
-    // count also materializes the two caches above.
-    val n = nodes.count()
-    val init = scale / n
-    val base = init * (dampDen - dampNum) / dampDen
-    // out-degree is loop-invariant: staple it onto the edge rows ONCE
-    // so each round joins rank to edges exactly once (rank ⋈ eo on
-    // src) instead of rank ⋈ outdeg ⋈ e — one join fewer per
-    // iteration (~10% at sf0.1; the win grows with iteration count
-    // since eo amortizes where the per-round join pair did not)
-    val eo = e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
-      "src").persist(MEMORY_AND_DISK)
-
-    var rank = nodes.withColumn("rank", lit(init))
-    for (i <- 1 to iterations) {
-      val contrib = rank // dangling nodes contribute nothing (inner join)
-        .join(eo, col("node") === col("src"))
-        .withColumn("c", expr("rank div outdeg"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("c")).as("inflow"))
-      val next = nodes.join(contrib, Seq("node"), "left")
-        // `div` (integer) — `/` on BIGINT is DOUBLE division in Spark
-        .withColumn("rank",
-          expr(s"$base + (coalesce(inflow, 0) * $dampNum) div $dampDen"))
-        .select(col("node"), col("rank").cast("long"))
-        .persist(MEMORY_AND_DISK)
-      next.count() // materialize so the previous round can drop
-      if (i > 1) rank.unpersist(blocking = false)
-      rank = next
-    }
-    // the returned frame is cached; its inputs can release now
-    eo.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    rank
   }
 
-  /** Bounded driver iterate — the small-graph fast path of
-    * [[pageRank]]. Same recurrence in local Long arithmetic: init =
-    * scale/N, contrib = rank div outdeg summed per dst over the
-    * DISTINCT edge set, next = base + inflow·dampNum div dampDen,
-    * dangling mass dropped. All operands are positive longs, so
-    * Spark's `div` and JVM `/` truncate identically — the iterate is
-    * bit-equal to the distributed one (GraphRankSpec pins both paths
-    * to the same closed-form fixtures). `e` must already be the
-    * distinct edge projection. */
-  private def pageRankDriver(e: DataFrame, iterations: Int,
-      dampNum: Long, dampDen: Long, scale: Long): DataFrame = {
-    import scala.collection.mutable
+  /** Driver step of [[pageRank]]: the same recurrence in local Long
+    * arithmetic over the collected DISTINCT edge rows — init =
+    * scale/N, contrib = rank div outdeg summed per dst, next = base +
+    * inflow·dampNum div dampDen, dangling mass dropped. All operands
+    * are positive longs, so Spark's `div` and JVM `/` truncate
+    * identically. */
+  private def pageRankDriver(spark: SparkSession, edgeRows: Array[Row], nodeType: DataType,
+      iterations: Int, dampNum: Long, dampDen: Long, scale: Long): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val spark = e.sparkSession
-    val nodeType = e.schema("src").dataType
-    val edgeRows = e.collect().map(r => (r.get(0), r.get(1)))
     val outdeg = new java.util.HashMap[Any, Long]()
     val nodes = new java.util.LinkedHashSet[Any]()
-    edgeRows.foreach { case (s, d) =>
-      outdeg.merge(s, 1L, _ + _); nodes.add(s); nodes.add(d)
+    edgeRows.foreach { r =>
+      outdeg.merge(r.get(0), 1L, _ + _); nodes.add(r.get(0)); nodes.add(r.get(1))
     }
     val n = nodes.size.toLong
-    val init = scale / n
+    val init = scale / math.max(n, 1L) // empty graph: no nodes, no division
     val base = init * (dampDen - dampNum) / dampDen
     var rank = new java.util.HashMap[Any, Long]()
     nodes.asScala.foreach(rank.put(_, init))
     for (_ <- 1 to iterations) {
       val inflow = new java.util.HashMap[Any, Long]()
-      edgeRows.foreach { case (s, d) =>
-        inflow.merge(d, rank.get(s) / outdeg.get(s), _ + _)
+      edgeRows.foreach { r =>
+        inflow.merge(r.get(1), rank.get(r.get(0)) / outdeg.get(r.get(0)), _ + _)
       }
       val next = new java.util.HashMap[Any, Long]()
       nodes.asScala.foreach { v =>
@@ -170,12 +120,8 @@ object GraphRank {
       }
       rank = next
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.LongType)))
-    val rows = nodes.asScala.toSeq
-      .map(v => org.apache.spark.sql.Row(v, rank.get(v)))
+    val schema = StructType(Seq(StructField("node", nodeType), StructField("rank", LongType)))
+    val rows = nodes.asScala.toSeq.map(v => Row(v, rank.get(v)))
     spark.createDataFrame(rows.asJava, schema)
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** k-core decomposition — the standard graph-density peel used for
   * community cores, spam/bot subgraph isolation, and robust-hub
@@ -17,65 +18,24 @@ import org.apache.spark.sql.functions._
   *    check), the same metadata-sized action PageRank's loop takes;
   *  - rounds per k are bounded by the peel depth (typically ≤ 10 on
   *    power-law graphs — each round removes a whole degree layer);
-  *  - `coreness` sweeps k upward reusing the (k−1)-core's edge set
-  *    (the (k)-core is a subgraph of the (k−1)-core), so total work
-  *    is one peel pass over a SHRINKING graph, bounded by the
-  *    degeneracy — small on real graphs.
+  *  - `coreness` runs the h-index fixpoint instead of sweeping k, in a
+  *    handful of global rounds.
   *
   * LINEAGE: each round's plan references the previous round THREE
   * times (e ⋈ keep(e) ⋈ keep(e)), so carrying raw DataFrames grows
   * the logical plan 3^rounds — an 8 GiB driver OOM'd at round ~6 on
-  * a 12-edge test graph. Unlike GraphRank's loop (one self-reference
-  * per round → linear growth), peeling NEEDS a lineage cut: every
-  * round re-roots the frontier on its materialized cache via a bare
-  * LogicalRDD view (`cut`), so plans stay O(round) and recovery of a
-  * lost cache block walks the linear RDD chain instead of the
-  * exponential logical plan.
+  * a 12-edge test graph. Both loops therefore run with the round
+  * loop's lineage cut ([[Fixpoint.Rounds.iterate]] `cut = true`).
   */
 object KCore {
-  import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-  /** Bare-plan view of a (persisted, materialized) frame: the new
-    * DataFrame's logical plan is a LogicalRDD leaf — downstream
-    * rounds can't inline the producing plan. */
-  private def cut(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.rdd, df.schema)
-
-  /** Undirected simple edge set (symmetrized, self-loops dropped). */
+  /** Undirected simple edge set (symmetrized, self-loops and NULL
+    * endpoints dropped). */
   private def undirected(edges: DataFrame, a: String, b: String): DataFrame = {
-    val e = edges.select(col(a).as("u"), col(b).as("v"))
+    val e = Fixpoint.edgeList(edges, a, b, "u", "v")
     e.union(e.select(col("v").as("u"), col("u").as("v")))
       .filter(col("u") =!= col("v"))
       .distinct()
-  }
-
-  /** One peel pass: shrink `e` to its k-core. Returns the (cached
-    * frame, its lineage-cut view, surviving node count). The caller
-    * owns unpersisting the returned cache. */
-  private def peel(e0: DataFrame, cached0: DataFrame, n0: Long, k: Int,
-      maxRounds: Int): (DataFrame, DataFrame, Long) = {
-    var e = e0
-    var cached = cached0
-    var n = n0
-    var stable = false
-    var rounds = 0
-    while (!stable && n > 0 && rounds < maxRounds) {
-      val keep = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("u"))
-      val nextCached = e.join(keep, Seq("u"), "left_semi")
-        .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .persist(MEMORY_AND_DISK)
-      val next = cut(nextCached)
-      val nNext = next.select(col("u")).distinct().count()
-      cached.unpersist(blocking = false)
-      cached = nextCached
-      e = next
-      stable = nNext == n
-      n = nNext
-      rounds += 1
-    }
-    (e, cached, n)
   }
 
   /** Nodes of the k-core: the maximal subgraph where every node has
@@ -83,38 +43,32 @@ object KCore {
   def kCore(edges: DataFrame, a: String, b: String, k: Int,
       maxRounds: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val cached0 = undirected(edges, a, b).persist(MEMORY_AND_DISK)
-    val e0 = cut(cached0)
-    val n0 = e0.select(col("u")).distinct().count()
-    val (e, cached, _) = peel(e0, cached0, n0, k, maxRounds)
-    val res = e.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg_in_core"))
-      .filter(col("deg_in_core") >= k)
-    // stage the (small) core membership and hand back the read-back
-    // plan, releasing every loop cache — zero persist residue, and
-    // downstream consumption never replays the peel rounds (the
-    // dupClusters staging discipline)
-    val spark = res.sparkSession
-    val stage = graft.sources.Scratch.newDir(spark, "kcore") + "/core"
-    res.write.mode("overwrite").parquet(stage)
-    cached.unpersist(blocking = false)
-    spark.read.parquet(stage)
+    Fixpoint.rounds(edges.sparkSession, "kcore") { r =>
+      // one peel pass per round; stop once a round removes no node
+      r.iterate(undirected(edges, a, b), maxRounds, cut = true)(
+          _.select(col("u")).distinct().count())((n, next) => next == n || next == 0) { e =>
+        val keep = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select(col("u"))
+        e.join(keep, Seq("u"), "left_semi")
+          .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
+          .select(col("u"), col("v"))
+      }.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg_in_core"))
+        .filter(col("deg_in_core") >= k)
+    }
   }
 
-  /** Bounded driver h-index fixpoint — the small-graph fast path of
-    * [[coreness]]. Runs the IDENTICAL recurrence (c₀ = degree,
-    * c ← min(c, H(neighbor cs)), stop at no-change or maxRounds) in
-    * local integer arithmetic, so the result is bit-equal to the
-    * distributed iterate (GraphRankSpec pins both paths to the same
-    * hand-peeled truth). `e` must be the symmetrized simple edge set. */
-  private def corenessDriver(e: DataFrame, maxRounds: Int): DataFrame = {
+  /** Driver step of [[coreness]]: the IDENTICAL recurrence (c₀ =
+    * degree, c ← min(c, H(neighbor cs)), stop at no-change or
+    * maxRounds) in local integer arithmetic over the collected
+    * symmetrized simple edge rows. */
+  private def corenessDriver(spark: SparkSession, edgeRows: Array[Row], nodeType: DataType,
+      maxRounds: Int): DataFrame = {
     import scala.collection.mutable
-    val spark = e.sparkSession
-    val nodeType = e.schema("u").dataType
+    import scala.jdk.CollectionConverters._
     val adj = new java.util.HashMap[Any, mutable.ArrayBuffer[Any]]()
-    e.collect().foreach { r =>
+    edgeRows.foreach { r =>
       adj.computeIfAbsent(r.get(0), _ => mutable.ArrayBuffer.empty) += r.get(1)
     }
-    import scala.jdk.CollectionConverters._
     val c = new java.util.HashMap[Any, Long]()
     adj.forEach((u, ns) => c.put(u, ns.length.toLong))
     var changed = true
@@ -137,12 +91,8 @@ object KCore {
       c.clear(); c.putAll(next)
       rounds += 1
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType),
-      org.apache.spark.sql.types.StructField("coreness",
-        org.apache.spark.sql.types.LongType)))
-    val rows = c.entrySet().asScala.toSeq
-      .map(kv => org.apache.spark.sql.Row(kv.getKey, kv.getValue))
+    val schema = StructType(Seq(StructField("node", nodeType), StructField("coreness", LongType)))
+    val rows = c.entrySet().asScala.toSeq.map(kv => Row(kv.getKey, kv.getValue))
     spark.createDataFrame(rows.asJava, schema)
   }
 
@@ -156,68 +106,33 @@ object KCore {
     * this shape at sf0.1), each round one edge-keyed shuffle + one
     * node-keyed aggregate. Per-node neighbor lists are degree-sized;
     * a 10⁶-degree hub's collect_list is the operator's skew point —
-    * the salting helper applies as with any hot reduce key. */
+    * the salting helper applies as with any hot reduce key. Graphs
+    * within `driverMaxEdges` symmetrized rows run the driver step. */
   def coreness(edges: DataFrame, a: String, b: String,
       maxRounds: Int = 50, driverMaxEdges: Long = 500000L): DataFrame = {
-    val eCached = undirected(edges, a, b).persist(MEMORY_AND_DISK)
-    val e = cut(eCached)
-    // Adaptive path choice (r15, guide §1.2/§2.4 — the dupClusters
-    // driverMaxPairs philosophy applied to the fixpoint loop): the
-    // h-index recurrence is all-integer, so the driver iterate is
-    // BIT-IDENTICAL to the distributed one, and a bounded graph
-    // (≤ driverMaxEdges symmetrized rows ≈ tens of MB for any node
-    // type) converges in microseconds of local arithmetic where the
-    // distributed loop pays ~rounds × (2 shuffles + 1 action) of pure
-    // scheduling latency (measured 8 s of loop overhead on a
-    // 3.4k-edge graph at sf0.1 — the graph data itself was
-    // kilobytes). Web-scale graphs exceed the bound and take the
-    // distributed loop unchanged. The count() gate doubles as the
-    // cache materialization the loop needed anyway. The effective
-    // bound is ceilinged by the session's collect budget (VERDICT
-    // r15 #7, ~32 B/symmetrized edge serialized), so a small-driver
-    // deployment lowers the gate without retuning the constant.
-    val bound = Bounds.driverRowBudget(edges.sparkSession, driverMaxEdges, 32L)
-    if (e.count() <= bound) {
-      val out = corenessDriver(e, maxRounds)
-      eCached.unpersist(blocking = false)
-      return out
+    val und = undirected(edges, a, b)
+    val driver = corenessDriver(edges.sparkSession, _: Array[Row],
+      und.schema("u").dataType, maxRounds)
+    Fixpoint.adaptive(und, driverMaxEdges, "kcore")(driver) { (r, e) =>
+      // state (node, c, chg): chg marks a node whose estimate fell this
+      // round; the round's action sums it and 0 is the fixpoint
+      val est0 = e.groupBy(col("u").as("node")).agg(count(lit(1)).as("c"))
+        .withColumn("chg", lit(1L))
+      r.iterate(est0, maxRounds, cut = true)(
+          _.agg(sum(col("chg"))).first().getLong(0))((_, changed) => changed == 0) { est =>
+        // H(sorted-desc xs) = #{i : xs[i−1] ≥ i} (predicate monotone ⇒
+        // the count equals the h-index); all-integer fold
+        val neigh = e.join(est.select(col("node").as("v"), col("c").as("cv")), "v")
+          .groupBy(col("u").as("node"))
+          .agg(sort_array(collect_list(col("cv")), asc = false).as("cs"))
+          .select(col("node"), aggregate(
+            zip_with(col("cs"), sequence(lit(1), size(col("cs"))),
+              (v, i) => when(v >= i, 1L).otherwise(0L)),
+            lit(0L), (acc, x) => acc + x).as("h"))
+        val next = least(col("c"), coalesce(col("h"), lit(0L)))
+        est.join(neigh, Seq("node"), "left")
+          .select(col("node"), next.as("c"), (col("c") > next).cast("long").as("chg"))
+      }.select(col("node"), col("c").as("coreness"))
     }
-    var estCached = e.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("c")).persist(MEMORY_AND_DISK)
-    estCached.count()
-    var est = cut(estCached)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      // H(sorted-desc xs) = #{i : xs[i−1] ≥ i} (predicate monotone ⇒
-      // the count equals the h-index); all-integer fold
-      val neigh = e.join(est.select(col("node").as("v"), col("c").as("cv")), "v")
-        .groupBy(col("u").as("node"))
-        .agg(sort_array(collect_list(col("cv")), asc = false).as("cs"))
-        .select(col("node"), aggregate(
-          zip_with(col("cs"), sequence(lit(1), size(col("cs"))),
-            (v, i) => when(v >= i, 1L).otherwise(0L)),
-          lit(0L), (acc, x) => acc + x).as("h"))
-      val nextCached = est.join(neigh, Seq("node"), "left")
-        .select(col("node"),
-          least(col("c"), coalesce(col("h"), lit(0L))).as("c"),
-          (col("c") > least(col("c"), coalesce(col("h"), lit(0L))))
-            .cast("long").as("chg"))
-        .persist(MEMORY_AND_DISK)
-      changed = nextCached.agg(sum(col("chg"))).collect()(0).getLong(0)
-      estCached.unpersist(blocking = false)
-      estCached = nextCached
-      est = cut(nextCached.select(col("node"), col("c")))
-      rounds += 1
-    }
-    // stage + release (see kCore): the coreness table is |V| rows of
-    // (node, small int) — metadata-sized next to the edge set
-    val spark = est.sparkSession
-    val stage = graft.sources.Scratch.newDir(spark, "kcore") + "/coreness"
-    est.select(col("node"), col("c").as("coreness"))
-      .write.mode("overwrite").parquet(stage)
-    estCached.unpersist(blocking = false)
-    eCached.unpersist(blocking = false)
-    spark.read.parquet(stage)
   }
 }

@@ -28,6 +28,11 @@ import org.apache.spark.storage.StorageLevel
   *    max_recursive_iterations, default 1000) — we fail rather than
   *    loop forever on cyclic input, because UNION ALL recursion over a
   *    cycle never reaches a fixpoint.
+  *
+  * Not on [[Fixpoint]]'s round loop: that loop returns (and stages)
+  * the converged state, while a recursive query's result is the union
+  * of EVERY round's frontier, and `iterateDistinct` must keep every
+  * round's cache alive for its growing `seen` side.
   */
 object Recursion {
 
@@ -63,9 +68,10 @@ object Recursion {
     * (reachability closure). Each round anti-joins the (small) frontier
     * against the accumulated result — the per-round dedup cost any
     * engine pays for UNION recursion. Rows compare on all columns.
-    * Every round's frontier stays persisted until the result is
-    * consumed (each feeds the growing `seen` side), so peak cache is
-    * O(|result|) — the closure itself.
+    * Every round's frontier stays persisted by design — each feeds the
+    * growing `seen` side and the returned union reads them — so the
+    * round caches outlive the call and peak cache is O(|result|), the
+    * closure itself.
     */
   def iterateDistinct(base: DataFrame, step: DataFrame => DataFrame,
                       maxIter: Int = 1000): DataFrame = {

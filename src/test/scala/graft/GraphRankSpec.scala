@@ -118,6 +118,22 @@ class GraphRankSpec extends SparkSpec {
     assert(viaDriver == Map("a" -> scale / 2, "b" -> scale / 2))
   }
 
+  test("an INT src and a BIGINT dst past the Int range rank as BIGINT on both paths") {
+    // dst = 2³²+1 used to be cast to src's INT: a cast overflow under
+    // ANSI, a wrapped id without it. Both endpoints now widen to BIGINT.
+    val big = (1L << 32) + 1
+    val e = Seq((1, big), (2, big), (1, 2L)).toDF("src", "dst")
+    val init = scale / 3
+    val base = init * 15 / 100
+    val want = Map(1L -> base, 2L -> (base + (init / 2) * 85 / 100),
+      big -> (base + (init / 2 + init) * 85 / 100))
+    for (bound <- Seq(2000000L, 0L)) {
+      val r = GraphRank.pageRank(e, "src", "dst", iterations = 1, driverMaxEdges = bound)
+      assert(r.schema("node").dataType == org.apache.spark.sql.types.LongType)
+      assert(r.as[(Long, Long)].collect().toMap == want, s"driverMaxEdges $bound")
+    }
+  }
+
   test("k-core(2) drops the chain tail but keeps triangle + clique") {
     val got = graft.operators.KCore.kCore(coreGraph, "u", "v", k = 2)
       .select(col("node")).as[String].collect().toSet

@@ -26,6 +26,22 @@ class PipelineSpec extends SparkSpec {
     assert(gotDist == want)
   }
 
+  test("dupClusters drops pairs with a NULL id on both paths") {
+    // the driver union-find used to throw on a NULL id while the
+    // distributed loop emitted a NULL-_id row
+    val pairs = Seq((Option(1L), Option(2L)), (Option(2L), None: Option[Long]),
+      (None: Option[Long], Option(5L)), (Option(7L), Option(3L)))
+      .toDF("id_a", "id_b")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 7L -> 3L)
+    for (bound <- Seq(1000000L, 0L)) {
+      val got = Dedup.dupClusters(pairs, driverMaxPairs = bound)
+        .as[(Option[Long], Option[Long])].collect()
+      assert(got.forall(r => r._1.isDefined && r._2.isDefined), s"driverMaxPairs $bound")
+      assert(got.length == want.size, s"driverMaxPairs $bound")
+      assert(got.map(r => r._1.get -> r._2.get).toMap == want, s"driverMaxPairs $bound")
+    }
+  }
+
   test("dupClusters stages labels under the configured shared scratch root") {
     // On a real cluster executors cannot see the driver's local temp
     // dir, so the stage dir must come from spark.graft.scratchRoot
