@@ -52,6 +52,18 @@ object Bench {
         run("git", "status", "--porcelain").nonEmpty)
     } catch { case _: Throwable => ("unknown", false) }
 
+  /** The compact line's run summary: (artifact, queries_n, sum_log_s).
+    * `artifact` names the file this run wrote its full line to — the
+    * per-config file on a full run, the SPARK_GRAFT_BENCH_OUT target
+    * on a filtered one, which never writes the per-config file.
+    * `queries_n` and `sum_log_s` cover the same queries, those with a
+    * positive time, so exp(sum_log_s / queries_n) is their geomean. */
+  private[graft] def compactSummary(times: Seq[Double], out: String, perConfig: String,
+      filtered: Boolean): (String, Int, Double) = {
+    val timed = times.filter(_ > 0)
+    (if (filtered) out else perConfig, timed.size, timed.map(math.log).sum)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -376,8 +388,9 @@ object Bench {
     // it (exp(sum_log_s / queries_n)); per-query data lives at
     // "artifact". The full contract line (with the complete "queries"
     // map) is unchanged and still printed first.
-    val sumLog = results.collect { case (_, v) if v > 0 => math.log(v) }.sum
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries_n":${results.size},"sum_log_s":$sumLog,"calib":$calib,"calib_end":$calibEnd,"cpus":$cpus,"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"artifact":${jstr(perConfig)}$advisory,"sf":"$sfDir"}"""
+    val (artifact, queriesN, sumLog) =
+      compactSummary(results.map(_._2), out, perConfig, only.nonEmpty)
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries_n":$queriesN,"sum_log_s":$sumLog,"calib":$calib,"calib_end":$calibEnd,"cpus":$cpus,"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"artifact":${jstr(artifact)}$advisory,"sf":"$sfDir"}"""
     println(compact)
     spark.stop()
   }

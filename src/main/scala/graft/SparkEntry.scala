@@ -29,7 +29,7 @@ object SparkEntry {
     SketchQueries.queries, PipelineQueries.queries, HygieneQueries.queries,
     RetrievalQueries.queries, ClusterQueries.queries, EventQueries.queries,
     RecursiveQueries.queries, RelExtraQueries.queries, ResampleQueries.queries,
-    TypeMatrixQueries.queries, GraphQueries.queries, FuzzyQueries.queries,
+    GraphQueries.queries, FuzzyQueries.queries,
     CatalogQueries.queries, ExtractionQueries.queries, DmlQueries.queries,
     SsbQueries.queries, JsonEdgeQueries.queries, EmbeddingQueries.queries,
     MmPhashQueries.queries, PartsuppQueries.queries,
@@ -43,7 +43,7 @@ object SparkEntry {
     SketchQueries.oracle, PipelineQueries.oracle, HygieneQueries.oracle,
     RetrievalQueries.oracle, ClusterQueries.oracle, EventQueries.oracle,
     RecursiveQueries.oracle, RelExtraQueries.oracle, ResampleQueries.oracle,
-    TypeMatrixQueries.oracle, GraphQueries.oracle, FuzzyQueries.oracle,
+    GraphQueries.oracle, FuzzyQueries.oracle,
     CatalogQueries.oracle, ExtractionQueries.oracle, DmlQueries.oracle,
     SsbQueries.oracle, JsonEdgeQueries.oracle, EmbeddingQueries.oracle,
     MmPhashQueries.oracle, PartsuppQueries.oracle,

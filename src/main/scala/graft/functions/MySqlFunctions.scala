@@ -351,7 +351,7 @@ object MySqlFunctions {
     * ('0000-00-00') and out-of-calendar dates map to NULL here rather
     * than throwing the ANSI parse error, the engine's documented
     * stand-in for the reference's zero-date sentinel
-    * (`dataconvert.cpp`; divergence table in TypeMatrixQueries). */
+    * (`dataconvert.cpp`; divergence table in docs/COMPAT.md). */
   def strToDate(s: Column, mysqlPattern: String): Column =
     try_to_timestamp(s, lit(translateDatePattern(mysqlPattern)))
 

@@ -13,33 +13,6 @@ object MiscQueries2 {
   import Q._
 
   val queries: Map[String, QFn] = Map(
-    // ---- collation-aware compare/group/order (ref
-    // utils/common/collation.h; TypeMapper maps COLLATE *_ci DDL to
-    // the same collated type). seg_mixed alternates case per row, so
-    // every collated operation must merge variants: the UTF8_LCASE
-    // groupBy folds them into 5 groups, the collated '=' matches both
-    // 'BUILDING' and 'building', and dense_rank orders by collated
-    // key. Outputs are case-deterministic (min() binary
-    // representative, counts, ranks) — never the collated group key
-    // itself, whose surviving case variant is first-come. Window runs
-    // over the 5 GROUPS (post-agg), so the global sort is trivially
-    // small at any corpus scale. ----
-    // Prepared-statement analog (MariaDB PREPARE/EXECUTE and
-    // EXECUTE IMMEDIATE ... USING — the reference runs these through
-    // the MariaDB front end): Spark's parameterized SQL binds NAMED
-    // and POSITIONAL markers server-side, exactly the injection-safe
-    // bind-variable contract. The oracle is the same statement with
-    // the literals inlined — a hash match proves binding changes
-    // nothing about semantics.
-    "q_param_query" -> ((s, dir) => {
-      graft.Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT o_orderpriority, count(*) AS n,
-          |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-          |FROM orders WHERE o_totalprice < :cap AND o_orderstatus = :st
-          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-        Map("cap" -> 150000.0, "st" -> "F"))
-    }),
     // Session-variable analog (MySQL @vars / funcexp's user-variable
     // surface): DECLARE + SET VARIABLE then reference in a query —
     // Spark 4 session variables give the same statement-to-statement
@@ -342,11 +315,6 @@ object MiscQueries2 {
   )
 
   val oracle: Map[String, String] = Map(
-    "q_param_query" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders WHERE o_totalprice < 150000.0 AND o_orderstatus = 'F'
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
     "q_session_vars" ->
       """SELECT o_orderpriority, count(*) AS n
         |FROM orders

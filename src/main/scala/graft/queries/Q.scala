@@ -139,6 +139,10 @@ object Q {
   def oDec(c: String): String = s"CAST($c AS DECIMAL(18,2))"
   def oSumDec(c: String): String = s"CAST(SUM(${oDec(c)}) AS DOUBLE)"
   def oAvgDec(c: String): String = s"CAST(SUM(${oDec(c)}) AS DOUBLE)/COUNT(*)"
+  /** Twin of `MySqlFunctions.castSigned`: the leading integer prefix
+    * of a string, 0 when it has none. */
+  def oCastSigned(e: String): String =
+    raw"COALESCE(NULLIF(regexp_extract($e, '^\s*[+-]?[0-9]+', 0), '')::BIGINT, 0)"
 
   /** Total output order over EVERY projected column, nulls first —
     * the driver-contract determinism discipline (its row hash is

@@ -1,0 +1,25 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The compact final line of `graft.Bench` is what a fixed-size stdout
+  * tail keeps, so it must name a file that exists and give a geomean
+  * over one consistent query set. */
+class BenchSpec extends AnyFunSuite {
+
+  test("the compact line names the file the run wrote") {
+    val filtered = Bench.compactSummary(Seq(1.0), "/x/out.json", "BENCH_local_c8.json",
+      filtered = true)
+    assert(filtered._1 == "/x/out.json")
+    val full = Bench.compactSummary(Seq(1.0), "BENCH_local.json", "BENCH_local_c8.json",
+      filtered = false)
+    assert(full._1 == "BENCH_local_c8.json")
+  }
+
+  test("queries_n counts exactly the queries sum_log_s sums") {
+    val (_, n, sumLog) = Bench.compactSummary(Seq(2.0, 0.0, 8.0, -1.0), "o", "p",
+      filtered = false)
+    assert(n == 2)
+    assert(math.abs(math.exp(sumLog / n) - 4.0) < 1e-12)
+  }
+}

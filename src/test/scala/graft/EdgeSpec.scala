@@ -121,7 +121,7 @@ class EdgeSpec extends SparkSpec {
     // MySQL/the reference STORE the zero date '0000-00-00'
     // (dataconvert.cpp treats it as a sentinel); this engine is ANSI
     // Spark: STR_TO_DATE yields NULL for it — same for any
-    // out-of-calendar date. Documented in TypeMatrixQueries.
+    // out-of-calendar date. Documented in docs/COMPAT.md.
     import graft.functions.MySqlFunctions
     val d = Seq("0000-00-00", "2024-02-30", "2024-02-29").toDF("s")
       .select(col("s"), MySqlFunctions.strToDate(col("s"), "%Y-%m-%d").as("ts"))
