@@ -12,6 +12,7 @@ import sys, json, glob, os
 import duckdb
 import pyarrow.parquet as pq
 import pyarrow as pa
+import pyarrow.compute as pc
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 
@@ -23,9 +24,33 @@ for f in glob.glob(os.path.join(sfdir, "*.parquet")):
 oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
 
 def canon(tbl: pa.Table):
+    """Columns sorted by name; rows as tuples, sorted by their cells'
+    (is None, str(v)) keys. The keys are built column by column and
+    sorted in Arrow: a string column is its own key and an integer
+    column's decimal text equals str(); other types use Python str().
+    UTF-8 byte order is code point order, so Arrow's stable sort with
+    nulls last gives the same order as sorting the Python key tuples."""
     cols = sorted(tbl.column_names)
-    rows = [tuple(r[c] for c in cols) for r in tbl.to_pylist()]
-    rows.sort(key=lambda t: tuple((v is None, str(v)) for v in t))
+    vals, keys = [], []
+    for c in cols:
+        col = tbl.column(c)
+        vals.append(col.to_pylist())
+        if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+            keys.append(col)
+        elif pa.types.is_integer(col.type):
+            keys.append(pc.cast(col, pa.string()))
+        else:
+            keys.append(pa.array([None if v is None else str(v) for v in vals[-1]],
+                                 pa.string()))
+    if cols:
+        names = [f"k{i}" for i in range(len(cols))]
+        order = pc.sort_indices(pa.table(keys, names=names),
+                                sort_keys=[(k, "ascending") for k in names],
+                                null_placement="at_end").to_pylist()
+        rows = list(zip(*vals))
+        rows = [rows[i] for i in order]
+    else:
+        rows = [()] * tbl.num_rows
     types = {c: str(tbl.schema.field(c).type) for c in cols}
     return cols, types, rows
 

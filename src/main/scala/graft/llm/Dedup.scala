@@ -303,8 +303,7 @@ object Dedup {
         .join(dfTable.hint("shuffle_hash"), Seq("_ng"), "left")
         .withColumn("_dfo", coalesce(col("_df"), lit(0L)))
         .withColumn("_r", row_number().over(w))
-        .filter(col("_r") <=
-          col("_szN") - ceil(lit(threshold) * col("_szN") - lit(1e-9)) + 1)
+        .filter(col("_r") <= prefixLength(col("_szN"), threshold))
         .select(col("_idN"), col("_szN"), col("_ng"))
     }
     val cand = newPrefix.join(corpusRows, Seq("_ng"))
@@ -396,10 +395,10 @@ object Dedup {
     * Docs shorter than n tokens contribute one whole-text shingle;
     * NULL text explodes to no rows (a NULL shingle never equi-joins,
     * so consumers are output-identical — LlmSpec proves set equality
-    * with the window formulation). `distinctRows` is kept for API
-    * compatibility: the kernel's set is always distinct. */
+    * with the window formulation). The kernel's set is always
+    * distinct. */
   def shingleRows(docs: DataFrame, id: String = "doc_id", text: String = "text",
-      n: Int = 3, distinctRows: Boolean = true): DataFrame =
+      n: Int = 3): DataFrame =
     docs.select(col(id).as("_id"),
       explode(call_function("shingle_set", col(text), lit(n))).as("_ng"))
 
@@ -436,7 +435,7 @@ object Dedup {
       docs: DataFrame, id: String, text: String,
       numHashes: Int, shingleN: Int): DataFrame = {
     val sigCols = (0 until numHashes).map(i => min(hash(col("_ng"), lit(i))).as(s"_m$i"))
-    shingleRows(docs, id, text, shingleN, distinctRows = false)
+    shingleRows(docs, id, text, shingleN)
       .groupBy(col("_id")).agg(sigCols.head, sigCols.tail: _*)
   }
 
@@ -462,13 +461,6 @@ object Dedup {
       .getOrElse(throw new IllegalArgumentException(
         s"no $numHashes-hash banding reaches miss ≤ $maxMiss at j = $threshold; " +
           "use the exact jaccardDupPairs join for thresholds below LSH's range"))
-
-  /** LSH band bucket columns over a signature row: bucket b hashes
-    * (b, _m{bR}.._m{bR+R-1}) — all static children, evaluated once. */
-  def lshBucketCols(bands: Int, rowsPerBand: Int): Seq[Column] =
-    (0 until bands).map { b =>
-      hash(lit(b) +: (0 until rowsPerBand).map(r => col(s"_m${b * rowsPerBand + r}")): _*)
-    }
 
   /** Exploded (id, band-bucket) rows of the minhash64 signature — the
     * LSH candidate key, shared by the batch self-join dedup and the
@@ -520,40 +512,102 @@ object Dedup {
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
     require(threshold > 0, "threshold must be positive (zero-overlap pairs are never emitted)")
     require(numHashes == 64, "the minhash64 kernel signature is fixed at 64 hashes")
-
-    // EXACT-TWIN COLLAPSE (round 12): identical texts share the
-    // signature, every band bucket, and the shingle set — running k
-    // copies through LSH used to emit O(k²·bands) collision rows for
-    // pairs that are *definitionally* duplicates. Classes are keyed by
-    // md5(text); LSH + verify run over one representative per class,
-    // and twin-class pairs are emitted directly (each exactly once, no
-    // banding, no distinct). NULL texts never verified into a pair
-    // before (NULL shingle set → NULL jaccard → dropped); they are
-    // excluded up front so a NULL-heavy corpus cannot form a
-    // degenerate class. Reference analog: the dictionary scan dedups
-    // tokens before its join (`dbcon/joblist/pdictionaryscan.cpp`).
-    //
-    // ADAPTIVE: one cheap probe job (any md5 class with ≥ 2 members?)
-    // picks the plan. A clone-free corpus — the common case after an
-    // upstream exact-dedup pass — takes the direct pipeline with zero
-    // collapse overhead (measured: the collapse machinery alone cost
-    // ~1.3 s at sf0.1 for nothing); a cloned corpus pays one narrow
-    // groupBy and gets the O(classes) LSH instead of O(docs).
-    val (base, reps, hasTwins) = textClasses(docs, id, text)
-    if (!hasTwins)
-      minhashPairsOver(base.select(col("_id"), col("_t")), bands, shingleN,
-        threshold, repartitionBuckets = false)
-    else {
-      val repPairs = minhashPairsOver(reps.select(col("_id"), col("_t")),
-        bands, shingleN, threshold, repartitionBuckets = true)
-      twinClassPairs(base, threshold)
-        .unionByName(expandTextClassPairs(repPairs, reps, base))
-    }
+    setSimilarityJoin(docs, id, text, shingleN, Jaccard, threshold)(
+      minhashCandidates(_, bands, shingleN, _))
   }
 
-  /** (base, reps, hasTwins) of the md5(text) exact-twin collapse,
-    * shared by [[minhashDupPairs]] and [[jaccardDupPairs]]: `base` is
-    * the NULL-text-free (_id, _t, _ck) frame; `reps` is one
+  /** LSH candidate pairs (id_a < id_b) of [[minhashDupPairs]] over an
+    * (_id, _t) frame: every pair that shares a band bucket.
+    *
+    * Signatures: the native one-pass minhash64 kernel — no shingle
+    * explode, no shuffle, no 64-min aggregate; bit-identical to
+    * minhashSignatures (LlmSpec proves it). No explicit caching or
+    * lineage truncation anywhere in this pipeline: consumers that
+    * share a subtree share its work through Spark's exchange reuse —
+    * an earlier localCheckpoint here leaked BlockManager storage
+    * across the whole bench suite.
+    *
+    * `collapsed` (one representative per twin class) adds an explicit
+    * exchange on the bucket: there the input is a small materialized
+    * aggregate whose post-explode size AQE cannot see — without the
+    * explicit exchange the bucket self-join degenerates to a one-task
+    * broadcast join at scale. Straight off a scan the join's own
+    * exchange sees the real exploded volume and parallelizes
+    * correctly. */
+  private def minhashCandidates(docs: DataFrame, bands: Int, shingleN: Int,
+      collapsed: Boolean): DataFrame = {
+    val b0 = minhashBandBuckets(docs, "_id", "_t", bands, shingleN)
+    val bucketed = if (collapsed) b0.repartition(col("_bucket")) else b0
+    bucketed.as("a")
+      .join(bucketed.as("b"),
+        col("a._bucket") === col("b._bucket") && col("a._id") < col("b._id"))
+      .select(col("a._id").as("id_a"), col("b._id").as("id_b"))
+      .distinct() // a pair can collide in several bands
+  }
+
+  /** The similarity a text pair join verifies: its output column,
+    * whether its pairs are directed, and its quotient over the
+    * intersection size `_inter` = |A∩B| and the set sizes `_na` = |A|
+    * and `_nb` = |B|. */
+  private sealed abstract class Measure(val name: String, val directed: Boolean) {
+    def value: Column
+  }
+
+  /** |A∩B| / |A∪B|; undirected, so each pair once with id_a < id_b. */
+  private case object Jaccard extends Measure("jaccard", directed = false) {
+    def value: Column = col("_inter") / (col("_na") + col("_nb") - col("_inter"))
+  }
+
+  /** |A∩B| / |A|; DIRECTED — (a, b) and (b, a) are two pairs, and
+    * id order must never be canonicalized (least/greatest would
+    * corrupt the value). */
+  private case object Containment extends Measure("containment", directed = true) {
+    def value: Column = col("_inter").cast(DoubleType) / col("_na")
+  }
+
+  /** The set-similarity join of [[minhashDupPairs]],
+    * [[jaccardDupPairs]] and [[containmentDupPairs]]: exact-twin
+    * collapse → the operator's `candidates` (id_a, id_b) over an
+    * (_id, _t) frame and whether that frame is `collapsed` → one
+    * exact [[verify]] under `m`.
+    *
+    * EXACT-TWIN COLLAPSE (round 12): identical texts share the
+    * signature, every band bucket, every prefix shingle and the
+    * shingle set, so a class of k copies is a clique of value-1.0
+    * pairs (k·(k−1) directed ones for containment) that candidate
+    * generation would rediscover through every shared key. Classes
+    * are keyed by md5(text) ([[textClasses]]); candidates and verify
+    * run over one representative per class, twin-class pairs are
+    * emitted directly (each exactly once, no banding, no distinct),
+    * and qualifying representative pairs expand to member pairs —
+    * cross-class similarity is a pure function of the two contents.
+    * NULL texts never verify into a pair (NULL shingle set); both
+    * branches drop them up front, so a NULL-heavy corpus cannot form a
+    * degenerate class. Reference analog: the dictionary scan dedups
+    * tokens before its join (`dbcon/joblist/pdictionaryscan.cpp`).
+    *
+    * ADAPTIVE: one cheap probe job (any md5 class with ≥ 2 members?)
+    * picks the plan. A clone-free corpus — the common case after an
+    * upstream exact-dedup pass — runs `candidates` straight over the
+    * NULL-free docs (measured: the collapse machinery alone cost
+    * ~1.3 s at sf0.1 for nothing); a cloned corpus pays one narrow
+    * groupBy and gets O(classes) candidate work instead of O(docs).
+    * Not for AnnSearch (class value is a computed self-cosine, not 1.0) or bandedHashPairs (hamming). */
+  private def setSimilarityJoin(docs: DataFrame, id: String, text: String, shingleN: Int,
+      m: Measure, threshold: Double)(candidates: (DataFrame, Boolean) => DataFrame)
+      : DataFrame = {
+    val (base, reps, hasTwins) = textClasses(docs, id, text)
+    def pairs(frame: DataFrame, collapsed: Boolean) = {
+      val d = frame.select(col("_id"), col("_t"))
+      verify(candidates(d, collapsed), d, shingleN, m, threshold)
+    }
+    if (!hasTwins) pairs(base, collapsed = false)
+    else twinClassPairs(base, m, threshold)
+      .unionByName(expandTextClassPairs(pairs(reps, collapsed = true), reps, base, m))
+  }
+
+  /** (base, reps, hasTwins) of the md5(text) exact-twin collapse:
+    * `base` is the NULL-text-free (_id, _t, _ck) frame; `reps` is one
     * representative (min id) per distinct content — or `base` itself
     * when the probe finds no class with ≥ 2 members (collapse would be
     * pure overhead). */
@@ -570,50 +624,39 @@ object Dedup {
     (base, reps, hasTwins)
   }
 
-  /** Twin-class member pairs, shared by the jaccard/minhash
-    * (undirected, `a < b`) and containment (DIRECTED, `a ≠ b`)
-    * collapses. The pair's verify quotient — jaccard
-    * |S|/(|S|+|S|−|S|), containment |S|/|S| over the class's shingle
-    * set S — is emitted as the LITERAL 1.0 (r15, guide §2.4): the
-    * shingle kernel returns ≥ 1 element for every non-NULL text
-    * (n-gram path emits ≥ 1 gram, the short-text fallback emits the
-    * whole text — `TextKernels.shingleSet`), `base` is NULL-filtered
-    * by [[textClasses]], and x/x = 1.0 exactly in IEEE for any
-    * nonzero finite x — so the former per-class
-    * `size(shingle_set(_t))` computation and its `_ck` join were a
-    * full corpus-representative kernel pass plus two exchanges spent
-    * computing a constant (plan diff in plans/r15: one Scan + one
-    * HashAggregate + one join removed from every collapsed-path
-    * query). The threshold filter stays (constant-folded) so a
-    * pathological threshold > 1 still yields no twin pairs.
-    * Signature is (base, threshold) only — ADVICE r15: the former
-    * `reps`/`shingleN` parameters were dead after the literal-1.0
-    * collapse; dropping them makes the no-kernel-runs-here property
-    * visible at every call site. */
-  private def twinClassPairs(base: DataFrame,
-      threshold: Double, valueName: String = "jaccard",
-      directed: Boolean = false): DataFrame = {
+  /** Twin-class member pairs (`a < b`, or `a ≠ b` when `m` is
+    * directed). The pair's verify quotient — jaccard |S|/(|S|+|S|−|S|),
+    * containment |S|/|S| over the class's shingle set S — is emitted
+    * as the LITERAL 1.0 (r15, guide §2.4): the shingle kernel returns
+    * ≥ 1 element for every non-NULL text (n-gram path emits ≥ 1 gram,
+    * the short-text fallback emits the whole text —
+    * `TextKernels.shingleSet`), `base` is NULL-filtered by
+    * [[textClasses]], and x/x = 1.0 exactly in IEEE for any nonzero
+    * finite x — so no kernel pass or join is spent computing a
+    * constant (plan diff in plans/r15). The threshold filter stays
+    * (constant-folded) so a pathological threshold > 1 still yields
+    * no twin pairs. */
+  private def twinClassPairs(base: DataFrame, m: Measure, threshold: Double): DataFrame = {
     val members = base.select(col("_ck"), col("_id"))
     val pairPred =
-      if (directed) col("a._id") =!= col("b._id")
+      if (m.directed) col("a._id") =!= col("b._id")
       else col("a._id") < col("b._id")
     members.as("a").join(members.as("b"),
         col("a._ck") === col("b._ck") && pairPred)
       .select(col("a._id").as("id_a"), col("b._id").as("id_b"),
-        lit(1.0).as(valueName))
-      .filter(col(valueName) >= threshold)
+        lit(1.0).as(m.name))
+      .filter(col(m.name) >= threshold)
   }
 
   /** Expand qualifying class-representative pairs to member pairs:
     * classes are disjoint, so each member pair appears exactly once,
     * with the similarity computed ONCE per class pair (identical
     * texts ⇒ the member-pair value is the same double by
-    * construction). Undirected callers restore id order with
-    * least/greatest; the directed (containment) caller keeps the
-    * (id_a → id_b) orientation — that direction IS the semantics. */
+    * construction). Undirected measures restore id order with
+    * least/greatest; a directed one keeps the (id_a → id_b)
+    * orientation — that direction IS the semantics. */
   private def expandTextClassPairs(repPairs: DataFrame, reps: DataFrame,
-      base: DataFrame, valueName: String = "jaccard",
-      directed: Boolean = false): DataFrame = {
+      base: DataFrame, m: Measure): DataFrame = {
     // ONE rep→member map instead of the former four distinct build
     // frames (rep→class ×2, class→member ×2 — r15, guide §2.4/§3.1):
     // `classMap` joins members to their class representative once;
@@ -623,80 +666,55 @@ object Dedup {
     // (plan diff in plans/r15: 4 BroadcastExchanges → 1 + reuse on
     // the expansion subtree; one fewer corpus-scan subtree, since the
     // rep-key frames re-derived `reps` — a groupBy over the full base
-    // — twice). Classes are disjoint, so each member pair still
-    // appears exactly once.
+    // — twice).
     val members = base.select(col("_ck"), col("_id"))
     val repKey = reps.select(col("_id").as("_rid"), col("_ck"))
     val classMap = members.join(repKey, "_ck")
       .select(col("_rid"), col("_id").as("_mid"))
-    val nBase = buildProbe(base)
+    val build = buildSide(base)
     val expanded = repPairs
-      .join(boundedBuild(classMap.select(col("_rid").as("id_a"),
-        col("_mid").as("_ia")), nBase), "id_a")
-      .join(boundedBuild(classMap.select(col("_rid").as("id_b"),
-        col("_mid").as("_ib")), nBase), "id_b")
-    if (directed)
-      expanded.select(col("_ia").as("id_a"), col("_ib").as("id_b"),
-        col(valueName))
+      .join(build(classMap.select(col("_rid").as("id_a"), col("_mid").as("_ia"))), "id_a")
+      .join(build(classMap.select(col("_rid").as("id_b"), col("_mid").as("_ib"))), "id_b")
+    if (m.directed)
+      expanded.select(col("_ia").as("id_a"), col("_ib").as("id_b"), col(m.name))
     else
       expanded.select(least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"), col(valueName))
+        greatest(col("_ia"), col("_ib")).as("id_b"), col(m.name))
   }
 
-  /** The LSH + exact-verify core of [[minhashDupPairs]], over any
-    * (_id, _t) frame (raw docs on the no-twin fast path,
-    * one-representative-per-class on the collapsed path).
+  /** Exact verify of candidate pairs (id_a, id_b) drawn from the
+    * (_id, _t) frame `docs`: join each side's HASHED shingle array
+    * (one shingle_set kernel call per doc, doc-count narrow rows) and
+    * intersect per pair — Σ_cand(|A|+|B|) element work, NO exploded-
+    * row shuffle (the row-join alternative materializes Σ_cand|A|
+    * rows — measured 5× this plan's cost). Assumes a document's
+    * shingle set fits a row comfortably — true for documents, the
+    * operator's domain. Keeps pairs whose `m` value is ≥ `threshold`.
     *
-    * Signatures: the native one-pass minhash64 kernel — no shingle
-    * explode, no shuffle, no 64-min aggregate; bit-identical to
-    * minhashSignatures (LlmSpec proves it). No explicit caching or
-    * lineage truncation anywhere in this pipeline: consumers that
-    * share a subtree share its work through Spark's exchange reuse —
-    * an earlier localCheckpoint here leaked BlockManager storage
-    * across the whole bench suite.
+    * Both set sides are [[buildSide]] builds (r14): the default
+    * SortMergeJoin SORTS the candidate stream WITH both shingle
+    * arrays aboard — at sf10-doubled that sort spilled ~10⁸
+    * array-carrying rows and ran a 75 GB disk out; hash-building the
+    * docs-sized side streams the big side through unsorted.
     *
-    * `repartitionBuckets` is set on the collapsed path only: there the
-    * input is a small materialized aggregate whose post-explode size
-    * AQE cannot see — without the explicit exchange the bucket
-    * self-join degenerates to a one-task broadcast join at scale.
-    * Straight off a scan (fast path) the join's own exchange sees the
-    * real exploded volume and parallelizes correctly. */
-  private def minhashPairsOver(repDocs: DataFrame, bands: Int, shingleN: Int,
-      threshold: Double, repartitionBuckets: Boolean): DataFrame = {
-    val b0 = minhashBandBuckets(repDocs, "_id", "_t", bands, shingleN)
-    val bucketed = if (repartitionBuckets) b0.repartition(col("_bucket")) else b0
-
-    val pairs = bucketed.as("a")
-      .join(bucketed.as("b"),
-        col("a._bucket") === col("b._bucket") && col("a._id") < col("b._id"))
-      .select(col("a._id").as("id_a"), col("b._id").as("id_b"))
-      .distinct() // a pair can collide in several bands
-
-    // Exact verify: join each candidate pair's HASHED shingle arrays
-    // (one shingle_set kernel call per input row, input-count narrow
-    // rows) and intersect per pair — Σ_pairs(|A|+|B|) element work, no
-    // exploded-row shuffle. Same shape (and same long-hash payload
-    // discipline) as jaccardDupPairs' verify.
-    //
-    // Deliberately NOT staged to scratch (r16, measured): the hashed
-    // sets are ~8 bytes per shingle ≈ 8× the compressed text bytes —
-    // materializing them costs more than re-running the codegen'd
-    // xxhash kernel over the (small, compressed) text scan, at BOTH
-    // measured scales (sf0.1: staged 1.13 s vs 0.90; sf1: 2.71 vs
-    // 1.91 — Prof minhash_full_staged vs minhash_full, and the byte
-    // ratio is scale-invariant).
-    val sets = hashedShingleSets(repDocs, "_id", "_t", shingleN)
-    val nDocs = buildProbe(repDocs)
-    pairs
-      .join(boundedBuild(sets.select(col("_id").as("id_a"), col("_n").as("_na"),
-        col("_set").as("_seta")), nDocs), "id_a")
-      .join(boundedBuild(sets.select(col("_id").as("id_b"), col("_n").as("_nb"),
-        col("_set").as("_setb")), nDocs), "id_b")
+    * Deliberately NOT staged to scratch (r16, measured): the hashed
+    * sets are ~8 bytes per shingle ≈ 8× the compressed text bytes —
+    * materializing them costs more than re-running the codegen'd
+    * xxhash kernel over the (small, compressed) text scan, at BOTH
+    * measured scales (sf0.1: staged 1.13 s vs 0.90; sf1: 2.71 vs
+    * 1.91 — Prof minhash_full_staged vs minhash_full, and the byte
+    * ratio is scale-invariant). */
+  private def verify(cand: DataFrame, docs: DataFrame, shingleN: Int, m: Measure,
+      threshold: Double): DataFrame = {
+    val sets = hashedShingleSets(docs, shingleN)
+    val build = buildSide(docs)
+    def side(s: String) = build(sets.select(col("_id").as(s"id_$s"),
+      col("_n").as(s"_n$s"), col("_set").as(s"_set$s")))
+    cand.join(side("a"), "id_a").join(side("b"), "id_b")
       .withColumn("_inter", size(array_intersect(col("_seta"), col("_setb"))))
-      .withColumn("jaccard",
-        col("_inter") / (col("_na") + col("_nb") - col("_inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .withColumn(m.name, m.value)
+      .filter(col(m.name) >= threshold)
+      .select(col("id_a"), col("id_b"), col(m.name))
   }
 
   /** EXACT n-gram Jaccard similarity self-join (every pair with
@@ -708,9 +726,7 @@ object Dedup {
     * Scale shape (SSJoin/PPJoin family, public literature):
     *  - candidates come from the shingle co-occurrence join, and with
     *    `prefixFilter` on (the default) only each document's PREFIX
-    *    joins: order shingles by global document frequency (rare
-    *    first) and keep the first |A| − ⌈t·|A|⌉ + 1. J(A,B) ≥ t
-    *    forces |A∩B| ≥ ⌈t·|A|⌉, so by pigeonhole two qualifying sets
+    *    joins ([[rankedPrefix]]): by pigeonhole two qualifying sets
     *    must share a prefix shingle — recall stays 1.0 while the
     *    join volume drops from Σ df² over ALL shingles to Σ df² over
     *    the rare prefix shingles (the frequent shingles that dominate
@@ -719,60 +735,35 @@ object Dedup {
     *    J ≥ t consequence) prunes candidates before the verify join;
     *  - exact |A∩B| is then counted only for surviving candidates.
     * Worst case (corpus of identical docs) is inherently quadratic in
-    * the DUPLICATE CLASS size — run exact dedup first, as the
-    * pipeline ordering already prescribes. */
+    * the DUPLICATE CLASS size — the twin collapse of
+    * [[setSimilarityJoin]] emits such cliques directly. */
   def jaccardDupPairs(
       docs: DataFrame, threshold: Double,
       id: String = "doc_id", text: String = "text", shingleN: Int = 3,
       prefixFilter: Boolean = true): DataFrame = {
     require(threshold > 0, "threshold must be positive (zero-overlap pairs are never emitted)")
-    // exact-twin collapse, adaptive like minhashDupPairs (r12): a
-    // class of k identical texts is a clique of j = 1.0 pairs that the
-    // prefix join would rediscover through EVERY shared shingle —
-    // collapse emits the clique directly and runs the set-similarity
-    // join over one representative per distinct content. Clone-free
-    // corpora (one probe job) take the direct pipeline unchanged.
-    val (base, reps, hasTwins) = textClasses(docs, id, text)
-    if (!hasTwins)
-      jaccardPairsCore(docs, threshold, id, text, shingleN, prefixFilter)
-    else {
-      val repPairs = jaccardPairsCore(reps, threshold, "_id", "_t",
-        shingleN, prefixFilter)
-      twinClassPairs(base, threshold)
-        .unionByName(expandTextClassPairs(repPairs, reps, base))
-    }
+    setSimilarityJoin(docs, id, text, shingleN, Jaccard, threshold)((d, _) =>
+      jaccardCandidates(d, shingleN, threshold, prefixFilter))
   }
 
-  /** Per-doc shingle sets for the candidate explode and the exact
-    * verify, hashed element-wise to 64-bit longs: candidate
-    * generation and the per-pair intersect only need element
-    * EQUALITY, and 8-byte longs cut the candidate-join row payload
-    * ~4× vs trigram strings AND make the intersect integer-compare
-    * bound (the r12 verdict's heap-sensitivity finding on the
-    * exact-jaccard family: the verify join carries BOTH full shingle
-    * arrays on every candidate pair). `_n` (the set size, hence every
-    * |A|/|B| denominator) is taken from the ORIGINAL string array, so
-    * a 2⁻⁶⁴-improbable intra-doc hash collision cannot shift it. */
-  private def hashedShingleSets(docs: DataFrame, id: String, text: String,
-      shingleN: Int): DataFrame =
-    docs.select(col(id).as("_id"),
-        call_function("shingle_set", col(text), lit(shingleN)).as("_s0"))
+  /** Per-doc shingle sets of an (_id, _t) frame for the candidate
+    * explode and the exact verify, hashed element-wise to 64-bit
+    * longs: candidate generation and the per-pair intersect only need
+    * element EQUALITY, and 8-byte longs cut the candidate-join row
+    * payload ~4× vs trigram strings AND make the intersect
+    * integer-compare bound (the r12 verdict's heap-sensitivity finding
+    * on the exact-jaccard family: the verify join carries BOTH full
+    * shingle arrays on every candidate pair). `_n` (the set size,
+    * hence every |A|/|B| denominator) is taken from the ORIGINAL
+    * string array, so a 2⁻⁶⁴-improbable intra-doc hash collision
+    * cannot shift it. */
+  private def hashedShingleSets(docs: DataFrame, shingleN: Int): DataFrame =
+    docs.select(col("_id"),
+        call_function("shingle_set", col("_t"), lit(shingleN)).as("_s0"))
       .select(col("_id"), size(col("_s0")).as("_n"),
         transform(col("_s0"), x => xxhash64(x)).as("_set"))
 
-  // Tried and REJECTED this round (r16, measured — see
-  // OPTIMIZATION_r16.md): (a) staging the hashed sets to scratch so
-  // consumers share one kernel pass — the sets are ~8 B/shingle ≈ 8×
-  // the compressed text, and writing+re-reading them measured slower
-  // than re-running the codegen'd kernel at sf0.1 AND sf1; (b) a
-  // driver-built broadcast rank map replacing the df-join +
-  // row_number window of the prefix ranking — the per-row Scala UDF
-  // (binary search + sort + tuple explode) measured 1.2× slower at
-  // sf0.1 and 4.4× slower at sf1 than the vectorized window it
-  // replaced. Both reverted to the r15 formulation below; numbers in
-  // the round log.
-
-  /** Build-side strategy for the BOUNDED per-doc frames (hashed
+  /** Build-side row cap for the BOUNDED per-doc frames (hashed
     * shingle sets, class keys) that the verify/expansion joins attach
     * to huge candidate/pair streams: BROADCAST while the frame is
     * modest (≤ [[MaxBroadcastDocs]] rows; hashed sets are ≤ ~1 KB/doc,
@@ -783,124 +774,102 @@ object Dedup {
     * 75 GB of free disk; on a cluster they would be the dominant
     * network cost. Above the cap the shuffled-hash build keeps the
     * stream unsorted (the r14 spill fix) and scales without a driver
-    * round-trip. The row count is the caller's one extra cheap job —
-    * column-pruned count of the doc frame, at most once per operator
-    * call and skipped outright when the optimizer's size estimate
-    * already proves the frame far under budget (the gate-scale case:
-    * no probe job at all). */
+    * round-trip. */
   private val MaxBroadcastDocs = 1500000L
 
-  /** Broadcast row budget for the bounded per-doc frames, derived
-    * from the session's own collect ceiling: broadcast builds collect
-    * to the driver, so a cap that ignores
-    * `spark.driver.maxResultSize` (default 1g) would explicitly
-    * broadcast frames the driver then refuses at runtime (ADVICE
-    * r14: the flat 1.5M-doc cap ≈ 1.5 GB of ~1 KB/doc frames). The
-    * budget is half the configured limit at the ~1 KB/doc frame
-    * estimate, ceilinged by [[MaxBroadcastDocs]]; maxResultSize = 0
-    * (unlimited) keeps the flat ceiling. Above budget the
+  /** Broadcast row budget for the bounded per-doc frames: broadcast
+    * builds collect to the driver, so the cap is the driver-collect
+    * budget ([[graft.operators.Fixpoint.driverRowBudget]]) at the
+    * ~1 KB/doc frame estimate — a flat cap that ignored
+    * `spark.driver.maxResultSize` would broadcast frames the driver
+    * then refuses at runtime (ADVICE r14). Above budget the
     * shuffle_hash build takes over — still sort-free, no driver
     * round-trip. */
-  private def broadcastDocBudget(spark: org.apache.spark.sql.SparkSession): Long = {
-    val bytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.driver.maxResultSize", "1g"))
-    if (bytes <= 0) MaxBroadcastDocs
-    else math.min(MaxBroadcastDocs, bytes / 2 / 1024)
-  }
+  private[graft] def broadcastDocBudget(spark: org.apache.spark.sql.SparkSession): Long =
+    graft.operators.Fixpoint.driverRowBudget(spark, MaxBroadcastDocs, 1024L)
 
-  /** Memoized row-count probe for a doc frame feeding
-    * [[boundedBuild]]. When the optimized plan's size estimate is
-    * already ≤ half the broadcast byte budget, the count job is
-    * skipped entirely (hashed-shingle/class-key frames are ≲ the
+  /** Build-side strategy for the frames derived from `docs`:
+    * broadcast while `docs` has at most [[broadcastDocBudget]] rows,
+    * else a shuffle_hash build. The row count is the one extra cheap
+    * job — a column-pruned count, run lazily on first use and shared
+    * by every frame the returned strategy builds — and is skipped outright
+    * when the optimized plan's size estimate is already ≤ half the
+    * broadcast byte budget (hashed-shingle/class-key frames are ≲ the
     * source text bytes, so estimate-under-budget ⇒ frames-under-
-    * budget); otherwise ONE count job runs lazily on first use and is
-    * shared by every boundedBuild of the operator call. */
-  private def buildProbe(docs: DataFrame): () => Long = {
-    val budgetRows = broadcastDocBudget(docs.sparkSession)
+    * budget: the gate-scale case runs no probe job at all). */
+  private def buildSide(docs: DataFrame): DataFrame => DataFrame = {
+    val budget = broadcastDocBudget(docs.sparkSession)
     val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(budgetRows) * 1024 / 2) () => 0L
-    else { lazy val c = docs.count(); () => c }
+    lazy val rows = if (est <= BigInt(budget) * 1024 / 2) 0L else docs.count()
+    df => if (rows <= budget) broadcast(df) else df.hint("shuffle_hash")
   }
 
-  private def boundedBuild(df: DataFrame, docRows: () => Long): DataFrame =
-    if (docRows() <= broadcastDocBudget(df.sparkSession)) broadcast(df)
-    else df.hint("shuffle_hash")
+  // Tried and REJECTED (r16, measured — see OPTIMIZATION_r16.md):
+  // (a) staging the hashed sets to scratch so consumers share one
+  // kernel pass — the sets are ~8 B/shingle ≈ 8× the compressed text,
+  // and writing+re-reading them measured slower than re-running the
+  // codegen'd kernel at sf0.1 AND sf1; (b) a driver-built broadcast
+  // rank map replacing the df-join + row_number window of the prefix
+  // ranking — the per-row Scala UDF (binary search + sort + tuple
+  // explode) measured 1.2× slower at sf0.1 and 4.4× slower at sf1
+  // than the vectorized window it replaced.
 
-  /** The prefix-filtered set-similarity join of [[jaccardDupPairs]]
-    * over any doc frame (raw docs on the no-twin fast path, one
-    * representative per content class on the collapsed path). */
-  private def jaccardPairsCore(
-      docs: DataFrame, threshold: Double,
-      id: String, text: String, shingleN: Int,
-      prefixFilter: Boolean): DataFrame = {
-    // Verify joins the per-doc hashed shingle arrays (one kernel call
-    // per doc, docs-count rows — broadcast-size) onto the candidate
-    // pairs and intersects per pair: Σ_cand(|A|+|B|) element work,
-    // NO exploded-row shuffle (the row-join alternative materializes
-    // Σ_cand|A| rows — measured 5× this plan's cost). Assumes a
-    // document's shingle set fits a row comfortably — true for
-    // documents, the operator's domain. The sets sides are hinted
-    // shuffle_hash (r14): the default SortMergeJoin SORTS the
-    // candidate stream WITH both shingle arrays aboard — at
-    // sf10-doubled that sort spilled ~10⁸ array-carrying rows and ran
-    // a 75 GB disk out; hash-building the docs-sized side streams the
-    // big side through unsorted.
-    val sets = hashedShingleSets(docs, id, text, shingleN)
-    val nDocs = buildProbe(docs)
-    val cand = jaccardCandidates(docs, id, text, shingleN, threshold, prefixFilter)
-      .join(boundedBuild(sets.select(col("_id").as("id_a"), col("_n").as("_na"),
-        col("_set").as("_seta")), nDocs), "id_a")
-      .join(boundedBuild(sets.select(col("_id").as("id_b"), col("_n").as("_nb"),
-        col("_set").as("_setb")), nDocs), "id_b")
-      .filter(least(col("_na"), col("_nb")) >=
-        lit(threshold) * greatest(col("_na"), col("_nb")))
-    cand
-      .withColumn("_inter", size(array_intersect(col("_seta"), col("_setb"))))
-      .withColumn("jaccard",
-        col("_inter") / (col("_na") + col("_nb") - col("_inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+  /** The candidate stage shared by [[jaccardDupPairs]] and
+    * [[containmentDupPairs]]: (ranked, prefix) hashed shingle rows
+    * (_id, _sz, _ng, _r) of an (_id, _t) frame, where `_r` is the
+    * shingle's rank in its doc under one global canonical order —
+    * ascending document frequency, ties by shingle value, identical on
+    * every executor, no driver state — and `prefix` keeps each doc's
+    * first [[prefixLength]] rows. Without `prefixFilter` both are
+    * every row with `_r` = 1.
+    *
+    * Rows explode from the HASHED sets: the co-occurrence join
+    * shuffles 8-byte long keys instead of trigram strings (the df-count
+    * table and the pair join both shrink ~4×); any consistent total
+    * order works for the prefix filter, so hash-space order is as
+    * valid as string order. `_sz` rides along from the kernel's array
+    * size (no extra window or join). `_df` comes from a
+    * partial-aggregable groupBy joined back with a shuffle-hash build
+    * on the (distinct-shingle-sized) count table — NOT a
+    * count-over-partition window: the window formulation full-sorts
+    * every shingle row by _ng before counting, and that sort was the
+    * dominant candidate-stage cost (measured 5.4 s → 3.4 s at sf0.1);
+    * the groupBy reduces map-side and the hash join never sorts. Rank
+    * then needs the one sort by (_id → _df, _ng). */
+  private def rankedPrefix(docs: DataFrame, shingleN: Int, threshold: Double,
+      prefixFilter: Boolean): (DataFrame, DataFrame) = {
+    val sh = hashedShingleSets(docs, shingleN)
+      .select(col("_id"), col("_n").as("_sz"), explode(col("_set")).as("_ng"))
+    if (!prefixFilter) {
+      val all = sh.withColumn("_r", lit(1L))
+      (all, all)
+    } else {
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("_id")).orderBy(col("_df"), col("_ng"))
+      val dfTable = sh.groupBy(col("_ng")).agg(count(lit(1)).as("_df"))
+      val ranked = sh.join(dfTable.hint("shuffle_hash"), Seq("_ng"))
+        .withColumn("_r", row_number().over(w))
+        .select(col("_id"), col("_sz"), col("_ng"), col("_r"))
+      (ranked, ranked.filter(col("_r") <= prefixLength(col("_sz"), threshold)))
+    }
   }
+
+  /** Pigeonhole prefix length |A| − ⌈t·|A|⌉ + 1 of a set of size `sz`:
+    * J(A,B) ≥ t and |A∩B|/|A| ≥ t both force |A∩B| ≥ ⌈t·|A|⌉, so a
+    * qualifying B must hit one of A's first this-many elements in ANY
+    * fixed order. The ceil argument backs off 1e-9 so an FP-inexact
+    * t·|A| that lands a hair ABOVE an integer cannot shorten the
+    * prefix below the bound (errs one longer, never shorter). */
+  private def prefixLength(sz: Column, threshold: Double): Column =
+    sz - ceil(lit(threshold) * sz - lit(1e-9)) + 1
 
   /** Candidate pairs of `jaccardDupPairs` (before exact verify):
     * distinct (id_a < id_b) sharing ≥ 1 joined shingle and passing
     * the J ≥ t length bound. With `prefixFilter`, only prefix
     * shingles join. */
-  private def jaccardCandidates(docs: DataFrame, id: String, text: String,
-      shingleN: Int, threshold: Double, prefixFilter: Boolean): DataFrame = {
-    // exploded from the HASHED sets: the co-occurrence join shuffles
-    // 8-byte long keys instead of trigram strings (the df-count table
-    // and the pair join both shrink ~4×); any consistent total order
-    // works for the prefix filter, so hash-space order is as valid as
-    // string order
-    val sh = hashedShingleSets(docs, id, text, shingleN)
-      .select(col("_id"), col("_n").as("_sz"), explode(col("_set")).as("_ng"))
-    val side = if (!prefixFilter) sh else {
-      import org.apache.spark.sql.expressions.Window
-      // global canonical order: ascending document frequency, ties by
-      // shingle value — identical on every executor, no driver state.
-      // _sz rides along from the kernel's array size (no extra window
-      // or join). _df comes from a partial-aggregable groupBy joined
-      // back with a shuffle-hash build on the (distinct-shingle-sized)
-      // count table — NOT a count-over-partition window: the window
-      // formulation full-sorts every shingle row by _ng before
-      // counting, and that sort was the dominant candidate-stage cost
-      // (measured 5.4 s → 3.4 s at sf0.1); the groupBy reduces
-      // map-side and the hash join never sorts. Rank then needs the
-      // one sort by (_id → _df, _ng).
-      // The ceil argument backs off 1e-9 so an FP-inexact t·|A| that
-      // lands a hair ABOVE an integer cannot shorten the prefix below
-      // the pigeonhole bound (errs one longer, never shorter).
-      val w = Window.partitionBy(col("_id")).orderBy(col("_df"), col("_ng"))
-      val dfTable = sh.groupBy(col("_ng")).agg(count(lit(1)).as("_df"))
-      sh
-        .join(dfTable.hint("shuffle_hash"), Seq("_ng"))
-        .withColumn("_r", row_number().over(w))
-        .filter(col("_r") <=
-          col("_sz") - ceil(lit(threshold) * col("_sz") - lit(1e-9)) + 1)
-        .select(col("_id"), col("_sz"), col("_ng"), col("_r"))
-    }
-    val noRank = if (prefixFilter) side else side.withColumn("_r", lit(1L))
+  private def jaccardCandidates(docs: DataFrame, shingleN: Int, threshold: Double,
+      prefixFilter: Boolean): DataFrame = {
+    val side = rankedPrefix(docs, shingleN, threshold, prefixFilter)._2
     // Join residual, BEFORE the distinct's shuffle:
     //  - length bound: min(|A|,|B|) ≥ t·max(|A|,|B|);
     //  - positional bound (the PPJoin refinement, public literature —
@@ -918,9 +887,9 @@ object Dedup {
       ceil(lit(threshold / (1 + threshold)) * (col("_sza") + col("_szb")) - lit(1e-9))
     val overlapBound =
       lit(1L) + least(col("_sza") - col("_ra"), col("_szb") - col("_rb"))
-    noRank.select(col("_id").as("id_a"), col("_sz").as("_sza"),
+    side.select(col("_id").as("id_a"), col("_sz").as("_sza"),
         col("_ng"), col("_r").as("_ra"))
-      .join(noRank.select(col("_id").as("id_b"), col("_sz").as("_szb"),
+      .join(side.select(col("_id").as("id_b"), col("_sz").as("_szb"),
         col("_ng"), col("_r").as("_rb")), Seq("_ng"))
       .filter(col("id_a") < col("id_b") &&
         least(col("_sza"), col("_szb")).cast(DoubleType) >=
@@ -935,7 +904,8 @@ object Dedup {
   def jaccardCandidateCount(docs: DataFrame, threshold: Double,
       id: String = "doc_id", text: String = "text", shingleN: Int = 3,
       prefixFilter: Boolean = true): Long =
-    jaccardCandidates(docs, id, text, shingleN, threshold, prefixFilter).count()
+    jaccardCandidates(docs.select(col(id).as("_id"), col(text).as("_t")),
+      shingleN, threshold, prefixFilter).count()
 
   /** Asymmetric CONTAINMENT near-dup join: directed pairs (a, b) with
     * |A∩B| / |A| ≥ t — the quote-inclusion / subset-duplication case
@@ -944,10 +914,10 @@ object Dedup {
     * similarity-join literature (probe-count / asymmetric PPJoin).
     *
     * Scale shape: the probe side explodes only each doc's PREFIX
-    * under the global (df asc, shingle) canonical order — prefix len
-    * |A| − ⌈t·|A|⌉ + 1, the pigeonhole bound for containment: if no
+    * under the global (df asc, shingle) canonical order
+    * ([[rankedPrefix]]; the pigeonhole bound for containment: if no
     * prefix element hits B, at most ⌈t·|A|⌉ − 1 common elements
-    * remain, below the requirement. The index side must carry ALL
+    * remain, below the requirement). The index side must carry ALL
     * shingles (containment puts no lower bound on how much of B
     * matters), so the join is probe-prefix × inverted-index — rare
     * shingles probe, the positional bound
@@ -961,72 +931,26 @@ object Dedup {
       id: String = "doc_id", text: String = "text", shingleN: Int = 3,
       prefixFilter: Boolean = true): DataFrame = {
     require(threshold > 0 && threshold <= 1, "containment threshold in (0, 1]")
-    // exact-twin collapse, adaptive like minhash/jaccard (r12): a
-    // class of k identical texts is a DIRECTED clique of k·(k−1)
-    // containment-1.0 pairs that the probe×index join would
-    // rediscover through every shared shingle; cross-class
-    // containment is a pure function of the two contents, so the
-    // asymmetric join runs over one representative per distinct
-    // content and qualifying rep pairs expand to member pairs WITH
-    // DIRECTION preserved (containment(a,b) = |A∩B|/|A| is not
-    // symmetric — least/greatest canonicalization would corrupt it).
-    val (base, reps, hasTwins) = textClasses(docs, id, text)
-    if (!hasTwins)
-      containmentPairsCore(docs, threshold, id, text, shingleN, prefixFilter)
-    else {
-      val repPairs = containmentPairsCore(reps, threshold, "_id", "_t",
-        shingleN, prefixFilter)
-      twinClassPairs(base, threshold,
-          valueName = "containment", directed = true)
-        .unionByName(expandTextClassPairs(repPairs, reps, base,
-          valueName = "containment", directed = true))
-    }
+    setSimilarityJoin(docs, id, text, shingleN, Containment, threshold)((d, _) =>
+      containmentCandidates(d, shingleN, threshold, prefixFilter))
   }
 
-  /** The probe-prefix × inverted-index join of [[containmentDupPairs]]
-    * over any doc frame (raw docs on the no-twin fast path, one
-    * representative per content class on the collapsed path). */
-  private def containmentPairsCore(docs: DataFrame, threshold: Double,
-      id: String, text: String, shingleN: Int,
+  /** Directed candidate pairs (id_a ≠ id_b) of [[containmentDupPairs]]:
+    * the probe-prefix × inverted-index join over an (_id, _t) frame. */
+  private def containmentCandidates(docs: DataFrame, shingleN: Int, threshold: Double,
       prefixFilter: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // hashed sets feed BOTH the inverted-index explode (8-byte join
-    // keys) and the verify intersect — same payload discipline as
-    // jaccardPairsCore; _sz stays the original string-set size
-    val sets = hashedShingleSets(docs, id, text, shingleN)
-    val nDocs = buildProbe(docs)
-    val sh = sets.select(col("_id"), col("_n").as("_sz"),
-      explode(col("_set")).as("_ng"))
-    val ranked = if (!prefixFilter) sh.withColumn("_r", lit(1L)) else {
-      val w = Window.partitionBy(col("_id")).orderBy(col("_df"), col("_ng"))
-      val dfTable = sh.groupBy(col("_ng")).agg(count(lit(1)).as("_df"))
-      sh.join(dfTable.hint("shuffle_hash"), Seq("_ng"))
-        .withColumn("_r", row_number().over(w))
-        .select(col("_id"), col("_sz"), col("_ng"), col("_r"))
-    }
-    val probe = (if (!prefixFilter) ranked else ranked.filter(col("_r") <=
-        col("_sz") - ceil(lit(threshold) * col("_sz") - lit(1e-9)) + 1))
-      .select(col("_id").as("id_a"), col("_sz").as("_sza"),
-        col("_ng"), col("_r").as("_ra"))
+    val (ranked, prefix) = rankedPrefix(docs, shingleN, threshold, prefixFilter)
+    val probe = prefix.select(col("_id").as("id_a"), col("_sz").as("_sza"),
+      col("_ng"), col("_r").as("_ra"))
     val index = ranked.select(col("_id").as("id_b"), col("_sz").as("_szb"),
       col("_ng"), col("_r").as("_rb"))
     val need = ceil(lit(threshold) * col("_sza") - lit(1e-9))
     val bound = lit(1L) + least(col("_sza") - col("_ra"), col("_szb") - col("_rb"))
-    val cand = probe.join(index, Seq("_ng"))
+    probe.join(index, Seq("_ng"))
       .filter(col("id_a") =!= col("id_b") &&
         col("_szb").cast(DoubleType) >= lit(threshold) * col("_sza") &&
         bound >= need)
       .select(col("id_a"), col("id_b")).distinct()
-    cand
-      .join(boundedBuild(sets.select(col("_id").as("id_a"), col("_n").as("_na"),
-        col("_set").as("_seta")), nDocs), "id_a")
-      .join(boundedBuild(sets.select(col("_id").as("id_b"), col("_set").as("_setb")),
-        nDocs), "id_b")
-      .withColumn("containment",
-        size(array_intersect(col("_seta"), col("_setb"))).cast(DoubleType) /
-          col("_na"))
-      .filter(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"), col("containment"))
   }
 
   /** Resolution policy for [[containmentDupPairs]] output: drop every

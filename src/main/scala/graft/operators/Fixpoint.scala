@@ -47,14 +47,20 @@ private[graft] object Fixpoint {
 
   /** Driver-collect row budget: `requested` ceilinged by
     * maxResultSize/2 at the serialized width of a `schema` row. */
-  def driverRowBudget(spark: SparkSession, requested: Long, schema: StructType): Long = {
-    val bytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.driver.maxResultSize", "1g"))
+  def driverRowBudget(spark: SparkSession, requested: Long, schema: StructType): Long =
     // UnsafeRow width (null bits + 8 B per field + variable-length
     // payload at its type's default size) + the 4 B length prefix
-    val rowBytes = 4L + UnsafeRow.calculateBitSetWidthInBytes(schema.length) +
+    driverRowBudget(spark, requested, 4L + UnsafeRow.calculateBitSetWidthInBytes(schema.length) +
       schema.fields.map(f =>
-        8L + (if (UnsafeRow.isFixedLength(f.dataType)) 0 else f.dataType.defaultSize)).sum
+        8L + (if (UnsafeRow.isFixedLength(f.dataType)) 0 else f.dataType.defaultSize)).sum)
+
+  /** Driver-collect row budget at a given row width: `requested`
+    * ceilinged by maxResultSize/2 at `rowBytes` per row — the one
+    * reader of `spark.driver.maxResultSize`, also pricing Dedup's
+    * broadcast builds (which collect to the driver too). */
+  def driverRowBudget(spark: SparkSession, requested: Long, rowBytes: Long): Long = {
+    val bytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.driver.maxResultSize", "1g"))
     if (bytes <= 0) requested else math.min(requested, bytes / 2 / rowBytes)
   }
 

@@ -25,6 +25,26 @@ class BoundsSpec extends SparkSpec {
     assert(Fixpoint.driverRowBudget(spark, Long.MaxValue / 4, strings) == oneG / 2 / 68)
   }
 
+  test("Dedup's broadcast build budget is the driver budget at a 1 KB row") {
+    // the doc-frame cap of Dedup's verify and expansion joins: 1.5M
+    // rows, ceilinged by maxResultSize/2 at 1024 B per row
+    val key = "spark.driver.maxResultSize"
+    // a core conf: the session refuses to set it unless told otherwise
+    val legacy = "spark.sql.legacy.setCommandRejectsSparkCoreConfs"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(legacy, "false")
+    try {
+      assert(graft.llm.Dedup.broadcastDocBudget(spark) == 524288L) // default 1g
+      spark.conf.set(key, "0") // unlimited
+      assert(graft.llm.Dedup.broadcastDocBudget(spark) == 1500000L)
+      spark.conf.set(key, "1m")
+      assert(graft.llm.Dedup.broadcastDocBudget(spark) == 512L)
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      spark.conf.unset(legacy)
+    }
+  }
+
   test("bounded collect returns the complete pair multiset when under budget") {
     val df = spark.range(0, 1000).select(col("id"), (col("id") * 7 % 1000).as("y"))
       .repartition(8)

@@ -24,10 +24,19 @@ class EdgeSpec extends SparkSpec {
   }
 
   test("minhash and jaccard joins ignore NULL text and find only real dups") {
-    assert(Dedup.minhashDupPairs(docs, threshold = 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet == Set((5L, 6L)))
-    assert(Dedup.jaccardDupPairs(docs, threshold = 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet == Set((5L, 6L)))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val none = Set.empty[(Long, Long)]
+    // both branches of the exact-twin collapse, with containment too:
+    // `docs` holds one twin class {5, 6}; without id 6 the probe finds
+    // none and the joins run straight over the NULL-free docs
+    for ((corpus, undirected, directed) <- Seq(
+        (docs, Set((5L, 6L)), Set((5L, 6L), (6L, 5L))),
+        (docs.filter(col("doc_id") =!= 6L), none, none))) {
+      assert(pairs(Dedup.minhashDupPairs(corpus, threshold = 0.5)) == undirected)
+      assert(pairs(Dedup.jaccardDupPairs(corpus, threshold = 0.5)) == undirected)
+      assert(pairs(Dedup.containmentDupPairs(corpus, threshold = 0.5)) == directed)
+    }
   }
 
   test("exact dedup groups degenerate rows without dropping them") {

@@ -41,6 +41,18 @@ class PlanShapeSpec extends SparkSpec {
       "ObjectHashAggregate".r.findAllIn(p).length >= 2, p)
   }
 
+  test("q_dedup_minhash: only the twin-collapsed path repartitions the band buckets") {
+    // the collapsed path's representatives are a small aggregate whose
+    // post-explode size AQE cannot see, so an explicit exchange on the
+    // bucket keeps the self-join parallel (docs/MEMORY.md); straight
+    // off a scan the join's own exchange sees the volume, so a corpus
+    // whose probe finds no twins gets none
+    val twins = shape("q_dedup_minhash_twins")
+    assert(twins.contains("hashpartitioning(_bucket"), twins)
+    val plain = shape("q_dedup_minhash")
+    assert(!plain.contains("hashpartitioning(_bucket"), plain)
+  }
+
   test("q_sample_uniform: the md5 filter sits on the scan — no shuffle at all") {
     val p = shape("q_sample_uniform")
     assert(!p.contains("Exchange hashpartitioning"), p)

@@ -9,20 +9,37 @@ package graft
   * a filter falling off the scan, partial aggregation lost — fails a
   * named test at the scale where it matters.
   *
-  * The sf1 dataset is synthesized locally (not driver-shipped):
-  *   sbt "runMain graft.ScaleUp /root/testdata/sf0.1 /tmp/graft_sf1 10"
-  * Tests are CANCELLED (not silently passed) when the directory is
-  * absent — override with -Dgraft.sf1.dir=<path>.
+  * The sf1 dataset is synthesized locally (not driver-shipped). An
+  * existing copy is used when present (-Dgraft.sf1.dir=<path>, else
+  * /tmp/graft_sf1, made by
+  *   sbt "runMain graft.ScaleUp <testdata>/sf0.1 /tmp/graft_sf1 10");
+  * otherwise beforeAll builds the same ×10 copy (default variant
+  * mode, as the bi_sf1 benchmark workload does) under a temp dir and
+  * afterAll deletes it, so the suite always runs.
   */
 class ScaleShapeSpec extends SparkSpec {
 
-  private val sf1Dir = sys.props.getOrElse("graft.sf1.dir", "/tmp/graft_sf1")
+  private val existing = Some(sys.props.getOrElse("graft.sf1.dir", "/tmp/graft_sf1"))
+    .filter(d => new java.io.File(s"$d/lineitem.parquet").exists())
+  private var built: Option[java.nio.file.Path] = None
+  private def sf1: String = existing.getOrElse(built.get.toString)
 
-  private def sf1 = {
-    assume(new java.io.File(s"$sf1Dir/lineitem.parquet").exists(),
-      s"sf1 dataset not generated at $sf1Dir (runMain graft.ScaleUp to create)")
-    sf1Dir
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    if (existing.isEmpty) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_sf1")
+      built = Some(dir)
+      val sf01 = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.1").toString
+      ScaleUp.scale(spark, sf01, dir.toString, 10)
+    }
   }
+
+  override def afterAll(): Unit =
+    try built.foreach { dir =>
+      val paths = java.nio.file.Files.walk(dir)
+      try paths.sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+      finally paths.close()
+    } finally super.afterAll()
 
   private def shape(name: String): String =
     SparkEntry.queries(name)(spark, sf1).queryExecution.executedPlan.toString
