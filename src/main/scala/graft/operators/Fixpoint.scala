@@ -151,14 +151,17 @@ private[graft] object Fixpoint {
 
   /** A distributed loop's cache scope: runs `body`, writes its result
     * under a fresh `Scratch.newDir(stage)`, releases every cache the
-    * scope holds, and returns the read-back. */
+    * scope holds, and returns the read-back. The read-back is given the
+    * written frame's schema (all nullable, as a file source exposes
+    * it), so it plans without a schema-inference job. */
   def rounds(spark: SparkSession, stage: String)(body: Rounds => DataFrame): DataFrame = {
     val r = new Rounds
     try {
       val out = body(r)
       val dir = graft.sources.Scratch.newDir(spark, stage) + "/state"
       out.write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir)
+      spark.read.schema(StructType(out.schema.fields.map(_.copy(nullable = true))))
+        .parquet(dir)
     } finally r.release()
   }
 

@@ -34,8 +34,10 @@ object GraphQueries {
       val pk = t(s, dir, "lineitem")
         .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
         .distinct()
+      // the keys are INT: widen before the encode, or 2·pk wraps
+      // once a key passes 2³⁰
       val li = pk.select(
-        (col("pk") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
+        (col("pk").cast("long") * 2).as("src"), (col("sk").cast("long") * 2 + 1).as("dst"))
       val edges = li.union(li.select(col("dst").as("src"), col("src").as("dst")))
       GraphRank.pageRank(edges, "src", "dst", iterations = 3,
           edgesAlreadyDistinct = true)

@@ -61,7 +61,7 @@ object MiscQueries {
       // extraction is constant per FILE, so it belongs on the
       // files-sized grouped result, not on every row (measured ~4x on
       // this query at sf0.1)
-      s.read.parquet(s"$dir/lineitem.parquet")
+      t(s, dir, "lineitem")
         .groupBy(col("_metadata.file_path").as("fp")).agg(count(lit(1)).as("n"))
         .select(regexp_extract(col("fp"), "[^/]+$", 0).as("fname"), col("n"))
         .orderBy(col("fname"))

@@ -55,6 +55,17 @@ class FixpointSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
+  test("the distributed path reads its result back without a schema-inference job") {
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L)).toDF("a", "b")
+    val viaDriver = GraphRank.pageRank(e, "a", "b").as[(Long, Long)].collect().sorted.toSeq
+    val (sqlJobs, otherJobs) = jobs {
+      assert(GraphRank.pageRank(e, "a", "b", driverMaxEdges = 0L)
+        .as[(Long, Long)].collect().sorted.toSeq == viaDriver)
+    }
+    assert(sqlJobs > 0, "the listener saw no job at all")
+    assert(otherJobs === 0)
+  }
+
   test("no fixpoint call leaves a cache entry behind, on either path") {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L)).toDF("a", "b")
     for (bound <- Seq(1000000L, 0L)) {

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dml.{IncrementalJoinRollup, IncrementalRollup, VersionedTable}
@@ -142,24 +138,11 @@ class RollupSpec extends SparkSpec {
     vt.update(col("ok") % 7 === 2, Map("qty" -> (col("qty") + 1)))
     val v = vt.currentVersion
 
-    // schema inference, for one, runs its job outside any SQL execution
-    val sqlJobs, otherJobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val inSql = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).isDefined
-        (if (inSql) sqlJobs else otherJobs).incrementAndGet()
-      }
-    }
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val (sqlJobs, otherJobs) = jobs {
       vt.read(v).collect()
       assert(view.refresh() === v)
-      ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(sqlJobs.get > 0, "the listener saw no job at all")
-    assert(otherJobs.get === 0)
+    }
+    assert(sqlJobs > 0, "the listener saw no job at all")
+    assert(otherJobs === 0)
   }
 }
