@@ -64,6 +64,14 @@ object Bench {
     (if (filtered) out else perConfig, timed.size, timed.map(math.log).sum)
   }
 
+  /** A JSON object of per-query figures, in the given order. */
+  private[graft] def jsonObject(kv: Iterable[(String, Any)]): String =
+    kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** Classes Janino has compiled in this JVM so far. */
+  private def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -191,12 +199,16 @@ object Bench {
     // Suite-length decay guard: the official r08 bench ran 324 queries
     // in ONE session and inflated 1.52× geomean vs the same code benched
     // in isolation (slowdown growing toward late deciles — accumulated
-    // codegen-cache/GC/listener debris, not plan regressions: the five
-    // worst queries reproduced 6-18× faster standalone). Restarting the
-    // session every N queries bounds that accumulation; a full GC after
-    // each restart releases the dropped session's heap before the next
-    // measurement window. Heap telemetry per query (below) makes any
-    // residual decay diagnosable from the JSON artifact alone.
+    // GC/listener debris, not plan regressions: the five worst queries
+    // reproduced 6-18× faster standalone). Restarting the session every
+    // N queries bounds that accumulation; a full GC after each restart
+    // releases the dropped session's heap before the next measurement
+    // window. Heap telemetry per query (below) makes any residual decay
+    // diagnosable from the JSON artifact alone. The generated-class
+    // cache is not such debris: it is bounded
+    // (GraftSession.CodegenCacheEntries) and belongs to the JVM, so a
+    // restart neither clears nor refills it; `codegen_compiles` records
+    // each query's misses.
     val restartEvery =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RESTART_EVERY", "60").toInt
     var sinceRestart = 0
@@ -213,6 +225,7 @@ object Bench {
     val qLoad = scala.collection.mutable.LinkedHashMap[String, Int]()
     val qGcMs = scala.collection.mutable.LinkedHashMap[String, Long]()
     val qTicks = scala.collection.mutable.LinkedHashMap[String, Int]()
+    val qCompiles = scala.collection.mutable.LinkedHashMap[String, Long]()
     def usedHeapMb(): Long = {
       val rt = Runtime.getRuntime
       (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
@@ -304,11 +317,15 @@ object Bench {
       w.jvmMax.set(corunningJvms())
       w.loadMax.set(load100())
       val gc0 = gcMillis()
+      val compiles0 = codegenCompiles()
       val t1 = timed()
       val medianUnderS =
         sys.env.getOrElse("SPARK_GRAFT_BENCH_MEDIAN_UNDER_S", "8").toDouble
       val t = if (t1 < medianUnderS) Seq(t1, timed(), timed()).sorted.apply(1) else t1
       qGcMs(name) = gcMillis() - gc0
+      // classes compiled inside the timed window: 0 while the cache
+      // holds the suite, since the untimed run compiled them first
+      qCompiles(name) = codegenCompiles() - compiles0
       qJvms(name) = w.jvmMax.get()
       qLoad(name) = w.loadMax.get()
       qTicks(name) = w.ticks.get()
@@ -320,19 +337,8 @@ object Bench {
     // end calib on the settled box separates "machine was slow" from
     // "machine was briefly contended at startup".
     val calibEnd = medianOf3(calibRun _)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val heaps = heapMb.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val jvms = qJvms.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val loads = qLoad.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val gcs = qGcMs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val ticks = qTicks.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val totalCompiles = qCompiles.values.sum
     val maxCorunners = globalJvmMax.get() max corunningJvms()
     val (gitHead, gitDirty) = gitState()
     // Self-certifying config block (VERDICT r14 what's-wrong #2): the
@@ -362,7 +368,7 @@ object Bench {
     if (advisoryReason.nonEmpty)
       System.err.println(s"[bench] ADVISORY artifact: ${advisoryReason.mkString("; ")}" +
         (if (contended.nonEmpty) s" (${contended.take(5).mkString(",")}...)" else ""))
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"calib_end":$calibEnd,"queries":$qs,"heap_mb":$heaps,"corunning_max":$jvms,"load100_max":$loads,"gc_ms":$gcs,"sampler_ticks":$ticks,"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"config":$config$advisory,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"calib_end":$calibEnd,"queries":${jsonObject(results)},"heap_mb":${jsonObject(heapMb)},"corunning_max":${jsonObject(qJvms)},"load100_max":${jsonObject(qLoad)},"gc_ms":${jsonObject(qGcMs)},"sampler_ticks":${jsonObject(qTicks)},"codegen_compiles":${jsonObject(qCompiles)},"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"config":$config$advisory,"sf":"$sfDir"}"""
     println(line)
     // Persist the full artifact — the driver's stored stdout tail clips
     // long runs, which cost round 1→2 its per-query comparison — and
@@ -390,7 +396,7 @@ object Bench {
     // map) is unchanged and still printed first.
     val (artifact, queriesN, sumLog) =
       compactSummary(results.map(_._2), out, perConfig, only.nonEmpty)
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries_n":$queriesN,"sum_log_s":$sumLog,"calib":$calib,"calib_end":$calibEnd,"cpus":$cpus,"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"artifact":${jstr(artifact)}$advisory,"sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries_n":$queriesN,"sum_log_s":$sumLog,"calib":$calib,"calib_end":$calibEnd,"codegen_compiles":$totalCompiles,"cpus":$cpus,"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"artifact":${jstr(artifact)}$advisory,"sf":"$sfDir"}"""
     println(compact)
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Session factory with the engine's scale-oriented defaults.
   *
@@ -19,8 +20,23 @@ import org.apache.spark.sql.SparkSession
   *    splitting (`docs/DiskJoinStep.md`); AQE skew-split is the analog.
   *  - shuffle.partitions: sized for local[32] here; on a real cluster
   *    AQE coalescing makes the initial number non-critical.
+  *  - codegen cache: the reference's scan/filter/join primitives are
+  *    compiled into PrimProc once; here each whole-stage class is
+  *    compiled by Janino into a JVM-wide cache whose size is read once,
+  *    when the first class is generated. `CodegenCacheEntries` holds the
+  *    whole query surface, so a query run again in the same JVM compiles
+  *    nothing (sizing and metaspace cost in `docs/MEMORY.md`).
   */
 object GraftSession {
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One pass of
+    * the 370 non-streaming queries compiles about 4,200 distinct
+    * classes and one `llm_dedup` pass 105, so at the default a warm
+    * pass recompiles most of what it runs. This is about 2× the suite,
+    * so no segment of the cache's per-segment LRU fills; `graft.Bench`'s
+    * per-query `codegen_compiles` shows when the surface outgrows it. */
+  val CodegenCacheEntries = 8192
+
   def builder(cores: String = "32"): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
@@ -61,6 +77,9 @@ object GraftSession {
       // never race on session config.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // static: takes effect only if this builder creates the JVM's
+      // first session before any class is generated (docs/MEMORY.md)
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
 
   def get(cores: String = "32"): SparkSession = {
     val s = builder(cores).getOrCreate()

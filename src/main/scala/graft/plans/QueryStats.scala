@@ -99,12 +99,15 @@ object QueryStats {
       catch { case _: Throwable => () }
   }
 
-  private val installed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  /** Sessions that carry a listener. Weak keys: a stopped, unreachable
+    * session's entry goes with it, and membership is by identity, not
+    * by an identity hash that a later session may share. */
+  private val installed = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
   def install(spark: SparkSession): Unit =
-    if (installed.add(System.identityHashCode(spark)))
-      spark.listenerManager.register(new Listener)
+    if (installed.add(spark)) spark.listenerManager.register(new Listener)
 
   def clear(): Unit = ring.clear()
 

@@ -22,4 +22,9 @@ class BenchSpec extends AnyFunSuite {
     assert(n == 2)
     assert(math.abs(math.exp(sumLog / n) - 4.0) < 1e-12)
   }
+
+  test("per-query figures print as one JSON object in query order") {
+    assert(Bench.jsonObject(Seq("q_b" -> 0L, "q_a" -> 3L)) == """{"q_b":0,"q_a":3}""")
+    assert(Bench.jsonObject(Nil) == "{}")
+  }
 }

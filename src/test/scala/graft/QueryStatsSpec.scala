@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.functions._
 import graft.plans.QueryStats
 
@@ -41,5 +42,21 @@ class QueryStatsSpec extends SparkSpec {
     }
     // newest first: every row is a local (no-file) query
     assert(rows.take(3).forall(_.getAs[Long]("files_read") === 0L))
+  }
+
+  test("a session made after install records its queries, each once") {
+    QueryStats.install(spark)
+    val other = spark.newSession()
+    QueryStats.install(other)
+    QueryStats.install(other) // idempotent: still one listener
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc) // no earlier query's row lands after the clear
+    QueryStats.clear()
+    other.range(5).agg(sum("id")).collect()
+    await("the second session's stats row") {
+      QueryStats.snapshot().headOption
+    }
+    ListenerBusDrain(sc)
+    assert(QueryStats.snapshot().size == 1)
   }
 }
