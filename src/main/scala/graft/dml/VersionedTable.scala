@@ -424,6 +424,15 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
     (after.filterNot(beforeSet), before.filterNot(afterSet))
   }
 
+  /** The rows of [[fileDiff]] with a `_sign` column: the added files'
+    * rows at +1, the removed files' at −1; None when no file changed. */
+  private[dml] def signedDiff(fromVersion: Int, toVersion: Int): Option[DataFrame] = {
+    val (added, removed) = fileDiff(fromVersion, toVersion)
+    Seq(added -> 1, removed -> -1).collect {
+      case (files, sign) if files.nonEmpty => readFiles(files).withColumn("_sign", lit(sign))
+    }.reduceOption(_ unionByName _)
+  }
+
   /** Row-level change feed between two versions (CDC) — the snapshot
     * diff the reference's version buffer makes cheap (VSS tracks which
     * blocks each transaction superseded; here the manifest diff tracks

@@ -17,10 +17,7 @@ object DmlQueries {
     // CoW DML mix + incremental rollup maintenance. The view refreshes
     // from version deltas after EVERY transaction; the oracle computes
     // the final rollup directly — equality proves the deltas composed.
-    "q_rollup_incremental" -> ((s, dir) => Q.withShufflePartitions(s, 8) {
-      // scoped 8 shuffle partitions: 7 small Spark jobs over kilobyte
-      // CDC deltas — see Q.withShufflePartitions
-      Q.withScratch(s, "graft_rollup_q") { rootP =>
+    "q_rollup_incremental" -> ((s, dir) => Q.withScratch(s, "graft_rollup_q") { rootP =>
       val root = rootP.toString
       val base = t(s, dir, "lineitem")
         .where(col("l_orderkey") % 4 === 1) // deterministic quarter —
@@ -43,7 +40,6 @@ object DmlQueries {
           col("_sum_l_quantity").cast("double").as("sum_qty"),
           round(col("_avg_l_quantity"), 6).as("avg_qty"))
         .orderBy(col("l_returnflag"))
-      }
     }),
 
     // Incremental JOIN-view maintenance (the delta-join identity
@@ -53,10 +49,7 @@ object DmlQueries {
     // principles — a hash match proves the signed deltas composed
     // through the join exactly (inserts, deletes, updates, and
     // multiset duplicate rows included).
-    "q_mv_join_delta" -> ((s, dir) => Q.withShufflePartitions(s, 8) {
-      // scoped 8 shuffle partitions: 9 small Spark jobs over the
-      // delta-join legs — see Q.withShufflePartitions
-      Q.withScratch(s, "graft_mvjoin_q") { rootP =>
+    "q_mv_join_delta" -> ((s, dir) => Q.withScratch(s, "graft_mvjoin_q") { rootP =>
       val root = rootP.toString
       val orders = t(s, dir, "orders")
       val items = t(s, dir, "lineitem")
@@ -89,7 +82,6 @@ object DmlQueries {
           col("_sum_l_quantity").cast("double").as("sum_qty"),
           col("_sum_o_totalprice").cast("double").as("sum_price"))
         .orderBy(col("o_orderstatus"), col("l_returnflag"))
-      }
     }),
 
     // MVCC time travel + ROLLBACK at the gate: every published version

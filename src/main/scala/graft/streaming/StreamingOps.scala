@@ -447,25 +447,8 @@ object StreamingOps {
     * for the same reason. AvailableNow = drain-and-stop, the
     * incremental-batch shape of `ingest`. */
   def upsertStream(docs: DataFrame, table: graft.dml.VersionedTable, key: String,
-      checkpoint: String, maxRetries: Int = 5): Unit =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          var attempt = 0
-          var done = false
-          while (!done) {
-            try { table.merge(batch, key); done = true }
-            catch { case e: graft.dml.ConcurrentWriteException =>
-              attempt += 1
-              if (attempt > maxRetries) throw e
-            }
-          }
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+      checkpoint: String): Unit =
+    upsert(docs, table, key, None, checkpoint)
 
   /** Streaming ingest with a LIVE rollup: each micro-batch merges into
     * the versioned table ([[upsertStream]] semantics), then the
@@ -480,7 +463,17 @@ object StreamingOps {
     * the table version hasn't moved. */
   def upsertStreamWithRollup(docs: DataFrame, table: graft.dml.VersionedTable,
       key: String, rollup: graft.dml.IncrementalRollup,
-      checkpoint: String, maxRetries: Int = 5): Unit =
+      checkpoint: String): Unit =
+    upsert(docs, table, key, Some(rollup), checkpoint)
+
+  /** Retries of a micro-batch's MERGE after it loses the manifest race,
+    * before the stream fails. */
+  private val MergeRetries = 5
+
+  /** The one merge-with-retry loop behind both upserts; `rollup`, when
+    * given, refreshes after each batch's merge. */
+  private def upsert(docs: DataFrame, table: graft.dml.VersionedTable, key: String,
+      rollup: Option[graft.dml.IncrementalRollup], checkpoint: String): Unit =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
@@ -490,11 +483,10 @@ object StreamingOps {
             try { table.merge(batch, key); done = true }
             catch { case e: graft.dml.ConcurrentWriteException =>
               attempt += 1
-              if (attempt > maxRetries) throw e
+              if (attempt > MergeRetries) throw e
             }
           }
-          rollup.refresh()
-          ()
+          rollup.foreach(_.refresh())
         }
       }
       .option("checkpointLocation", checkpoint)

@@ -145,4 +145,100 @@ class RollupSpec extends SparkSpec {
     assert(sqlJobs > 0, "the listener saw no job at all")
     assert(otherJobs === 0)
   }
+
+  test("a single-table refresh is one aggregate: two jobs") {
+    val (tloc, vloc) = freshDirs()
+    val vt = VersionedTable.create(spark, tloc, rightRows(0, 1200, 0))
+    val view = IncrementalRollup.create(vt, vloc, Seq("f"), Seq("qty", "w"))
+    // an update rewrites the files it touches: the diff has both
+    // added and removed files
+    vt.update(col("ok") % 7 === 1, Map("qty" -> (col("qty") + 1)))
+    val (sqlJobs, otherJobs) = jobs { view.refresh() }
+    // the fold's shuffle map stage and the state write
+    assert(sqlJobs + otherJobs === 2)
+  }
+
+  test("create over an existing rollup location starts it afresh") {
+    val (tloc, vloc) = freshDirs()
+    val vt = VersionedTable.create(spark, tloc, rightRows(0, 1200, 0))
+    val old = IncrementalRollup.create(vt, vloc, Seq("f"), Seq("qty", "w"))
+    vt.insert(rightRows(2000, 2060, 1))
+    old.refresh()
+    vt.delete(col("ok") % 5 === 0)
+    old.refresh()
+    val other = VersionedTable.create(spark, s"$tloc-other", rightRows(0, 300, 3))
+    val view = IncrementalRollup.create(other, vloc, Seq("f"), Seq("qty", "w"))
+    assert(view.baseVersion === other.currentVersion)
+    val cols = view.full().columns.toSeq
+    assert(rows(view.read(), cols) === rows(view.full(), cols))
+  }
+
+  private def liveNames(loc: String): Set[String] =
+    new java.io.File(loc).list().toSet.filterNot(_.startsWith("."))
+
+  private def generation(loc: String): Int =
+    liveNames(loc).collect { case n if n.startsWith("_meta.g") => n.stripPrefix("_meta.g").toInt }.max
+
+  /** What a publish of the next generation leaves when it is cut after
+    * writing the state and the tmp pointer but before the rename. */
+  private def interruptPublish(loc: String): Unit = {
+    val next = generation(loc) + 1
+    spark.range(3).select(col("id").cast("string").as("f"))
+      .write.parquet(s"$loc/state_g$next")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$loc/_meta.tmp$next"),
+      s"$loc/state_g$next\n0\n$next\n")
+  }
+
+  /** Interrupt a publish at `loc`, then check the residue changes
+    * neither `read` nor the next refresh, and that refresh sweeps it. */
+  private def survivesCrash(loc: String, read: () => DataFrame, full: () => DataFrame,
+      commit: () => Unit, refresh: () => Unit): Unit = {
+    val cols = full().columns.toSeq
+    val before = rows(read(), cols)
+    interruptPublish(loc)
+    assert(rows(read(), cols) === before)
+    commit()
+    refresh()
+    assert(rows(read(), cols) === rows(full(), cols))
+    val g = generation(loc)
+    assert(liveNames(loc) === Set(s"_meta.g${g - 1}", s"_meta.g$g", s"state_g${g - 1}", s"state_g$g"))
+  }
+
+  test("a reopened single-table rollup keeps its base and survives a cut publish") {
+    val (tloc, vloc) = freshDirs()
+    val vt = VersionedTable.create(spark, tloc, rightRows(0, 1200, 0))
+    val made = IncrementalRollup.create(vt, vloc, Seq("f"), Seq("qty", "w"))
+    vt.insert(rightRows(2000, 2060, 1))
+    made.refresh()
+    val view = IncrementalRollup.open(vt, vloc, Seq("f"), Seq("qty", "w"))
+    assert(view.baseVersion === made.baseVersion)
+    val cols = view.full().columns.toSeq
+    vt.delete(col("ok") % 5 === 0)
+    assert(view.refresh() === vt.currentVersion)
+    assert(rows(view.read(), cols) === rows(view.full(), cols))
+    survivesCrash(vloc, () => view.read(), () => view.full(),
+      () => { vt.update(col("ok") % 7 === 1, Map("qty" -> (col("qty") + 1))); () },
+      () => { view.refresh(); () })
+  }
+
+  test("a reopened join rollup keeps its bases and survives a cut publish") {
+    val root = java.nio.file.Files.createTempDirectory("rollup").toString
+    val a = VersionedTable.create(spark, s"$root/a", leftRows(0, 400, 0))
+    val b = VersionedTable.create(spark, s"$root/b", rightRows(0, 1200, 0))
+    def open(make: (VersionedTable, VersionedTable, String, String, String,
+        Seq[String], Seq[String]) => IncrementalJoinRollup) =
+      make(a, b, s"$root/view", "k", "ok", Seq("s", "f"), Seq("qty", "price", "w"))
+    val made = open(IncrementalJoinRollup.create)
+    b.insert(rightRows(2000, 2060, 1))
+    made.refresh()
+    val view = open(IncrementalJoinRollup.open)
+    assert(view.baseVersions === made.baseVersions)
+    val cols = view.full().columns.toSeq
+    a.delete(col("k") % 5 === 0)
+    assert(view.refresh() === ((a.currentVersion, b.currentVersion)))
+    assert(rows(view.read(), cols) === rows(view.full(), cols))
+    survivesCrash(s"$root/view", () => view.read(), () => view.full(),
+      () => { b.update(col("ok") % 7 === 1, Map("qty" -> (col("qty") + 1))); () },
+      () => { view.refresh(); () })
+  }
 }
