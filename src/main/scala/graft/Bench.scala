@@ -72,6 +72,24 @@ object Bench {
   private def codegenCompiles(): Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
+  /** Jobs started so far by every SparkContext [[countJobs]] was given:
+    * the session restarts make a new context each time, and each new
+    * one gets the same counting listener. */
+  private val jobsStarted = new java.util.concurrent.atomic.AtomicLong
+  private val jobCounter = new org.apache.spark.scheduler.SparkListener {
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobsStarted.incrementAndGet()
+  }
+  private[graft] def countJobs(spark: SparkSession): Unit =
+    spark.sparkContext.addSparkListener(jobCounter)
+
+  /** Jobs started so far, read once the listener bus has delivered
+    * every queued event. */
+  private[graft] def jobsSoFar(spark: SparkSession): Long = {
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    jobsStarted.get
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -121,6 +139,7 @@ object Bench {
     sampler.setDaemon(true)
     sampler.start()
     var spark = GraftSession.get(cpus)
+    countJobs(spark)
     Tables.registerAll(spark, sfDir) // once — not per query (re-done on restart)
     // untimed warmup: JIT the scan/shuffle/agg paths so the first
     // measured query isn't charged for JVM compilation
@@ -226,6 +245,7 @@ object Bench {
     val qGcMs = scala.collection.mutable.LinkedHashMap[String, Long]()
     val qTicks = scala.collection.mutable.LinkedHashMap[String, Int]()
     val qCompiles = scala.collection.mutable.LinkedHashMap[String, Long]()
+    val qJobs = scala.collection.mutable.LinkedHashMap[String, Long]()
     def usedHeapMb(): Long = {
       val rt = Runtime.getRuntime
       (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
@@ -254,6 +274,7 @@ object Bench {
         SparkSession.clearDefaultSession()
         System.gc()
         spark = GraftSession.get(cpus)
+        countJobs(spark)
         Tables.registerAll(spark, sfDir)
         try calibRun() catch { case _: Throwable => } // re-JIT the new session
         stabilizeNext = 3
@@ -318,6 +339,7 @@ object Bench {
       w.loadMax.set(load100())
       val gc0 = gcMillis()
       val compiles0 = codegenCompiles()
+      val jobs0 = jobsSoFar(spark)
       val t1 = timed()
       val medianUnderS =
         sys.env.getOrElse("SPARK_GRAFT_BENCH_MEDIAN_UNDER_S", "8").toDouble
@@ -326,6 +348,8 @@ object Bench {
       // classes compiled inside the timed window: 0 while the cache
       // holds the suite, since the untimed run compiled them first
       qCompiles(name) = codegenCompiles() - compiles0
+      // jobs launched by the timed runs (one, or three for a median)
+      qJobs(name) = jobsSoFar(spark) - jobs0
       qJvms(name) = w.jvmMax.get()
       qLoad(name) = w.loadMax.get()
       qTicks(name) = w.ticks.get()
@@ -339,6 +363,7 @@ object Bench {
     val calibEnd = medianOf3(calibRun _)
     val total = results.map(_._2).sum
     val totalCompiles = qCompiles.values.sum
+    val totalJobs = qJobs.values.sum
     val maxCorunners = globalJvmMax.get() max corunningJvms()
     val (gitHead, gitDirty) = gitState()
     // Self-certifying config block (VERDICT r14 what's-wrong #2): the
@@ -368,7 +393,7 @@ object Bench {
     if (advisoryReason.nonEmpty)
       System.err.println(s"[bench] ADVISORY artifact: ${advisoryReason.mkString("; ")}" +
         (if (contended.nonEmpty) s" (${contended.take(5).mkString(",")}...)" else ""))
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"calib_end":$calibEnd,"queries":${jsonObject(results)},"heap_mb":${jsonObject(heapMb)},"corunning_max":${jsonObject(qJvms)},"load100_max":${jsonObject(qLoad)},"gc_ms":${jsonObject(qGcMs)},"sampler_ticks":${jsonObject(qTicks)},"codegen_compiles":${jsonObject(qCompiles)},"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"config":$config$advisory,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"calib_end":$calibEnd,"queries":${jsonObject(results)},"heap_mb":${jsonObject(heapMb)},"corunning_max":${jsonObject(qJvms)},"load100_max":${jsonObject(qLoad)},"gc_ms":${jsonObject(qGcMs)},"sampler_ticks":${jsonObject(qTicks)},"codegen_compiles":${jsonObject(qCompiles)},"jobs":${jsonObject(qJobs)},"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"config":$config$advisory,"sf":"$sfDir"}"""
     println(line)
     // Persist the full artifact — the driver's stored stdout tail clips
     // long runs, which cost round 1→2 its per-query comparison — and
@@ -396,7 +421,7 @@ object Bench {
     // map) is unchanged and still printed first.
     val (artifact, queriesN, sumLog) =
       compactSummary(results.map(_._2), out, perConfig, only.nonEmpty)
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries_n":$queriesN,"sum_log_s":$sumLog,"calib":$calib,"calib_end":$calibEnd,"codegen_compiles":$totalCompiles,"cpus":$cpus,"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"artifact":${jstr(artifact)}$advisory,"sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries_n":$queriesN,"sum_log_s":$sumLog,"calib":$calib,"calib_end":$calibEnd,"codegen_compiles":$totalCompiles,"jobs":$totalJobs,"cpus":$cpus,"corunning_jvms":$maxCorunners,"git_head":"$gitHead","git_dirty":$gitDirty,"artifact":${jstr(artifact)}$advisory,"sf":"$sfDir"}"""
     println(compact)
     spark.stop()
   }

@@ -1,8 +1,15 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
+
+import graft.functions.TextKernels
+import graft.operators.Fixpoint
 
 /** Deduplication operators: exact, MinHash-LSH, SimHash, and n-gram
   * Jaccard verification — the near-dup toolchain of a training-data
@@ -507,13 +514,14 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       shingleN: Int = 3,
-      threshold: Double = 0.6): DataFrame = {
+      threshold: Double = 0.6,
+      driverMaxDocs: Long = DriverMaxDocs): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
     require(threshold > 0, "threshold must be positive (zero-overlap pairs are never emitted)")
     require(numHashes == 64, "the minhash64 kernel signature is fixed at 64 hashes")
-    setSimilarityJoin(docs, id, text, shingleN, Jaccard, threshold)(
-      minhashCandidates(_, bands, shingleN, _))
+    setSimilarityJoin(docs, id, text, shingleN, Jaccard, threshold, driverMaxDocs)(
+      minhashCandidates(_, bands, shingleN, _))(minhashDriverCandidates(_, bands, _))
   }
 
   /** LSH candidate pairs (id_a < id_b) of [[minhashDupPairs]] over an
@@ -545,17 +553,39 @@ object Dedup {
       .distinct() // a pair can collide in several bands
   }
 
+  /** [[minhashCandidates]] on the driver: every pair (id_a < id_b)
+    * sharing a `_bucket` value — the [[minhashBandBuckets]] key, the
+    * Murmur3 fold (seed 42) of the band number and its signature
+    * rows, so two bands whose keys collide pair as they do there. */
+  private def minhashDriverCandidates(d: DriverDocs, bands: Int, out: PairSet): Unit = {
+    val rowsPerBand = 64 / bands
+    val buckets = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
+    for (i <- 0 until d.n) {
+      val sig = TextKernels.minhash(d.texts(i), d.shingleN).toIntArray
+      for (b <- 0 until bands) {
+        var h = Murmur3_x86_32.hashInt(b, 42)
+        for (r <- 0 until rowsPerBand) h = Murmur3_x86_32.hashInt(sig(b * rowsPerBand + r), h)
+        buckets.getOrElseUpdate(h, mutable.ArrayBuffer.empty) += i
+      }
+    }
+    for (m <- buckets.valuesIterator; x <- m; y <- m if d.key(x) < d.key(y)) out.add(x, y)
+  }
+
   /** The similarity a text pair join verifies: its output column,
     * whether its pairs are directed, and its quotient over the
     * intersection size `_inter` = |A∩B| and the set sizes `_na` = |A|
     * and `_nb` = |B|. */
   private sealed abstract class Measure(val name: String, val directed: Boolean) {
     def value: Column
+    /** [[value]] in driver arithmetic: the same int sums and one
+      * double division, so the same double. */
+    def of(inter: Int, na: Int, nb: Int): Double
   }
 
   /** |A∩B| / |A∪B|; undirected, so each pair once with id_a < id_b. */
   private case object Jaccard extends Measure("jaccard", directed = false) {
     def value: Column = col("_inter") / (col("_na") + col("_nb") - col("_inter"))
+    def of(inter: Int, na: Int, nb: Int): Double = inter.toDouble / (na + nb - inter)
   }
 
   /** |A∩B| / |A|; DIRECTED — (a, b) and (b, a) are two pairs, and
@@ -563,13 +593,39 @@ object Dedup {
     * corrupt the value). */
   private case object Containment extends Measure("containment", directed = true) {
     def value: Column = col("_inter").cast(DoubleType) / col("_na")
+    def of(inter: Int, na: Int, nb: Int): Double = inter.toDouble / na
   }
 
   /** The set-similarity join of [[minhashDupPairs]],
-    * [[jaccardDupPairs]] and [[containmentDupPairs]]: exact-twin
-    * collapse → the operator's `candidates` (id_a, id_b) over an
-    * (_id, _t) frame and whether that frame is `collapsed` → one
-    * exact [[verify]] under `m`.
+    * [[jaccardDupPairs]] and [[containmentDupPairs]]: the pairs of
+    * documents with a non-NULL id and a non-NULL text whose `m` value
+    * is ≥ `threshold`, among the operator's candidates.
+    *
+    * DRIVER OR DISTRIBUTED, one gate ([[graft.operators.Fixpoint.gate]],
+    * the one shared with the fixpoint operators): when the (id, text)
+    * frame's optimized size estimate is over the budget —
+    * `driverMaxDocs` rows, ceilinged by `spark.driver.maxResultSize` —
+    * the distributed plan below runs unchanged, with no gate job;
+    * otherwise ONE bounded-collect job returns the rows (no persist,
+    * no staging) and the driver step computes the pairs. It uses the
+    * distributed path's kernels and arithmetic, so it returns the
+    * same rows bit for bit (FixpointSpec pins the two against each
+    * other): `TextKernels.shingleSet` hashed by XXH64 seed 42 for the
+    * sets, `TextKernels.minhash` and the Murmur3 `hash(b, sig…)` fold
+    * for band keys, the operator's own candidate rule (band buckets;
+    * the df-ranked prefix with the length and positional bounds), and
+    * [[Measure.of]] for the value, where `_inter` counts distinct
+    * hashes and `_n` distinct strings. It falls back to the
+    * distributed path for non-integral ids (no job at all), repeated
+    * ids, or more than `driverMaxDocs` candidate pairs (k identical
+    * texts make k² pairs). Its result is ONE partition
+    * ([[graft.operators.Fixpoint.localResult]]): a handful of pair
+    * rows spread over `defaultParallelism` partitions would make a
+    * consumer's sort sample and shuffle them.
+    *
+    * DISTRIBUTED: exact-twin collapse → the operator's `candidates`
+    * (id_a, id_b) over an (_id, _t) frame and whether that frame is
+    * `collapsed` → one exact [[verify]] under `m`.
     *
     * EXACT-TWIN COLLAPSE (round 12): identical texts share the
     * signature, every band bucket, every prefix shingle and the
@@ -581,10 +637,11 @@ object Dedup {
     * emitted directly (each exactly once, no banding, no distinct),
     * and qualifying representative pairs expand to member pairs —
     * cross-class similarity is a pure function of the two contents.
-    * NULL texts never verify into a pair (NULL shingle set); both
-    * branches drop them up front, so a NULL-heavy corpus cannot form a
-    * degenerate class. Reference analog: the dictionary scan dedups
-    * tokens before its join (`dbcon/joblist/pdictionaryscan.cpp`).
+    * NULL texts never verify into a pair (NULL shingle set) and a
+    * NULL id never pairs; both are dropped up front, so neither a
+    * NULL-heavy corpus nor a NULL-id twin can form a degenerate class.
+    * Reference analog: the dictionary scan dedups tokens before its
+    * join (`dbcon/joblist/pdictionaryscan.cpp`).
     *
     * ADAPTIVE: one cheap probe job (any md5 class with ≥ 2 members?)
     * picks the plan. A clone-free corpus — the common case after an
@@ -594,26 +651,118 @@ object Dedup {
     * groupBy and gets O(classes) candidate work instead of O(docs).
     * Not for AnnSearch (class value is a computed self-cosine, not 1.0) or bandedHashPairs (hamming). */
   private def setSimilarityJoin(docs: DataFrame, id: String, text: String, shingleN: Int,
-      m: Measure, threshold: Double)(candidates: (DataFrame, Boolean) => DataFrame)
-      : DataFrame = {
-    val (base, reps, hasTwins) = textClasses(docs, id, text)
-    def pairs(frame: DataFrame, collapsed: Boolean) = {
-      val d = frame.select(col("_id"), col("_t"))
-      verify(candidates(d, collapsed), d, shingleN, m, threshold)
+      m: Measure, threshold: Double, driverMaxDocs: Long)(
+      candidates: (DataFrame, Boolean) => DataFrame)(
+      driverCandidates: (DriverDocs, PairSet) => Unit): DataFrame = {
+    val named = docs.filter(col(id).isNotNull && col(text).isNotNull)
+      .select(col(id), col(text))
+    val idField = named.schema.head
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(idField.dataType)
+    Fixpoint.gate(named, if (integral) driverMaxDocs else 0L, byEstimate = true)
+      .flatMap(driverJoin(_, shingleN, m, threshold, driverMaxDocs)(driverCandidates)) match {
+      case Some(rows) =>
+        Fixpoint.localResult(docs.sparkSession, rows, StructType(Seq(
+          idField.copy(name = "id_a"), idField.copy(name = "id_b"),
+          StructField(m.name, DoubleType))))
+      case None =>
+        val (base, reps, hasTwins) = textClasses(named, id, text)
+        def pairs(frame: DataFrame, collapsed: Boolean) = {
+          val d = frame.select(col("_id"), col("_t"))
+          verify(candidates(d, collapsed), d, shingleN, m, threshold)
+        }
+        if (!hasTwins) pairs(base, collapsed = false)
+        else twinClassPairs(base, m, threshold)
+          .unionByName(expandTextClassPairs(pairs(reps, collapsed = true), reps, base, m))
     }
-    if (!hasTwins) pairs(base, collapsed = false)
-    else twinClassPairs(base, m, threshold)
-      .unionByName(expandTextClassPairs(pairs(reps, collapsed = true), reps, base, m))
   }
 
-  /** (base, reps, hasTwins) of the md5(text) exact-twin collapse:
-    * `base` is the NULL-text-free (_id, _t, _ck) frame; `reps` is one
-    * representative (min id) per distinct content — or `base` itself
-    * when the probe finds no class with ≥ 2 members (collapse would be
-    * pure overhead). */
-  private def textClasses(docs: DataFrame, id: String, text: String)
+  /** Driver-step budget of the set-similarity join: documents
+    * collected, and candidate pairs held. Set at the measured
+    * crossover (4-vCPU host, `local[4]`, wall time of one collected
+    * call, driver step / distributed plan): two replicas of the
+    * `ScaleUp` ×10 copy of sf0.1, 10,000 docs (6,024 jaccard pairs),
+    * minhash 0.99 / 1.66 s, jaccard 3.9–4.2 / 4.7–4.8 s, containment
+    * 4.5 / 4.4 s; four replicas, 20,000 docs (34,096 pairs), jaccard
+    * 14.2–15.9 / 11.2–12.5 s. The copy's variants make pairs grow
+    * faster than documents, and the one-thread driver step loses past
+    * about 10,000 documents. An earlier build of the driver step
+    * (which also indexed every Jaccard posting) measured sf0.1, 5,000
+    * docs, at jaccard 1.18 / 2.66 s, minhash 0.53 / 1.20 s,
+    * containment 1.17 / 2.40 s, and the whole ×10 copy, 50,000 docs
+    * (250,600 pairs), at jaccard 103–109 / 49–52 s. */
+  private val DriverMaxDocs = 10000L
+
+  /** The collected docs of the driver step: ids as collected and as
+    * Longs, and per doc the `shingle_set` kernel's distinct strings
+    * hashed by XXH64 seed 42 in kernel order — one Long per string,
+    * exactly the `_set` of [[hashedShingleSets]], whose length is `_n`. */
+  private final class DriverDocs(rows: Array[Row], val shingleN: Int) {
+    val n: Int = rows.length
+    val ids: Array[Any] = rows.map(_.get(0))
+    val key: Array[Long] = ids.map(_.asInstanceOf[Number].longValue)
+    val texts: Array[String] = rows.map(_.getString(1))
+    val sets: Array[Array[Long]] = texts.map { t =>
+      val a = TextKernels.shingleSet(t, shingleN)
+      Array.tabulate(a.numElements)(i => XXH64.hashUTF8String(a.getUTF8String(i), 42L))
+    }
+  }
+
+  /** Distinct candidate pairs of collected-doc indices, at most `max`
+    * of them: one more aborts the driver step ([[TooManyPairs]]). */
+  private final class PairSet(max: Long) {
+    private val held = new java.util.HashSet[java.lang.Long]()
+    def add(i: Int, j: Int): Unit =
+      if (held.add((i.toLong << 32) | j) && held.size > max) throw TooManyPairs
+    def pairs: Seq[(Int, Int)] = {
+      import scala.jdk.CollectionConverters._
+      held.asScala.toSeq.map(p => ((p >>> 32).toInt, p.toInt))
+    }
+  }
+
+  private object TooManyPairs extends scala.util.control.ControlThrowable
+
+  /** Driver step of [[setSimilarityJoin]] over the collected (id,
+    * text) rows: `candidates`, then the exact verify — |A∩B| over the
+    * distinct hashes, [[Measure.of]], the threshold — as rows (id_a,
+    * id_b, value) sorted by ids. None (run distributed) when an id
+    * repeats or the candidates pass `maxPairs`. */
+  private def driverJoin(rows: Array[Row], shingleN: Int, m: Measure, threshold: Double,
+      maxPairs: Long)(candidates: (DriverDocs, PairSet) => Unit): Option[Seq[Row]] = {
+    val d = new DriverDocs(rows, shingleN)
+    if (d.key.distinct.length != d.n) None
+    else {
+      val cand = new PairSet(maxPairs)
+      try candidates(d, cand) catch { case TooManyPairs => return None }
+      val sorted = d.sets.map { s =>
+        val a = s.sorted
+        var u = 0
+        for (k <- a.indices if k == 0 || a(k) != a(k - 1)) { a(u) = a(k); u += 1 }
+        a.take(u)
+      }
+      def inter(a: Array[Long], b: Array[Long]): Int = {
+        var i, j, k = 0
+        while (i < a.length && j < b.length) {
+          if (a(i) < b(j)) i += 1
+          else if (a(i) > b(j)) j += 1
+          else { k += 1; i += 1; j += 1 }
+        }
+        k
+      }
+      Some(cand.pairs.sortBy { case (x, y) => (d.key(x), d.key(y)) }.flatMap { case (x, y) =>
+        val v = m.of(inter(sorted(x), sorted(y)), d.sets(x).length, d.sets(y).length)
+        if (v >= threshold) Some(Row(d.ids(x), d.ids(y), v)) else None
+      })
+    }
+  }
+
+  /** (base, reps, hasTwins) of the md5(text) exact-twin collapse over
+    * the NULL-free (id, text) frame `named`: `base` is its (_id, _t,
+    * _ck) projection; `reps` is one representative (min id) per
+    * distinct content — or `base` itself when the probe finds no
+    * class with ≥ 2 members (collapse would be pure overhead). */
+  private def textClasses(named: DataFrame, id: String, text: String)
       : (DataFrame, DataFrame, Boolean) = {
-    val base = docs.filter(col(text).isNotNull)
+    val base = named
       .select(col(id).as("_id"), col(text).as("_t"), md5(col(text)).as("_ck"))
     val hasTwins = !base.groupBy(col("_ck")).agg(count(lit(1)).as("_k"))
       .filter(col("_k") > 1).isEmpty
@@ -740,10 +889,11 @@ object Dedup {
   def jaccardDupPairs(
       docs: DataFrame, threshold: Double,
       id: String = "doc_id", text: String = "text", shingleN: Int = 3,
-      prefixFilter: Boolean = true): DataFrame = {
+      prefixFilter: Boolean = true, driverMaxDocs: Long = DriverMaxDocs): DataFrame = {
     require(threshold > 0, "threshold must be positive (zero-overlap pairs are never emitted)")
-    setSimilarityJoin(docs, id, text, shingleN, Jaccard, threshold)((d, _) =>
-      jaccardCandidates(d, shingleN, threshold, prefixFilter))
+    setSimilarityJoin(docs, id, text, shingleN, Jaccard, threshold, driverMaxDocs)((d, _) =>
+      jaccardCandidates(d, shingleN, threshold, prefixFilter))(
+      jaccardDriverCandidates(_, threshold, prefixFilter, _))
   }
 
   /** Per-doc shingle sets of an (_id, _t) frame for the candidate
@@ -899,6 +1049,47 @@ object Dedup {
       .distinct()
   }
 
+  /** [[rankedPrefix]] on the driver: per doc, each hashed shingle's
+    * rank under the global (df asc, hash asc) order — 1 for every
+    * entry without `prefixFilter` — as postings (doc, rank) by hash:
+    * of the prefix entries, and with `index` also of every entry whose
+    * hash some prefix holds (no other entry can meet a probe). */
+  private def driverPostings(d: DriverDocs, threshold: Double, prefixFilter: Boolean,
+      index: Boolean): (Postings, Postings) = {
+    val df = mutable.HashMap.empty[Long, Long]
+    if (prefixFilter) d.sets.foreach(_.foreach(g => df(g) = df.getOrElse(g, 0L) + 1))
+    val ordered = d.sets.map(s => if (prefixFilter) s.sortBy(g => (df(g), g)) else s)
+    def post(keepIf: (Long, Int, Int) => Boolean): Postings = {
+      val p = mutable.HashMap.empty[Long, mutable.ArrayBuffer[(Int, Int)]]
+      for (i <- 0 until d.n; (g, k) <- ordered(i).iterator.zipWithIndex) {
+        val r = if (prefixFilter) k + 1 else 1
+        if (keepIf(g, i, r)) p.getOrElseUpdate(g, mutable.ArrayBuffer.empty) += ((i, r))
+      }
+      p
+    }
+    // the prefix bound of `prefixLength`, in the same arithmetic
+    val prefix = post((_, i, r) => !prefixFilter ||
+      r <= d.sets(i).length - math.ceil(threshold * d.sets(i).length - 1e-9).toLong + 1)
+    (prefix, if (index && prefixFilter) post((g, _, _) => prefix.contains(g)) else prefix)
+  }
+
+  private type Postings = mutable.HashMap[Long, mutable.ArrayBuffer[(Int, Int)]]
+
+  /** [[jaccardCandidates]] on the driver: prefix × prefix collisions
+    * (id_a < id_b) passing the same length and positional bounds. */
+  private def jaccardDriverCandidates(d: DriverDocs, threshold: Double,
+      prefixFilter: Boolean, out: PairSet): Unit = {
+    val share = threshold / (1 + threshold)
+    for (ps <- driverPostings(d, threshold, prefixFilter, index = false)._1.valuesIterator;
+        (x, ra) <- ps; (y, rb) <- ps if d.key(x) < d.key(y)) {
+      val sza = d.sets(x).length
+      val szb = d.sets(y).length
+      if (math.min(sza, szb).toDouble >= threshold * math.max(sza, szb) &&
+          1L + math.min(sza - ra, szb - rb) >= math.ceil(share * (sza + szb) - 1e-9).toLong)
+        out.add(x, y)
+    }
+  }
+
   /** Candidate-pair count of `jaccardDupPairs` at the given
     * parameterization — the measurable prefix-filter win. */
   def jaccardCandidateCount(docs: DataFrame, threshold: Double,
@@ -929,10 +1120,11 @@ object Dedup {
     * no exploded-row shuffle. */
   def containmentDupPairs(docs: DataFrame, threshold: Double,
       id: String = "doc_id", text: String = "text", shingleN: Int = 3,
-      prefixFilter: Boolean = true): DataFrame = {
+      prefixFilter: Boolean = true, driverMaxDocs: Long = DriverMaxDocs): DataFrame = {
     require(threshold > 0 && threshold <= 1, "containment threshold in (0, 1]")
-    setSimilarityJoin(docs, id, text, shingleN, Containment, threshold)((d, _) =>
-      containmentCandidates(d, shingleN, threshold, prefixFilter))
+    setSimilarityJoin(docs, id, text, shingleN, Containment, threshold, driverMaxDocs)((d, _) =>
+      containmentCandidates(d, shingleN, threshold, prefixFilter))(
+      containmentDriverCandidates(_, threshold, prefixFilter, _))
   }
 
   /** Directed candidate pairs (id_a ≠ id_b) of [[containmentDupPairs]]:
@@ -951,6 +1143,21 @@ object Dedup {
         col("_szb").cast(DoubleType) >= lit(threshold) * col("_sza") &&
         bound >= need)
       .select(col("id_a"), col("id_b")).distinct()
+  }
+
+  /** [[containmentCandidates]] on the driver: prefix × all-entries
+    * collisions (id_a ≠ id_b) passing the same bounds. */
+  private def containmentDriverCandidates(d: DriverDocs, threshold: Double,
+      prefixFilter: Boolean, out: PairSet): Unit = {
+    val (prefix, all) = driverPostings(d, threshold, prefixFilter, index = true)
+    for ((g, probe) <- prefix.iterator; (x, ra) <- probe; (y, rb) <- all(g)
+        if d.key(x) != d.key(y)) {
+      val sza = d.sets(x).length
+      val szb = d.sets(y).length
+      if (szb.toDouble >= threshold * sza &&
+          1L + math.min(sza - ra, szb - rb) >= math.ceil(threshold * sza - 1e-9).toLong)
+        out.add(x, y)
+    }
   }
 
   /** Resolution policy for [[containmentDupPairs]] output: drop every
@@ -1054,9 +1261,11 @@ object Dedup {
     }
     import scala.jdk.CollectionConverters._
     import spark.implicits._
+    // one partition, as every driver step returns (Fixpoint.localResult)
     parent.keySet().asScala.toSeq.map(x => (x, find(x)))
       .toDF("_id", "_comp")
       .select(col("_id").cast(dt).as("_id"), col("_comp").cast(dt).as("_comp"))
+      .coalesce(1)
   }
 
   /** Near-dedup'd corpus view: every clustered doc except the cluster

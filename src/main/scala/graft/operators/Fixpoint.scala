@@ -12,11 +12,11 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** The adaptive driver-or-distributed fixpoint skeleton behind
   * `GraphRank.pageRank`, `KCore.coreness`/`kCore` and
-  * `Dedup.dupClusters` — the engine's form of the reference's
-  * coordinator-vs-worker placement from a size budget
-  * (`HJUmMaxMemorySmallSide`, docs/MEMORY.md). An operator supplies
-  * its projection, its driver step and its distributed step; this
-  * object owns everything else.
+  * `Dedup.dupClusters`, and the gate of `Dedup`'s set-similarity join
+  * — the engine's form of the reference's coordinator-vs-worker
+  * placement from a size budget (`HJUmMaxMemorySmallSide`,
+  * docs/MEMORY.md). An operator supplies its projection, its driver
+  * step and its distributed step; this object owns everything else.
   *
   * Contract:
   *  - Budget ([[driverRowBudget]]): the caller's row bound, ceilinged
@@ -25,13 +25,19 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *    driver would collect past a small driver's limit and die with
   *    the refusal the gate exists to avoid; maxResultSize = 0
   *    (unlimited) keeps the caller's bound.
-  *  - One job per gate ([[adaptive]]): the input is persisted and ONE
-  *    bounded-collect job ([[collectBounded]]) returns its row count
-  *    and, within budget, every row. The same scan materializes the
-  *    cache the distributed step reads. At interactive sizes per-job
-  *    scheduling, not data, sets the cost — a distributed round pays
-  *    joins, shuffles and an action for kilobytes — which is why the
-  *    gate exists and why it is one job, not count-then-collect.
+  *  - One job per gate ([[gate]], shared with the set-similarity join
+  *    of `Dedup`): ONE bounded-collect job ([[collectBounded]]) returns
+  *    the input's row count and, within budget, every row. In
+  *    [[adaptive]] the input is persisted first, so the same scan
+  *    materializes the cache the distributed step reads. At
+  *    interactive sizes per-job scheduling, not data, sets the cost —
+  *    a distributed round pays joins, shuffles and an action for
+  *    kilobytes — which is why the gate exists and why it is one job,
+  *    not count-then-collect.
+  *  - One partition out ([[localResult]]): a driver step's rows come
+  *    back as one partition, so a consumer's sort or exchange sees a
+  *    single-partition input instead of sampling and shuffling a few
+  *    rows spread over `defaultParallelism` partitions.
   *  - Bit-identical driver steps: every recurrence run here is integer
   *    arithmetic, min-label or union-find, so a driver step is a local
   *    copy of the distributed one and returns the same rows, bit for
@@ -48,11 +54,15 @@ private[graft] object Fixpoint {
   /** Driver-collect row budget: `requested` ceilinged by
     * maxResultSize/2 at the serialized width of a `schema` row. */
   def driverRowBudget(spark: SparkSession, requested: Long, schema: StructType): Long =
-    // UnsafeRow width (null bits + 8 B per field + variable-length
-    // payload at its type's default size) + the 4 B length prefix
-    driverRowBudget(spark, requested, 4L + UnsafeRow.calculateBitSetWidthInBytes(schema.length) +
+    driverRowBudget(spark, requested, rowBytes(schema))
+
+  /** Serialized width of a `schema` row as [[collectBounded]] ships
+    * it: UnsafeRow null bits + 8 B per field + variable-length payload
+    * at its type's default size, + the 4 B length prefix. */
+  private def rowBytes(schema: StructType): Long =
+    4L + UnsafeRow.calculateBitSetWidthInBytes(schema.length) +
       schema.fields.map(f =>
-        8L + (if (UnsafeRow.isFixedLength(f.dataType)) 0 else f.dataType.defaultSize)).sum)
+        8L + (if (UnsafeRow.isFixedLength(f.dataType)) 0 else f.dataType.defaultSize)).sum
 
   /** Driver-collect row budget at a given row width: `requested`
     * ceilinged by maxResultSize/2 at `rowBytes` per row — the one
@@ -132,17 +142,42 @@ private[graft] object Fixpoint {
     }
   }
 
-  /** The gate: persist `input`, run one [[collectBounded]] at the
-    * [[driverRowBudget]] for `driverMaxRows`, then run `driver` on the
-    * collected rows or `distributed` on the persisted input inside a
-    * [[rounds]] scope staged under `stage`. The input is released in
-    * a `finally`. */
+  /** The driver-or-distributed gate: every row of `input` when it
+    * fits the [[driverRowBudget]] for `driverMaxRows`, from ONE
+    * [[collectBounded]] job; None (run distributed) otherwise. A zero
+    * budget decides None with no job. With `byEstimate`, so does an
+    * optimized-plan size estimate over the budget at [[rowBytes]] per
+    * row — right for a scan and its narrow filters and projections,
+    * whose estimate follows the file bytes; wrong for a join, whose
+    * estimate is the product of its sides and would send a small pair
+    * list distributed, which is why [[adaptive]] does not pass it. */
+  def gate(input: DataFrame, driverMaxRows: Long, byEstimate: Boolean = false)
+      : Option[Array[Row]] = {
+    val width = rowBytes(input.schema)
+    val budget = driverRowBudget(input.sparkSession, driverMaxRows, width)
+    if (budget <= 0 || byEstimate &&
+        input.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(budget) * width) None
+    else collectBounded(input, budget)._2
+  }
+
+  /** A driver step's result rows as a one-partition frame: a local
+    * relation (its size known to the planner, so joins still
+    * broadcast it) coalesced to one partition without a shuffle. */
+  def localResult(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+  }
+
+  /** The fixpoint form of [[gate]]: persist `input`, gate it for
+    * `driverMaxRows`, then run `driver` on the collected rows or
+    * `distributed` on the persisted input inside a [[rounds]] scope
+    * staged under `stage`. The input is released in a `finally`. */
   def adaptive(input: DataFrame, driverMaxRows: Long, stage: String)(
       driver: Array[Row] => DataFrame)(
       distributed: (Rounds, DataFrame) => DataFrame): DataFrame = {
     val p = input.persist(MEMORY_AND_DISK)
     try {
-      collectBounded(p, driverRowBudget(p.sparkSession, driverMaxRows, p.schema))._2 match {
+      gate(p, driverMaxRows) match {
         case Some(rows) => driver(rows)
         case None => rounds(p.sparkSession, stage)(distributed(_, p))
       }

@@ -122,6 +122,6 @@ object GraphRank {
     }
     val schema = StructType(Seq(StructField("node", nodeType), StructField("rank", LongType)))
     val rows = nodes.asScala.toSeq.map(v => Row(v, rank.get(v)))
-    spark.createDataFrame(rows.asJava, schema)
+    Fixpoint.localResult(spark, rows, schema)
   }
 }

@@ -93,7 +93,7 @@ object KCore {
     }
     val schema = StructType(Seq(StructField("node", nodeType), StructField("coreness", LongType)))
     val rows = c.entrySet().asScala.toSeq.map(kv => Row(kv.getKey, kv.getValue))
-    spark.createDataFrame(rows.asJava, schema)
+    Fixpoint.localResult(spark, rows, schema)
   }
 
   /** Full coreness: for each node, the largest k with the node in the

@@ -67,7 +67,7 @@ object LlmQueries {
       } else stamp(p).hashCode.toHexString
     } catch { case _: Throwable => "na" }
 
-  private def twinOffset(s: org.apache.spark.sql.SparkSession, dir: String,
+  private[graft] def twinOffset(s: org.apache.spark.sql.SparkSession, dir: String,
       table: String, idCol: String): Long =
     twinOffsetCache.computeIfAbsent(
       s"$dir#$table@${tableFingerprint(dir, table)}", _ => {
@@ -135,7 +135,7 @@ object LlmQueries {
     * under `id + offset` with identical payload — flips the adaptive
     * exact-twin probe so the COLLAPSED branch is the one
     * driver-gated. */
-  private def doubledBy(df: org.apache.spark.sql.DataFrame,
+  private[graft] def doubledBy(df: org.apache.spark.sql.DataFrame,
       idCol: String, offset: Long): org.apache.spark.sql.DataFrame = {
     require(offset > 0, s"twins gate: non-positive clone-id offset $offset")
     df.unionByName(df.withColumn(idCol, col(idCol) + lit(offset)))
@@ -1059,7 +1059,7 @@ object LlmQueries {
     // All-pairs ground truth: equality with the banded-LSH output also
     // MEASURES end-to-end recall (1.0 on this corpus by construction).
     "q_dedup_minhash" ->
-      """WITH sh AS (
+      ("""WITH sh AS (
         |  SELECT doc_id, list_distinct(
         |    CASE WHEN len(toks) >= 3
         |      THEN list_transform(range(1, len(toks) - 1),
@@ -1067,15 +1067,11 @@ object LlmQueries {
         |      ELSE [txt] END) AS s
         |  FROM (SELECT doc_id, lower(text) AS txt,
         |          list_filter(string_split_regex(lower(text), '[ \t\n\f\r]+'), x -> length(x) > 0) AS toks
-        |        FROM documents))
-        |SELECT id_a, id_b, jaccard FROM (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    len(list_intersect(a.s, b.s))::DOUBLE
-        |      / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-        |WHERE jaccard >= 0.6 ORDER BY id_a, id_b""".stripMargin,
+        |        FROM documents)),
+        |""" + oJaccardPairs("0.6") + """
+        |SELECT id_a, id_b, jaccard FROM pr ORDER BY id_a, id_b""").stripMargin,
     "q_dedup_jaccard" ->
-      """WITH sh AS (
+      ("""WITH sh AS (
         |  SELECT doc_id, list_distinct(
         |    CASE WHEN len(toks) >= 3
         |      THEN list_transform(range(1, len(toks) - 1),
@@ -1083,13 +1079,9 @@ object LlmQueries {
         |      ELSE [txt] END) AS s
         |  FROM (SELECT doc_id, lower(text) AS txt,
         |          list_filter(string_split_regex(lower(text), '[ \t\n\f\r]+'), x -> length(x) > 0) AS toks
-        |        FROM documents))
-        |SELECT id_a, id_b, jaccard FROM (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    len(list_intersect(a.s, b.s))::DOUBLE
-        |      / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-        |WHERE jaccard >= 0.5 ORDER BY id_a, id_b""".stripMargin,
+        |        FROM documents)),
+        |""" + oJaccardPairs("0.5") + """
+        |SELECT id_a, id_b, jaccard FROM pr ORDER BY id_a, id_b""").stripMargin,
     "q_dup_rate" ->
       """WITH grp AS (
         |  SELECT source, md5(text) AS h, count(*) AS c

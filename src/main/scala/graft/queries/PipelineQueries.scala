@@ -222,13 +222,7 @@ object PipelineQueries {
   val oracle: Map[String, String] = Map(
     "q_dedup_clusters" ->
       s"""WITH RECURSIVE $shingleCte,
-        |pr AS (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |      len(list_intersect(a.s, b.s))::DOUBLE
-        |        / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
-        |    FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-        |  WHERE jaccard >= 0.6),
+        |${oJaccardPairs("0.6")},
         |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
         |          UNION ALL SELECT id_b, id_a FROM pr),
         |reach(src, dst) AS (
@@ -243,13 +237,7 @@ object PipelineQueries {
         |FROM comp ORDER BY doc_id""".stripMargin,
     "q_dedup_resolve" ->
       s"""WITH RECURSIVE $shingleCte,
-        |pr AS (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |      len(list_intersect(a.s, b.s))::DOUBLE
-        |        / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
-        |    FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-        |  WHERE jaccard >= 0.6),
+        |${oJaccardPairs("0.6")},
         |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
         |          UNION ALL SELECT id_b, id_a FROM pr),
         |reach(src, dst) AS (
@@ -265,13 +253,7 @@ object PipelineQueries {
         |ORDER BY d.doc_id""".stripMargin,
     "q_dedup_keepbest" ->
       s"""WITH RECURSIVE $shingleCte,
-        |pr AS (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |      len(list_intersect(a.s, b.s))::DOUBLE
-        |        / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
-        |    FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-        |  WHERE jaccard >= 0.6),
+        |${oJaccardPairs("0.6")},
         |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
         |          UNION ALL SELECT id_b, id_a FROM pr),
         |reach(src, dst) AS (
@@ -295,7 +277,7 @@ object PipelineQueries {
         |WHERE c.doc_id IS NULL OR d.doc_id = k.keep_id
         |ORDER BY d.doc_id""".stripMargin,
     "q_pipeline_e2e" ->
-      """WITH RECURSIVE
+      ("""WITH RECURSIVE
         |shall AS (
         |  SELECT doc_id, list_distinct(
         |    CASE WHEN len(toks) >= 3
@@ -310,13 +292,7 @@ object PipelineQueries {
         |    SELECT d.*, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS _rn
         |    FROM documents d) WHERE _rn = 1),
         |sh AS (SELECT s.* FROM shall s JOIN d1 ON s.doc_id = d1.doc_id),
-        |pr AS (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |      len(list_intersect(a.s, b.s))::DOUBLE
-        |        / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
-        |    FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
-        |  WHERE jaccard >= 0.6),
+        |""" + oJaccardPairs("0.6") + """,
         |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
         |          UNION ALL SELECT id_b, id_a FROM pr),
         |reach(src, dst) AS (
@@ -371,7 +347,7 @@ object PipelineQueries {
         |  COUNT(DISTINCT doc_id) AS n_docs,
         |  COUNT(*) AS n_chunks,
         |  CAST(SUM(least(128, n - ci * 128)) AS BIGINT) AS sum_tokens
-        |FROM ch GROUP BY source ORDER BY source""".stripMargin,
+        |FROM ch GROUP BY source ORDER BY source""").stripMargin,
     "q_pack_sequences" ->
       """WITH tok AS (
         |  SELECT doc_id,

@@ -171,4 +171,22 @@ object Q {
   /** DuckDB twin of [[sortAll]]: DuckDB's ASC default is NULLS LAST
     * (Spark's is NULLS FIRST) — must be pinned explicitly. */
   val oSortAll: String = "ORDER BY ALL NULLS FIRST"
+
+  /** DuckDB oracle fragment: the `pr` CTE of the Jaccard ≥ `threshold`
+    * pairs (id_a < id_b, jaccard) over a `sh` CTE of per-doc distinct
+    * shingle lists (doc_id, s). Each doc's shingles are unnested and
+    * joined on the shingle, and the pair's rows counted: only pairs
+    * sharing a shingle can reach a positive threshold, so this is the
+    * all-pairs `list_intersect` answer — |A∩B| / (|A| + |B| − |A∩B|),
+    * the same BIGINT operands into one DOUBLE division — at the cost
+    * of the shared shingles instead of every pair. */
+  def oJaccardPairs(threshold: String): String =
+    s"""shn AS (SELECT doc_id, len(s) AS n, unnest(s) AS ng FROM sh),
+       |pr AS (
+       |  SELECT id_a, id_b, jaccard FROM (
+       |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |      count(*)::DOUBLE / (a.n + b.n - count(*)) AS jaccard
+       |    FROM shn a JOIN shn b ON a.ng = b.ng AND a.doc_id < b.doc_id
+       |    GROUP BY a.doc_id, b.doc_id, a.n, b.n) t
+       |  WHERE jaccard >= $threshold)""".stripMargin
 }

@@ -27,4 +27,13 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.jsonObject(Seq("q_b" -> 0L, "q_a" -> 3L)) == """{"q_b":0,"q_a":3}""")
     assert(Bench.jsonObject(Nil) == "{}")
   }
+
+  test("the job counter counts every job of a session it was given") {
+    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    Bench.countJobs(spark)
+    val j0 = Bench.jobsSoFar(spark)
+    spark.range(10).collect()
+    spark.range(20).collect()
+    assert(Bench.jobsSoFar(spark) - j0 == 2)
+  }
 }

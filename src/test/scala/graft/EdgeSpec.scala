@@ -30,12 +30,17 @@ class EdgeSpec extends SparkSpec {
     // both branches of the exact-twin collapse, with containment too:
     // `docs` holds one twin class {5, 6}; without id 6 the probe finds
     // none and the joins run straight over the NULL-free docs
+    // (driverMaxDocs = 0: the distributed plan, which holds both
+    // branches; the default bound would take the driver step here)
     for ((corpus, undirected, directed) <- Seq(
         (docs, Set((5L, 6L)), Set((5L, 6L), (6L, 5L))),
         (docs.filter(col("doc_id") =!= 6L), none, none))) {
-      assert(pairs(Dedup.minhashDupPairs(corpus, threshold = 0.5)) == undirected)
-      assert(pairs(Dedup.jaccardDupPairs(corpus, threshold = 0.5)) == undirected)
-      assert(pairs(Dedup.containmentDupPairs(corpus, threshold = 0.5)) == directed)
+      assert(pairs(Dedup.minhashDupPairs(corpus, threshold = 0.5, driverMaxDocs = 0)) ==
+        undirected)
+      assert(pairs(Dedup.jaccardDupPairs(corpus, threshold = 0.5, driverMaxDocs = 0)) ==
+        undirected)
+      assert(pairs(Dedup.containmentDupPairs(corpus, threshold = 0.5, driverMaxDocs = 0)) ==
+        directed)
     }
   }
 

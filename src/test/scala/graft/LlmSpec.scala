@@ -81,11 +81,13 @@ class LlmSpec extends SparkSpec {
   test("jaccard prefix filter: identical pairs, strictly fewer candidates") {
     // prefix filtering is exact by the pigeonhole argument — same
     // output as the unfiltered co-occurrence join at every threshold
+    // (driverMaxDocs = 0: the distributed plan; at this size the
+    // default bound would take the driver step)
     val docs = Tables.t(spark, sfDir, "documents").filter(col("doc_id") < 300)
     for (th <- Seq(0.3, 0.5, 0.8)) {
-      val pref = Dedup.jaccardDupPairs(docs, th)
+      val pref = Dedup.jaccardDupPairs(docs, th, driverMaxDocs = 0)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val naive = Dedup.jaccardDupPairs(docs, th, prefixFilter = false)
+      val naive = Dedup.jaccardDupPairs(docs, th, prefixFilter = false, driverMaxDocs = 0)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(pref == naive,
         s"t=$th missing=${naive -- pref} spurious=${pref -- naive}")
@@ -105,16 +107,17 @@ class LlmSpec extends SparkSpec {
       " while the dog slept on under the old oak tree near the river"
     val docs = Seq((1L, short_), (2L, long_), (3L, "completely different text here"))
       .toDF("doc_id", "text")
-    val got = Dedup.containmentDupPairs(docs, threshold = 0.9)
+    // (driverMaxDocs = 0 throughout: the distributed plan)
+    val got = Dedup.containmentDupPairs(docs, threshold = 0.9, driverMaxDocs = 0)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 2L)), s"got $got")   // directed: short ⊆ long only
-    assert(Dedup.jaccardDupPairs(docs, threshold = 0.5).count() == 0)
+    assert(Dedup.jaccardDupPairs(docs, threshold = 0.5, driverMaxDocs = 0).count() == 0)
     // exactness of the prefix+positional+length pruning on real docs
     val real = Tables.t(spark, sfDir, "documents").filter(col("doc_id") < 300)
     for (th <- Seq(0.5, 0.8)) {
-      val pref = Dedup.containmentDupPairs(real, th)
+      val pref = Dedup.containmentDupPairs(real, th, driverMaxDocs = 0)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val naive = Dedup.containmentDupPairs(real, th, prefixFilter = false)
+      val naive = Dedup.containmentDupPairs(real, th, prefixFilter = false, driverMaxDocs = 0)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(pref == naive,
         s"t=$th missing=${naive -- pref} spurious=${pref -- naive}")
@@ -239,11 +242,13 @@ class LlmSpec extends SparkSpec {
     // every synthetic doc ×4 exact copies — the degenerate duplicate
     // mass the r11 sf1 audit flagged. Collapse must leave the OUTPUT
     // untouched: all qualifying member pairs, each exactly once,
-    // within-class jaccard exactly 1.0.
+    // within-class jaccard exactly 1.0. (driverMaxDocs = 0 on the
+    // set-similarity joins: the collapse belongs to the distributed
+    // plan, which the default bound would skip at this size.)
     val docs = (0 to 3).map(k =>
       syntheticDocs.withColumn("doc_id", col("doc_id") + lit(100L * k)))
       .reduce(_ unionByName _)
-    val found = Dedup.minhashDupPairs(docs, threshold = 0.6)
+    val found = Dedup.minhashDupPairs(docs, threshold = 0.6, driverMaxDocs = 0)
       .as[(Long, Long, Double)].collect()
     assert(found.length == found.toSet.size, "duplicate pair rows")
     val sh = docs.select(col("doc_id").as("_id"), Dedup.shingles(col("text")).as("_sh"))
@@ -260,7 +265,7 @@ class LlmSpec extends SparkSpec {
     // the exact set-similarity join shares the collapse: identical
     // output under the SAME brute-force truth (it is exact, so the
     // pair sets coincide at any threshold where LSH has full recall)
-    val jacFound = Dedup.jaccardDupPairs(docs, threshold = 0.6)
+    val jacFound = Dedup.jaccardDupPairs(docs, threshold = 0.6, driverMaxDocs = 0)
       .select("id_a", "id_b").as[(Long, Long)].collect()
     assert(jacFound.length == jacFound.toSet.size, "duplicate pair rows (jaccard)")
     assert(jacFound.toSet == truth,
@@ -278,7 +283,7 @@ class LlmSpec extends SparkSpec {
     // truth is the all-ordered-pairs asymmetric quotient — both
     // directions inside a twin class (containment 1.0 each way),
     // direction-specific values across classes (|A∩B|/|A| ≠ |A∩B|/|B|)
-    val conFound = Dedup.containmentDupPairs(docs, threshold = 0.8)
+    val conFound = Dedup.containmentDupPairs(docs, threshold = 0.8, driverMaxDocs = 0)
       .as[(Long, Long, Double)].collect()
     assert(conFound.length == conFound.map(t => (t._1, t._2)).toSet.size,
       "duplicate pair rows (containment)")

@@ -46,10 +46,18 @@ class PlanShapeSpec extends SparkSpec {
     // post-explode size AQE cannot see, so an explicit exchange on the
     // bucket keeps the self-join parallel (docs/MEMORY.md); straight
     // off a scan the join's own exchange sees the volume, so a corpus
-    // whose probe finds no twins gets none
-    val twins = shape("q_dedup_minhash_twins")
+    // whose probe finds no twins gets none. Both are the two queries'
+    // corpora under driverMaxDocs = 0: at this size the default bound
+    // takes the driver step, which has no plan to pin.
+    import org.apache.spark.sql.functions.col
+    val d0 = Tables.t(spark, sfDir, "documents").select(col("doc_id"), col("text"))
+    def distributed(docs: org.apache.spark.sql.DataFrame) =
+      graft.llm.Dedup.minhashDupPairs(docs, threshold = 0.6, driverMaxDocs = 0)
+        .orderBy(col("id_a"), col("id_b")).queryExecution.executedPlan.toString
+    val twins = distributed(queries.LlmQueries.doubledBy(d0, "doc_id",
+      queries.LlmQueries.twinOffset(spark, sfDir, "documents", "doc_id")))
     assert(twins.contains("hashpartitioning(_bucket"), twins)
-    val plain = shape("q_dedup_minhash")
+    val plain = distributed(Tables.t(spark, sfDir, "documents"))
     assert(!plain.contains("hashpartitioning(_bucket"), plain)
   }
 
