@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -75,18 +75,23 @@ object Tables {
 
   private def schemaKey(spark: SparkSession, path: String): SchemaKey = {
     val p = new HPath(path)
-    val files = Seq.newBuilder[(String, Long, Long)]
-    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
+    val files = leafFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
     val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
         k == "spark.sql.caseSensitive"
     }
-    SchemaKey(files.result().sorted, conf.sorted)
+    SchemaKey(files.sorted, conf.sorted)
   }
+
+  /** Every file under `p` (`p` itself when it is a file), by a
+    * recursive `listStatus` walk. Not `FileSystem.listFiles`: the
+    * `LocatedFileStatus` it builds loads each entry's permissions, and
+    * without libhadoop the local filesystem forks `ls -ld` per entry
+    * for them — measured 2.7–3.3 ms per entry, against 0.04–0.06 ms
+    * for the listing alone. */
+  private[graft] def leafFiles(fs: FileSystem, p: HPath): Seq[FileStatus] =
+    fs.listStatus(p).toSeq.flatMap(f => if (f.isDirectory) leafFiles(fs, f.getPath) else Seq(f))
 
   /** Read one table path: on a hit with the cached schema (a file
     * source exposes every column nullable either way, as

@@ -47,9 +47,9 @@ trait CommitArbiter {
 
 object CommitArbiter {
 
-  /** Schemes whose Hadoop `create(path, overwrite = false)` is an
-    * atomic create-exclusive: local/POSIX (O_CREAT|O_EXCL), the HDFS
-    * family (namenode-serialized create). Deliberately conservative —
+  /** Schemes with an atomic create-exclusive: local/POSIX (an
+    * O_CREAT|O_EXCL open, which [[CreateExclusive]] makes itself) and
+    * the HDFS family (Hadoop's namenode-serialized create). Deliberately conservative —
     * `s3a`/`s3`/`s3n`/`gs`/`wasb`/`abfs` are absent even where newer
     * store APIs could support preconditions, because the Hadoop
     * connector's plain create() does not promise them; those stores
@@ -60,21 +60,32 @@ object CommitArbiter {
 
   /** Default arbiter: filesystem create-exclusive. Sound exactly on
     * [[atomicCreateSchemes]]; [[VersionedTable]] never selects it for
-    * anything else. */
+    * anything else. On `file:` the manifest is created through
+    * `java.nio.file.Files` with `CREATE_NEW` — one O_CREAT|O_EXCL open —
+    * because Hadoop's local create(overwrite = false) checks `exists`
+    * and then opens, and two processes can both pass the check
+    * (DmlCrossProcessSpec saw two winners of one version). The HDFS
+    * family keeps `fs.create`, which its namenode serializes. */
   object CreateExclusive extends CommitArbiter {
-    def publish(fs: FileSystem, path: HPath, bytes: Array[Byte]): Boolean = {
-      val out =
-        try fs.create(path, /* overwrite = */ false)
-        catch {
-          case e: java.io.IOException =>
-            // Hadoop signals an existing file as FileAlreadyExists or a
-            // bare IOException depending on the FS; disambiguate a lost
-            // race (path now exists → retryable) from a broken store
-            if (fs.exists(path)) return false else throw e
-        }
-      try out.write(bytes) finally out.close()
-      true
-    }
+    def publish(fs: FileSystem, path: HPath, bytes: Array[Byte]): Boolean =
+      if (fs.getUri.getScheme == "file") {
+        import java.nio.file.StandardOpenOption.{CREATE_NEW, WRITE}
+        val target = java.nio.file.Paths.get(fs.makeQualified(path).toUri)
+        try { java.nio.file.Files.write(target, bytes, CREATE_NEW, WRITE); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } else {
+        val out =
+          try fs.create(path, /* overwrite = */ false)
+          catch {
+            case e: java.io.IOException =>
+              // Hadoop signals an existing file as FileAlreadyExists or a
+              // bare IOException depending on the FS; disambiguate a lost
+              // race (path now exists → retryable) from a broken store
+              if (fs.exists(path)) return false else throw e
+          }
+        try out.write(bytes) finally out.close()
+        true
+      }
   }
 
   /** Object-store arbiter: delegates the atomicity to the store's

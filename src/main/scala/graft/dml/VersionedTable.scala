@@ -539,18 +539,18 @@ final class VersionedTable private (val location: String, val spark: SparkSessio
     // (a crashed winner's zero-byte/partial publish — ADVICE r14)
     val dead = valid.dropRight(keepVersions) ++
       all.filterNot(validSet).filter(tornAndExpired)
-    var removed = 0
     dead.foreach(m => { fs.delete(m, false); validCache.remove(m.toString) })
     // delete unreferenced data files (orphans of losing commits too)
-    val it = fs.listFiles(loc, /* recursive = */ true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet") && !live.contains(f.toString)) {
-        fs.delete(f, false)
-        removed += 1
-      }
-    }
-    removed
+    val unreferenced = graft.Tables.leafFiles(fs, loc).map(_.getPath)
+      .filter(f => f.getName.endsWith(".parquet") && !live.contains(f.toString))
+    unreferenced.foreach(fs.delete(_, false))
+    // then every data directory no live file is in: what is left there
+    // is a write's _SUCCESS marker and checksums
+    val liveDirs = live.map(f => new HPath(f).getParent.toString)
+    fs.listStatus(loc).map(_.getPath)
+      .filter(d => d.getName.startsWith("data_") && !liveDirs.contains(d.toString))
+      .foreach(fs.delete(_, true))
+    unreferenced.size
   }
 }
 

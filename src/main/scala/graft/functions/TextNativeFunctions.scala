@@ -279,7 +279,6 @@ object TextKernels {
     * lowercase, ASCII-ws split, n-gram join by space, whole-lowered-
     * text fallback when tokens < n. */
   def minhash(s: String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    import org.apache.spark.unsafe.hash.Murmur3_x86_32
     val lowered = s.toLowerCase
     val parts0 = AsciiWs.split(lowered)
     // drop the leading empty token a leading separator produces
@@ -290,16 +289,7 @@ object TextKernels {
     k = 0; var m = 0
     while (k < parts0.length) { if (parts0(k).nonEmpty) { toks(m) = parts0(k); m += 1 }; k += 1 }
     val sig = Array.fill(64)(Int.MaxValue)
-    def addGram(g: String): Unit = {
-      val u = UTF8String.fromString(g)
-      val h1 = Murmur3_x86_32.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42)
-      var i = 0
-      while (i < 64) {
-        val h = Murmur3_x86_32.hashInt(i, h1)
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-    }
+    def addGram(g: String): Unit = minhashAdd(sig, 0, UTF8String.fromString(g))
     if (nTok >= n) {
       val sb = new java.lang.StringBuilder
       var i = 0
@@ -312,6 +302,21 @@ object TextKernels {
       }
     } else addGram(lowered)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(sig)
+  }
+
+  /** Folds gram `u` into the 64 lanes of a [[minhash]] signature held
+    * at `sig(off until off + 64)`: lane i keeps its min with
+    * hashInt(i, hashBytes(u, 42)). A min, so folding each distinct
+    * gram once gives the signature of the gram multiset. */
+  def minhashAdd(sig: Array[Int], off: Int, u: UTF8String): Unit = {
+    import org.apache.spark.unsafe.hash.Murmur3_x86_32
+    val h1 = Murmur3_x86_32.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42)
+    var i = 0
+    while (i < 64) {
+      val h = Murmur3_x86_32.hashInt(i, h1)
+      if (h < sig(off + i)) sig(off + i) = h
+      i += 1
+    }
   }
 
   /** Distinct shingles, insertion-ordered (deterministic; consumers

@@ -1,15 +1,14 @@
 package graft.llm
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 import graft.functions.TextKernels
-import graft.operators.Fixpoint
+import graft.operators.{Csr, Fixpoint, LongIds}
 
 /** Deduplication operators: exact, MinHash-LSH, SimHash, and n-gram
   * Jaccard verification — the near-dup toolchain of a training-data
@@ -520,8 +519,9 @@ object Dedup {
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
     require(threshold > 0, "threshold must be positive (zero-overlap pairs are never emitted)")
     require(numHashes == 64, "the minhash64 kernel signature is fixed at 64 hashes")
-    setSimilarityJoin(docs, id, text, shingleN, Jaccard, threshold, driverMaxDocs)(
-      minhashCandidates(_, bands, shingleN, _))(minhashDriverCandidates(_, bands, _))
+    setSimilarityJoin(docs, id, text, shingleN, Jaccard, threshold, driverMaxDocs,
+      signatures = true)(minhashCandidates(_, bands, shingleN, _))(
+      minhashDriverCandidates(_, bands, _))
   }
 
   /** LSH candidate pairs (id_a < id_b) of [[minhashDupPairs]] over an
@@ -556,19 +556,33 @@ object Dedup {
   /** [[minhashCandidates]] on the driver: every pair (id_a < id_b)
     * sharing a `_bucket` value — the [[minhashBandBuckets]] key, the
     * Murmur3 fold (seed 42) of the band number and its signature
-    * rows, so two bands whose keys collide pair as they do there. */
+    * rows, so two bands whose keys collide pair as they do there. The
+    * buckets are runs of the sorted (bucket << 32 | doc) `long`s. */
   private def minhashDriverCandidates(d: DriverDocs, bands: Int, out: PairSet): Unit = {
     val rowsPerBand = 64 / bands
-    val buckets = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
-    for (i <- 0 until d.n) {
-      val sig = TextKernels.minhash(d.texts(i), d.shingleN).toIntArray
-      for (b <- 0 until bands) {
-        var h = Murmur3_x86_32.hashInt(b, 42)
-        for (r <- 0 until rowsPerBand) h = Murmur3_x86_32.hashInt(sig(b * rowsPerBand + r), h)
-        buckets.getOrElseUpdate(h, mutable.ArrayBuffer.empty) += i
-      }
+    val keyed = new Array[Long](d.n * bands)
+    for (i <- 0 until d.n; b <- 0 until bands) {
+      var h = Murmur3_x86_32.hashInt(b, 42)
+      for (r <- 0 until rowsPerBand) h = Murmur3_x86_32.hashInt(d.sig(i * 64 + b * rowsPerBand + r), h)
+      keyed(i * bands + b) = (h.toLong << 32) | i
     }
-    for (m <- buckets.valuesIterator; x <- m; y <- m if d.key(x) < d.key(y)) out.add(x, y)
+    java.util.Arrays.sort(keyed)
+    var from = 0
+    while (from < keyed.length) {
+      var until = from + 1
+      while (until < keyed.length && (keyed(until) >>> 32) == (keyed(from) >>> 32)) until += 1
+      var a = from
+      while (a < until) {
+        var b = a + 1
+        while (b < until) {
+          // a doc may sit in one bucket twice
+          if (keyed(a).toInt < keyed(b).toInt) out.add(keyed(a).toInt, keyed(b).toInt)
+          b += 1
+        }
+        a += 1
+      }
+      from = until
+    }
   }
 
   /** The similarity a text pair join verifies: its output column,
@@ -651,15 +665,16 @@ object Dedup {
     * groupBy and gets O(classes) candidate work instead of O(docs).
     * Not for AnnSearch (class value is a computed self-cosine, not 1.0) or bandedHashPairs (hamming). */
   private def setSimilarityJoin(docs: DataFrame, id: String, text: String, shingleN: Int,
-      m: Measure, threshold: Double, driverMaxDocs: Long)(
+      m: Measure, threshold: Double, driverMaxDocs: Long, signatures: Boolean = false)(
       candidates: (DataFrame, Boolean) => DataFrame)(
       driverCandidates: (DriverDocs, PairSet) => Unit): DataFrame = {
     val named = docs.filter(col(id).isNotNull && col(text).isNotNull)
       .select(col(id), col(text))
     val idField = named.schema.head
-    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(idField.dataType)
+    val integral = Fixpoint.integral(idField.dataType)
     Fixpoint.gate(named, if (integral) driverMaxDocs else 0L, byEstimate = true)
-      .flatMap(driverJoin(_, shingleN, m, threshold, driverMaxDocs)(driverCandidates)) match {
+      .flatMap(driverJoin(_, idField.dataType, shingleN, m, threshold, driverMaxDocs,
+        signatures)(driverCandidates)) match {
       case Some(rows) =>
         Fixpoint.localResult(docs.sparkSession, rows, StructType(Seq(
           idField.copy(name = "id_a"), idField.copy(name = "id_b"),
@@ -679,78 +694,116 @@ object Dedup {
   /** Driver-step budget of the set-similarity join: documents
     * collected, and candidate pairs held. Set at the measured
     * crossover (4-vCPU host, `local[4]`, wall time of one collected
-    * call, driver step / distributed plan): two replicas of the
-    * `ScaleUp` ×10 copy of sf0.1, 10,000 docs (6,024 jaccard pairs),
-    * minhash 0.99 / 1.66 s, jaccard 3.9–4.2 / 4.7–4.8 s, containment
-    * 4.5 / 4.4 s; four replicas, 20,000 docs (34,096 pairs), jaccard
-    * 14.2–15.9 / 11.2–12.5 s. The copy's variants make pairs grow
-    * faster than documents, and the one-thread driver step loses past
-    * about 10,000 documents. An earlier build of the driver step
-    * (which also indexed every Jaccard posting) measured sf0.1, 5,000
-    * docs, at jaccard 1.18 / 2.66 s, minhash 0.53 / 1.20 s,
-    * containment 1.17 / 2.40 s, and the whole ×10 copy, 50,000 docs
-    * (250,600 pairs), at jaccard 103–109 / 49–52 s. */
+    * call, driver step / distributed plan, two runs each), measured
+    * again once the driver step ran over primitive arrays, on sf0.1's
+    * documents scaled by `ScaleUp` (variant replicas, the first two and
+    * four of its ×10 copy; jaccard at 0.6, containment at 0.8).
+    * 10,000 docs (6,024 jaccard pairs): jaccard 0.69–1.44 / 3.05–7.51 s, minhash
+    * 0.45–0.62 / 1.42–2.76 s, containment 1.00–1.16 / 3.18–4.29 s.
+    * 20,000 docs (34,096 pairs): jaccard 6.25–7.49 / 5.91–6.55 s,
+    * minhash 0.79–0.84 / 1.91–2.41 s, containment 7.42–8.25 /
+    * 6.10–6.19 s. The copy's variants make candidates grow faster
+    * than documents, and the one-thread prefix joins lose by 20,000
+    * documents, so the bound stays at 10,000. The boxed driver step
+    * before it measured jaccard 3.9–4.2 / 4.7–4.8 s at 10,000 docs
+    * and 14.2–15.9 / 11.2–12.5 s at 20,000. */
   private val DriverMaxDocs = 10000L
 
-  /** The collected docs of the driver step: ids as collected and as
-    * Longs, and per doc the `shingle_set` kernel's distinct strings
-    * hashed by XXH64 seed 42 in kernel order — one Long per string,
-    * exactly the `_set` of [[hashedShingleSets]], whose length is `_n`. */
-  private final class DriverDocs(rows: Array[Row], val shingleN: Int) {
-    val n: Int = rows.length
-    val ids: Array[Any] = rows.map(_.get(0))
-    val key: Array[Long] = ids.map(_.asInstanceOf[Number].longValue)
-    val texts: Array[String] = rows.map(_.getString(1))
-    val sets: Array[Array[Long]] = texts.map { t =>
-      val a = TextKernels.shingleSet(t, shingleN)
-      Array.tabulate(a.numElements)(i => XXH64.hashUTF8String(a.getUTF8String(i), 42L))
+  /** The collected docs of the driver step, indexed in ascending id
+    * order (so doc order IS id order): ids as `long`s, and per doc
+    * the `shingle_set` kernel's distinct strings hashed by XXH64 seed
+    * 42 — exactly the `_set` of [[hashedShingleSets]], whose length is
+    * `_n` — held ascending in one flat array, doc i's at
+    * `start(i) until start(i + 1)`. Each text is shingled once; with
+    * `signatures` the same distinct strings also fold into doc i's
+    * [[TextKernels.minhash]] signature at `sig(64·i until 64·i + 64)`
+    * (a min over the set is the min over the multiset the kernel
+    * walks, so the signature is the kernel's bit for bit). */
+  private final class DriverDocs(val key: Array[Long], texts: Array[String],
+      val shingleN: Int, signatures: Boolean) {
+    val n: Int = key.length
+    val start = new Array[Int](n + 1)
+    val sig: Array[Int] = if (signatures) Array.fill(64 * n)(Int.MaxValue) else null
+    private var buf = new Array[Long](math.max(16, 8 * n))
+    for (i <- 0 until n) {
+      val a = TextKernels.shingleSet(texts(i), shingleN)
+      val from = start(i)
+      if (from + a.numElements > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, from + a.numElements))
+      var k = 0
+      while (k < a.numElements) {
+        val u = a.getUTF8String(k)
+        buf(from + k) = XXH64.hashUTF8String(u, 42L)
+        if (signatures) TextKernels.minhashAdd(sig, 64 * i, u)
+        k += 1
+      }
+      start(i + 1) = from + a.numElements
+      java.util.Arrays.sort(buf, from, start(i + 1))
+    }
+    /** Every doc's hashes, ascending within each doc. */
+    val hashes: Array[Long] = java.util.Arrays.copyOf(buf, start(n))
+    buf = null
+
+    /** `_n` of doc i. */
+    def size(i: Int): Int = start(i + 1) - start(i)
+
+    /** |A∩B| over the distinct hashes of docs x and y. */
+    def inter(x: Int, y: Int): Int = {
+      var i = start(x)
+      var j = start(y)
+      var k = 0
+      while (i < start(x + 1) && j < start(y + 1)) {
+        val a = hashes(i)
+        if (a < hashes(j)) i += 1
+        else if (a > hashes(j)) j += 1
+        else {
+          k += 1
+          while (i < start(x + 1) && hashes(i) == a) i += 1
+          while (j < start(y + 1) && hashes(j) == a) j += 1
+        }
+      }
+      k
     }
   }
 
   /** Distinct candidate pairs of collected-doc indices, at most `max`
     * of them: one more aborts the driver step ([[TooManyPairs]]). */
   private final class PairSet(max: Long) {
-    private val held = new java.util.HashSet[java.lang.Long]()
+    private val held = new LongIds()
     def add(i: Int, j: Int): Unit =
       if (held.add((i.toLong << 32) | j) && held.size > max) throw TooManyPairs
-    def pairs: Seq[(Int, Int)] = {
-      import scala.jdk.CollectionConverters._
-      held.asScala.toSeq.map(p => ((p >>> 32).toInt, p.toInt))
-    }
+    /** The pairs as (i << 32 | j), ascending: (i, j) order. */
+    def sorted: Array[Long] = { val a = held.toArray; java.util.Arrays.sort(a); a }
   }
 
   private object TooManyPairs extends scala.util.control.ControlThrowable
 
   /** Driver step of [[setSimilarityJoin]] over the collected (id,
-    * text) rows: `candidates`, then the exact verify — |A∩B| over the
-    * distinct hashes, [[Measure.of]], the threshold — as rows (id_a,
-    * id_b, value) sorted by ids. None (run distributed) when an id
-    * repeats or the candidates pass `maxPairs`. */
-  private def driverJoin(rows: Array[Row], shingleN: Int, m: Measure, threshold: Double,
-      maxPairs: Long)(candidates: (DriverDocs, PairSet) => Unit): Option[Seq[Row]] = {
-    val d = new DriverDocs(rows, shingleN)
-    if (d.key.distinct.length != d.n) None
+    * text) rows of integral `idType`: `candidates`, then the exact
+    * verify — |A∩B| over the distinct hashes, [[Measure.of]], the
+    * threshold — as rows (id_a, id_b, value) sorted by ids. None (run
+    * distributed) when an id repeats or the candidates pass
+    * `maxPairs`. */
+  private def driverJoin(rows: Array[InternalRow], idType: DataType, shingleN: Int,
+      m: Measure, threshold: Double, maxPairs: Long, signatures: Boolean)(
+      candidates: (DriverDocs, PairSet) => Unit): Option[Seq[Row]] = {
+    val key = Array.tabulate(rows.length)(r => Fixpoint.longAt(rows(r), 0, idType))
+    val byRow = new LongIds(rows.length)
+    key.foreach(byRow.add)
+    if (byRow.size != rows.length) None
     else {
+      val sorted = key.clone
+      java.util.Arrays.sort(sorted)
+      val d = new DriverDocs(sorted,
+        sorted.map(k => rows(byRow.find(k)).getUTF8String(1).toString), shingleN, signatures)
       val cand = new PairSet(maxPairs)
       try candidates(d, cand) catch { case TooManyPairs => return None }
-      val sorted = d.sets.map { s =>
-        val a = s.sorted
-        var u = 0
-        for (k <- a.indices if k == 0 || a(k) != a(k - 1)) { a(u) = a(k); u += 1 }
-        a.take(u)
-      }
-      def inter(a: Array[Long], b: Array[Long]): Int = {
-        var i, j, k = 0
-        while (i < a.length && j < b.length) {
-          if (a(i) < b(j)) i += 1
-          else if (a(i) > b(j)) j += 1
-          else { k += 1; i += 1; j += 1 }
-        }
-        k
-      }
-      Some(cand.pairs.sortBy { case (x, y) => (d.key(x), d.key(y)) }.flatMap { case (x, y) =>
-        val v = m.of(inter(sorted(x), sorted(y)), d.sets(x).length, d.sets(y).length)
-        if (v >= threshold) Some(Row(d.ids(x), d.ids(y), v)) else None
+      Some(cand.sorted.toSeq.flatMap { p =>
+        val (x, y) = ((p >>> 32).toInt, p.toInt)
+        val v = m.of(d.inter(x, y), d.size(x), d.size(y))
+        if (v >= threshold)
+          Some(Row(Fixpoint.ofLong(d.key(x), idType), Fixpoint.ofLong(d.key(y), idType), v))
+        else None
       })
     }
   }
@@ -1049,44 +1102,91 @@ object Dedup {
       .distinct()
   }
 
-  /** [[rankedPrefix]] on the driver: per doc, each hashed shingle's
-    * rank under the global (df asc, hash asc) order — 1 for every
-    * entry without `prefixFilter` — as postings (doc, rank) by hash:
-    * of the prefix entries, and with `index` also of every entry whose
-    * hash some prefix holds (no other entry can meet a probe). */
-  private def driverPostings(d: DriverDocs, threshold: Double, prefixFilter: Boolean,
-      index: Boolean): (Postings, Postings) = {
-    val df = mutable.HashMap.empty[Long, Long]
-    if (prefixFilter) d.sets.foreach(_.foreach(g => df(g) = df.getOrElse(g, 0L) + 1))
-    val ordered = d.sets.map(s => if (prefixFilter) s.sortBy(g => (df(g), g)) else s)
-    def post(keepIf: (Long, Int, Int) => Boolean): Postings = {
-      val p = mutable.HashMap.empty[Long, mutable.ArrayBuffer[(Int, Int)]]
-      for (i <- 0 until d.n; (g, k) <- ordered(i).iterator.zipWithIndex) {
-        val r = if (prefixFilter) k + 1 else 1
-        if (keepIf(g, i, r)) p.getOrElseUpdate(g, mutable.ArrayBuffer.empty) += ((i, r))
+  /** [[rankedPrefix]] on the driver: the entries of `d` as postings
+    * keyed by shingle (a dense id per distinct hash), each entry p the
+    * `value` of its doc `doc(p)` at rank `rank(p)` — its place in its
+    * doc under the global (df asc, hash asc) order, 1 for every entry
+    * without `prefixFilter`. `prefix` posts each doc's first
+    * [[prefixLength]] entries, `all` every entry. The order comes from
+    * one counting sort by df over the hash-sorted distinct shingles. */
+  private final class DriverPostings(d: DriverDocs, threshold: Double, prefixFilter: Boolean) {
+    private val e = d.hashes.length
+    val doc = new Array[Int](e)
+    for (i <- 0 until d.n) java.util.Arrays.fill(doc, d.start(i), d.start(i + 1), i)
+    private val shingles = new LongIds(e)
+    /** Entry p's shingle id, entries in rank order within each doc. */
+    private val sid = d.hashes.map(shingles.id)
+    if (prefixFilter) {
+      val u = shingles.size
+      val df = new Array[Int](u)
+      sid.foreach(s => df(s) += 1)
+      val byHash = shingles.toArray
+      java.util.Arrays.sort(byHash)
+      // stable counting sort of the hash-sorted shingles by df: order(s)
+      // is shingle s's place under (df asc, hash asc)
+      val at = new Array[Int](df.max + 2)
+      df.foreach(f => at(f + 1) += 1)
+      for (f <- 1 until at.length) at(f) += at(f - 1)
+      val order, byOrder = new Array[Int](u)
+      byHash.foreach { h =>
+        val s = shingles.find(h)
+        order(s) = at(df(s))
+        byOrder(order(s)) = s
+        at(df(s)) += 1
       }
-      p
+      for (i <- 0 until d.n) {
+        val (from, until) = (d.start(i), d.start(i + 1))
+        for (p <- from until until) sid(p) = order(sid(p))
+        java.util.Arrays.sort(sid, from, until)
+        for (p <- from until until) sid(p) = byOrder(sid(p))
+      }
     }
-    // the prefix bound of `prefixLength`, in the same arithmetic
-    val prefix = post((_, i, r) => !prefixFilter ||
-      r <= d.sets(i).length - math.ceil(threshold * d.sets(i).length - 1e-9).toLong + 1)
-    (prefix, if (index && prefixFilter) post((g, _, _) => prefix.contains(g)) else prefix)
-  }
 
-  private type Postings = mutable.HashMap[Long, mutable.ArrayBuffer[(Int, Int)]]
+    def rank(p: Int): Int = if (prefixFilter) p - d.start(doc(p)) + 1 else 1
+
+    // the prefix bound of `prefixLength`, in the same arithmetic
+    private def inPrefix(p: Int): Boolean = !prefixFilter || {
+      val sz = d.size(doc(p))
+      rank(p) <= sz - math.ceil(threshold * sz - 1e-9).toLong + 1
+    }
+
+    private def post(keep: Array[Int]): Csr = Csr(shingles.size, keep.map(sid(_)), keep, keep.length)
+    val prefix: Csr = post(Array.range(0, e).filter(inPrefix))
+    lazy val all: Csr = post(Array.range(0, e))
+
+    /** `f(a, b)` for every entry a of `probe` and b of `index` under
+      * one shingle. */
+    def collisions(probe: Csr, index: Csr)(f: (Int, Int) => Unit): Unit = {
+      var g = 0
+      while (g < shingles.size) {
+        var a = probe.start(g)
+        while (a < probe.start(g + 1)) {
+          var b = index.start(g)
+          while (b < index.start(g + 1)) { f(probe.values(a), index.values(b)); b += 1 }
+          a += 1
+        }
+        g += 1
+      }
+    }
+  }
 
   /** [[jaccardCandidates]] on the driver: prefix × prefix collisions
     * (id_a < id_b) passing the same length and positional bounds. */
   private def jaccardDriverCandidates(d: DriverDocs, threshold: Double,
       prefixFilter: Boolean, out: PairSet): Unit = {
     val share = threshold / (1 + threshold)
-    for (ps <- driverPostings(d, threshold, prefixFilter, index = false)._1.valuesIterator;
-        (x, ra) <- ps; (y, rb) <- ps if d.key(x) < d.key(y)) {
-      val sza = d.sets(x).length
-      val szb = d.sets(y).length
-      if (math.min(sza, szb).toDouble >= threshold * math.max(sza, szb) &&
-          1L + math.min(sza - ra, szb - rb) >= math.ceil(share * (sza + szb) - 1e-9).toLong)
-        out.add(x, y)
+    val ps = new DriverPostings(d, threshold, prefixFilter)
+    ps.collisions(ps.prefix, ps.prefix) { (pa, pb) =>
+      val x = ps.doc(pa)
+      val y = ps.doc(pb)
+      if (x < y) {
+        val sza = d.size(x)
+        val szb = d.size(y)
+        if (math.min(sza, szb).toDouble >= threshold * math.max(sza, szb) &&
+            1L + math.min(sza - ps.rank(pa), szb - ps.rank(pb)) >=
+              math.ceil(share * (sza + szb) - 1e-9).toLong)
+          out.add(x, y)
+      }
     }
   }
 
@@ -1149,14 +1249,18 @@ object Dedup {
     * collisions (id_a ≠ id_b) passing the same bounds. */
   private def containmentDriverCandidates(d: DriverDocs, threshold: Double,
       prefixFilter: Boolean, out: PairSet): Unit = {
-    val (prefix, all) = driverPostings(d, threshold, prefixFilter, index = true)
-    for ((g, probe) <- prefix.iterator; (x, ra) <- probe; (y, rb) <- all(g)
-        if d.key(x) != d.key(y)) {
-      val sza = d.sets(x).length
-      val szb = d.sets(y).length
-      if (szb.toDouble >= threshold * sza &&
-          1L + math.min(sza - ra, szb - rb) >= math.ceil(threshold * sza - 1e-9).toLong)
-        out.add(x, y)
+    val ps = new DriverPostings(d, threshold, prefixFilter)
+    ps.collisions(ps.prefix, ps.all) { (pa, pb) =>
+      val x = ps.doc(pa)
+      val y = ps.doc(pb)
+      if (x != y) {
+        val sza = d.size(x)
+        val szb = d.size(y)
+        if (szb.toDouble >= threshold * sza &&
+            1L + math.min(sza - ps.rank(pa), szb - ps.rank(pb)) >=
+              math.ceil(threshold * sza - 1e-9).toLong)
+          out.add(x, y)
+      }
     }
   }
 
@@ -1213,11 +1317,10 @@ object Dedup {
     * converges in O(log n) rounds with the same per-round shuffle. */
   def dupClusters(pairs: DataFrame, maxRounds: Int = 25,
       driverMaxPairs: Long = 1000000L): DataFrame = {
-    val p = graft.operators.Fixpoint.edgeList(pairs, "id_a", "id_b", "id_a", "id_b")
+    val p = Fixpoint.edgeList(pairs, "id_a", "id_b", "id_a", "id_b")
     val dt = p.schema("id_a").dataType
     // union-find keys on Long: only integral ids may take the driver step
-    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(dt)
-    graft.operators.Fixpoint.adaptive(p, if (integral) driverMaxPairs else 0L, "dupclusters")(
+    Fixpoint.adaptive(p, if (Fixpoint.integral(dt)) driverMaxPairs else 0L, "dupclusters")(
       dupClustersDriver(_, dt, p.sparkSession)) { (r, p) =>
       val e = p.select(col("id_a").as("_u"), col("id_b").as("_v"))
       val edges = e.union(e.select(col("_v").as("_u"), col("_u").as("_v")))
@@ -1237,35 +1340,30 @@ object Dedup {
   }
 
   /** Driver step of [[dupClusters]]: union-find (path-compressed,
-    * union-by-min) over the collected pair rows — α(n), no rounds. */
-  private def dupClustersDriver(rows: Array[org.apache.spark.sql.Row],
-      dt: org.apache.spark.sql.types.DataType,
+    * union-by-min) over the collected integral pair rows — α(n), no
+    * rounds — on dense ids ([[graft.operators.Fixpoint.DenseEdges]]),
+    * so the forest is one `int` array. */
+  private def dupClustersDriver(rows: Array[InternalRow], dt: DataType,
       spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val parent = new java.util.HashMap[Long, Long]()
-    def add(x: Long): Unit = if (!parent.containsKey(x)) parent.put(x, x)
-    def find(x: Long): Long = {
+    val g = new Fixpoint.DenseEdges(rows, dt)
+    val key = Array.tabulate(g.nodes)(g.longKey)
+    val parent = Array.tabulate(g.nodes)(identity)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.get(r) != r) r = parent.get(r)
+      while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent.get(c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
       r
     }
-    rows.foreach { row =>
-      val a = row.get(0).asInstanceOf[Number].longValue
-      val b = row.get(1).asInstanceOf[Number].longValue
-      add(a); add(b)
-      val ra = find(a); val rb = find(b)
+    for (e <- rows.indices) {
+      val ra = find(g.a(e)); val rb = find(g.b(e))
       // union by MIN id: a set's root stays its minimum element, so
       // the root IS the canonical keeper id the contract promises
-      if (ra < rb) parent.put(rb, ra) else if (rb < ra) parent.put(ra, rb)
+      if (key(ra) < key(rb)) parent(rb) = ra else if (key(rb) < key(ra)) parent(ra) = rb
     }
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    // one partition, as every driver step returns (Fixpoint.localResult)
-    parent.keySet().asScala.toSeq.map(x => (x, find(x)))
-      .toDF("_id", "_comp")
-      .select(col("_id").cast(dt).as("_id"), col("_comp").cast(dt).as("_comp"))
-      .coalesce(1)
+    Fixpoint.localResult(spark, Seq.tabulate(g.nodes)(v => Row(g.node(v), g.node(find(v)))),
+      StructType(Seq(StructField("_id", dt, nullable = false),
+        StructField("_comp", dt, nullable = false))))
   }
 
   /** Near-dedup'd corpus view: every clustered doc except the cluster

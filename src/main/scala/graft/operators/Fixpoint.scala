@@ -3,11 +3,12 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{coalesce, col}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** The adaptive driver-or-distributed fixpoint skeleton behind
@@ -33,7 +34,15 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *    interactive sizes per-job scheduling, not data, sets the cost —
   *    a distributed round pays joins, shuffles and an action for
   *    kilobytes — which is why the gate exists and why it is one job,
-  *    not count-then-collect.
+  *    not count-then-collect. An input already on the driver — a
+  *    driver step's [[localResult]], or what a narrow projection or
+  *    filter of one folds to — pays no job and no persist: the gate
+  *    hands over its rows ([[resident]]).
+  *  - Unboxed driver steps: the gate hands a step InternalRows read
+  *    through their typed getters; a step maps ids to dense `int`s
+  *    once ([[LongIds]] for integral ids, [[DenseEdges]] for edge
+  *    lists) and runs over `int`/`long` arrays ([[Csr]] for postings
+  *    and adjacency).
   *  - One partition out ([[localResult]]): a driver step's rows come
   *    back as one partition, so a consumer's sort or exchange sees a
   *    single-partition input instead of sampling and shuffling a few
@@ -87,8 +96,10 @@ private[graft] object Fixpoint {
     * A maxResultSize abort mid-fetch proves the input over budget and
     * returns count -1.
     *
-    * @return (row count, Some(rows) when complete) */
-  def collectBounded(df: DataFrame, budget: Long): (Long, Option[Array[Row]]) = {
+    * @return (row count, Some(rows) when complete); each row is an
+    *         UnsafeRow of `df`'s schema over its own bytes, read through
+    *         its typed getters — no per-row conversion */
+  def collectBounded(df: DataFrame, budget: Long): (Long, Option[Array[InternalRow]]) = {
     val schema = df.schema
     val b = math.max(budget, 0L)
     // one SQL execution, as for any Dataset action (`Dataset.rdd` too):
@@ -122,17 +133,19 @@ private[graft] object Fixpoint {
         val total = chunks.iterator.map(_._1).sum
         if (total > b || total > Int.MaxValue - 8 || chunks.exists(_._1 > cap)) (total, None)
         else {
-          val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-          val rows = chunks.iterator.flatMap { case (n, bytes) =>
+          val rows = new Array[InternalRow](total.toInt)
+          var k = 0
+          chunks.foreach { case (n, bytes) =>
             val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-            Iterator.fill(n.toInt) {
+            for (_ <- 0 until n.toInt) {
               val u = new UnsafeRow(schema.length)
               val a = new Array[Byte](in.readInt())
               in.readFully(a)
               u.pointTo(a, a.length)
-              toRow(u).asInstanceOf[Row]
+              rows(k) = u
+              k += 1
             }
-          }.toArray
+          }
           (total, Some(rows))
         }
       } catch {
@@ -143,22 +156,51 @@ private[graft] object Fixpoint {
   }
 
   /** The driver-or-distributed gate: every row of `input` when it
-    * fits the [[driverRowBudget]] for `driverMaxRows`, from ONE
-    * [[collectBounded]] job; None (run distributed) otherwise. A zero
-    * budget decides None with no job. With `byEstimate`, so does an
-    * optimized-plan size estimate over the budget at [[rowBytes]] per
-    * row — right for a scan and its narrow filters and projections,
-    * whose estimate follows the file bytes; wrong for a join, whose
-    * estimate is the product of its sides and would send a small pair
-    * list distributed, which is why [[adaptive]] does not pass it. */
+    * fits the [[driverRowBudget]] for `driverMaxRows`; None (run
+    * distributed) otherwise. A zero budget decides None with no job.
+    * An input already on the driver ([[resident]]) hands over its
+    * rows with no job either; any other input pays ONE
+    * [[collectBounded]] job. With `byEstimate`, an optimized-plan
+    * size estimate over the budget at [[rowBytes]] per row decides
+    * None with no job — right for a scan and its narrow filters and
+    * projections, whose estimate follows the file bytes; wrong for a
+    * join, whose estimate is the product of its sides and would send a
+    * small pair list distributed, which is why [[adaptive]] does not
+    * pass it. */
   def gate(input: DataFrame, driverMaxRows: Long, byEstimate: Boolean = false)
-      : Option[Array[Row]] = {
+      : Option[Array[InternalRow]] =
+    gateOn(input, resident(input), driverMaxRows, byEstimate)
+
+  /** [[gate]] on `input`'s [[resident]] rows, already looked up. */
+  private def gateOn(input: DataFrame, local: Option[Array[InternalRow]], driverMaxRows: Long,
+      byEstimate: Boolean): Option[Array[InternalRow]] = {
     val width = rowBytes(input.schema)
     val budget = driverRowBudget(input.sparkSession, driverMaxRows, width)
-    if (budget <= 0 || byEstimate &&
-        input.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(budget) * width) None
-    else collectBounded(input, budget)._2
+    if (budget <= 0) None
+    else local match {
+      case Some(rows) => Some(rows).filter(_.length <= budget)
+      case None =>
+        if (byEstimate &&
+            input.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(budget) * width) None
+        else collectBounded(input, budget)._2
+    }
   }
+
+  /** The rows of an input that is already on the driver: one whose
+    * optimized plan is a `LocalRelation`, alone or under
+    * [[localResult]]'s `Repartition(1, shuffle = false)` — a driver
+    * step's result and what a narrow projection or filter of it folds
+    * to. Only an input whose every leaf is a `LocalRelation` is
+    * optimized here, in its own execution, so `input`'s own plan
+    * stays unoptimized until [[adaptive]] has persisted it. */
+  private def resident(input: DataFrame): Option[Array[InternalRow]] =
+    if (!input.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else input.sparkSession.sessionState.executePlan(input.queryExecution.analyzed)
+        .optimizedPlan match {
+      case LocalRelation(_, data, false, _) => Some(data.toArray)
+      case Repartition(1, false, LocalRelation(_, data, false, _)) => Some(data.toArray)
+      case _ => None
+    }
 
   /** A driver step's result rows as a one-partition frame: a local
     * relation (its size known to the planner, so joins still
@@ -168,20 +210,22 @@ private[graft] object Fixpoint {
     spark.createDataFrame(rows.asJava, schema).coalesce(1)
   }
 
-  /** The fixpoint form of [[gate]]: persist `input`, gate it for
-    * `driverMaxRows`, then run `driver` on the collected rows or
-    * `distributed` on the persisted input inside a [[rounds]] scope
-    * staged under `stage`. The input is released in a `finally`. */
+  /** The fixpoint form of [[gate]]: persist `input` (unless it is
+    * already on the driver), gate it for `driverMaxRows`, then run
+    * `driver` on its rows or `distributed` on the persisted input
+    * inside a [[rounds]] scope staged under `stage`. A persisted input
+    * is released in a `finally`. */
   def adaptive(input: DataFrame, driverMaxRows: Long, stage: String)(
-      driver: Array[Row] => DataFrame)(
+      driver: Array[InternalRow] => DataFrame)(
       distributed: (Rounds, DataFrame) => DataFrame): DataFrame = {
-    val p = input.persist(MEMORY_AND_DISK)
+    val local = resident(input)
+    val p = if (local.isDefined) input else input.persist(MEMORY_AND_DISK)
     try {
-      gate(p, driverMaxRows) match {
+      gateOn(p, local, driverMaxRows, byEstimate = false) match {
         case Some(rows) => driver(rows)
         case None => rounds(p.sparkSession, stage)(distributed(_, p))
       }
-    } finally p.unpersist(blocking = false)
+    } finally if (local.isEmpty) p.unpersist(blocking = false)
   }
 
   /** A distributed loop's cache scope: runs `body`, writes its result
@@ -261,5 +305,58 @@ private[graft] object Fixpoint {
     val t = df.select(coalesce(col(a), col(b))).schema.head.dataType
     df.select(col(a).cast(t).as(asA), col(b).cast(t).as(asB))
       .filter(col(asA).isNotNull && col(asB).isNotNull)
+  }
+
+  /** Whether a driver step may key `dt` values as `long`s. */
+  def integral(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** Column `i` of integral type `dt` as a `long`. */
+  def longAt(row: InternalRow, i: Int, dt: DataType): Long = dt match {
+    case LongType => row.getLong(i)
+    case IntegerType => row.getInt(i)
+    case ShortType => row.getShort(i)
+    case ByteType => row.getByte(i)
+  }
+
+  /** A `long` back as the external value of integral type `dt`. */
+  def ofLong(v: Long, dt: DataType): Any = dt match {
+    case LongType => v
+    case IntegerType => v.toInt
+    case ShortType => v.toShort
+    case ByteType => v.toByte
+  }
+
+  /** Collected (a, b) edge rows of node type `dt` as dense node ids,
+    * numbered in first-seen order (a before b within a row): `a(e)`,
+    * `b(e)` for edge e, `nodes` ids in all, and `node(v)` the external
+    * value of id v. Integral nodes map through one [[LongIds]]; any
+    * other type through one `HashMap` pass over its internal values. */
+  final class DenseEdges(rows: Array[InternalRow], dt: DataType) {
+    val a = new Array[Int](rows.length)
+    val b = new Array[Int](rows.length)
+    private val longs = if (integral(dt)) new LongIds(rows.length) else null
+    private val others =
+      if (longs != null) null else new java.util.HashMap[AnyRef, Integer](2 * rows.length)
+    private val values = mutable.ArrayBuffer.empty[AnyRef]
+    private def id(r: InternalRow, i: Int): Int =
+      if (longs != null) longs.id(longAt(r, i, dt))
+      else {
+        val v = r.get(i, dt).asInstanceOf[AnyRef]
+        val known = others.get(v)
+        if (known != null) known
+        else { others.put(v, values.length); values += v; values.length - 1 }
+      }
+    for (e <- rows.indices) { a(e) = id(rows(e), 0); b(e) = id(rows(e), 1) }
+
+    def nodes: Int = if (longs != null) longs.size else values.length
+
+    /** The `long` key of id `v` of an integral node type. */
+    def longKey(v: Int): Long = longs.key(v)
+
+    private lazy val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    def node(v: Int): Any = if (longs != null) ofLong(longs.key(v), dt) else toScala(values(v))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
@@ -59,7 +60,7 @@ object GraphRank {
     val proj = Fixpoint.edgeList(edges, src, dst, "src", "dst")
     val nodeType = proj.schema("src").dataType
     val e = if (edgesAlreadyDistinct) proj else proj.distinct()
-    val driver = pageRankDriver(edges.sparkSession, _: Array[Row], nodeType,
+    val driver = pageRankDriver(edges.sparkSession, _: Array[InternalRow], nodeType,
       iterations, dampNum, dampDen, scale)
     Fixpoint.adaptive(e, driverMaxEdges, "pagerank")(driver) { (r, e) =>
       val nodes = r.hold(e.select(col("src").as("node"))
@@ -95,33 +96,26 @@ object GraphRank {
     * scale/N, contrib = rank div outdeg summed per dst, next = base +
     * inflow·dampNum div dampDen, dangling mass dropped. All operands
     * are positive longs, so Spark's `div` and JVM `/` truncate
-    * identically. */
-  private def pageRankDriver(spark: SparkSession, edgeRows: Array[Row], nodeType: DataType,
-      iterations: Int, dampNum: Long, dampDen: Long, scale: Long): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val outdeg = new java.util.HashMap[Any, Long]()
-    val nodes = new java.util.LinkedHashSet[Any]()
-    edgeRows.foreach { r =>
-      outdeg.merge(r.get(0), 1L, _ + _); nodes.add(r.get(0)); nodes.add(r.get(1))
-    }
-    val n = nodes.size.toLong
-    val init = scale / math.max(n, 1L) // empty graph: no nodes, no division
+    * identically. Nodes are dense ids ([[Fixpoint.DenseEdges]]), so
+    * every round is a pass over `int`/`long` arrays; rows come out in
+    * first-seen node order. */
+  private def pageRankDriver(spark: SparkSession, edgeRows: Array[InternalRow],
+      nodeType: DataType, iterations: Int, dampNum: Long, dampDen: Long,
+      scale: Long): DataFrame = {
+    val g = new Fixpoint.DenseEdges(edgeRows, nodeType)
+    val (src, dst, n) = (g.a, g.b, g.nodes)
+    val outdeg = new Array[Long](n)
+    src.foreach(u => outdeg(u) += 1)
+    val init = scale / math.max(n.toLong, 1L) // empty graph: no nodes, no division
     val base = init * (dampDen - dampNum) / dampDen
-    var rank = new java.util.HashMap[Any, Long]()
-    nodes.asScala.foreach(rank.put(_, init))
+    var rank = Array.fill(n)(init)
     for (_ <- 1 to iterations) {
-      val inflow = new java.util.HashMap[Any, Long]()
-      edgeRows.foreach { r =>
-        inflow.merge(r.get(1), rank.get(r.get(0)) / outdeg.get(r.get(0)), _ + _)
-      }
-      val next = new java.util.HashMap[Any, Long]()
-      nodes.asScala.foreach { v =>
-        next.put(v, base + inflow.getOrDefault(v, 0L) * dampNum / dampDen)
-      }
-      rank = next
+      val inflow = new Array[Long](n)
+      var e = 0
+      while (e < src.length) { inflow(dst(e)) += rank(src(e)) / outdeg(src(e)); e += 1 }
+      rank = inflow.map(x => base + x * dampNum / dampDen)
     }
     val schema = StructType(Seq(StructField("node", nodeType), StructField("rank", LongType)))
-    val rows = nodes.asScala.toSeq.map(v => Row(v, rank.get(v)))
-    Fixpoint.localResult(spark, rows, schema)
+    Fixpoint.localResult(spark, Seq.tabulate(n)(v => Row(g.node(v), rank(v))), schema)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
@@ -60,40 +61,43 @@ object KCore {
   /** Driver step of [[coreness]]: the IDENTICAL recurrence (c₀ =
     * degree, c ← min(c, H(neighbor cs)), stop at no-change or
     * maxRounds) in local integer arithmetic over the collected
-    * symmetrized simple edge rows. */
-  private def corenessDriver(spark: SparkSession, edgeRows: Array[Row], nodeType: DataType,
-      maxRounds: Int): DataFrame = {
-    import scala.collection.mutable
-    import scala.jdk.CollectionConverters._
-    val adj = new java.util.HashMap[Any, mutable.ArrayBuffer[Any]]()
-    edgeRows.foreach { r =>
-      adj.computeIfAbsent(r.get(0), _ => mutable.ArrayBuffer.empty) += r.get(1)
-    }
-    val c = new java.util.HashMap[Any, Long]()
-    adj.forEach((u, ns) => c.put(u, ns.length.toLong))
+    * symmetrized simple edge rows: dense node ids
+    * ([[Fixpoint.DenseEdges]]), one [[Csr]] adjacency, and each round
+    * a pass over `long` arrays. */
+  private def corenessDriver(spark: SparkSession, edgeRows: Array[InternalRow],
+      nodeType: DataType, maxRounds: Int): DataFrame = {
+    val g = new Fixpoint.DenseEdges(edgeRows, nodeType)
+    val n = g.nodes
+    val adj = Csr(n, g.a, g.b, edgeRows.length)
+    // the edge set is symmetric, so every node is some row's u
+    var c = Array.tabulate(n)(u => (adj.start(u + 1) - adj.start(u)).toLong)
+    val cs = new Array[Long](if (n == 0) 0 else c.max.toInt)
     var changed = true
     var rounds = 0
     while (changed && rounds < maxRounds) {
       changed = false
       // H(xs) = #{i ≥ 1 : (i-th largest x) ≥ i} — same predicate-count
       // form as the distributed zip_with/aggregate fold
-      val next = new java.util.HashMap[Any, Long]()
-      adj.forEach { (u, ns) =>
-        val cs = ns.map(c.get(_)).sortBy(-_)
+      val next = new Array[Long](n)
+      var u = 0
+      while (u < n) {
+        val from = adj.start(u)
+        val len = adj.start(u + 1) - from
+        var k = 0
+        while (k < len) { cs(k) = c(adj.values(from + k)); k += 1 }
+        java.util.Arrays.sort(cs, 0, len) // ascending: i-th largest at len − i
         var h = 0L
-        var i = 0
-        while (i < cs.length && cs(i) >= i + 1) { h = i + 1; i += 1 }
-        val cu = c.get(u)
-        val nu = math.min(cu, h)
-        if (nu < cu) changed = true
-        next.put(u, nu)
+        var i = 1
+        while (i <= len && cs(len - i) >= i) { h = i; i += 1 }
+        next(u) = math.min(c(u), h)
+        if (next(u) < c(u)) changed = true
+        u += 1
       }
-      c.clear(); c.putAll(next)
+      c = next
       rounds += 1
     }
     val schema = StructType(Seq(StructField("node", nodeType), StructField("coreness", LongType)))
-    val rows = c.entrySet().asScala.toSeq.map(kv => Row(kv.getKey, kv.getValue))
-    Fixpoint.localResult(spark, rows, schema)
+    Fixpoint.localResult(spark, Seq.tabulate(n)(u => Row(g.node(u), c(u))), schema)
   }
 
   /** Full coreness: for each node, the largest k with the node in the
@@ -111,7 +115,7 @@ object KCore {
   def coreness(edges: DataFrame, a: String, b: String,
       maxRounds: Int = 50, driverMaxEdges: Long = 500000L): DataFrame = {
     val und = undirected(edges, a, b)
-    val driver = corenessDriver(edges.sparkSession, _: Array[Row],
+    val driver = corenessDriver(edges.sparkSession, _: Array[InternalRow],
       und.schema("u").dataType, maxRounds)
     Fixpoint.adaptive(und, driverMaxEdges, "kcore")(driver) { (r, e) =>
       // state (node, c, chg): chg marks a node whose estimate fell this

@@ -10,7 +10,7 @@ import graft.operators.Fixpoint
 class BoundsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def pairs(rows: Option[Array[org.apache.spark.sql.Row]]) =
+  private def pairs(rows: Option[Array[org.apache.spark.sql.catalyst.InternalRow]]) =
     rows.map(_.map(r => (r.getLong(0), r.getLong(1))).toSeq)
 
   test("driverRowBudget ceilings the request by maxResultSize") {
@@ -90,6 +90,7 @@ class BoundsSpec extends SparkSpec {
     val df = rows.toDF("k", "s").repartition(3)
     val (n, got) = Fixpoint.collectBounded(df, 10L)
     assert(n == 4L)
-    assert(got.get.map(r => (r.getLong(0), Option(r.getString(1)))).toSet == rows.toSet)
+    assert(got.get.map(r => (r.getLong(0), Option(r.getUTF8String(1)).map(_.toString)))
+      .toSet == rows.toSet)
   }
 }

@@ -1,6 +1,25 @@
 package graft
 
-import graft.dml.VersionedTable
+import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
+
+import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+
+import graft.dml.{CommitArbiter, VersionedTable}
+
+/** The local filesystem, except that a manifest's `exists` check waits
+  * (up to 5 s) until two callers have made it: two writers then both
+  * pass Hadoop's exists-then-open create with the path still absent —
+  * the interleaving two racing processes can hit. */
+final class PausingLocalFileSystem(barrier: CyclicBarrier) extends RawLocalFileSystem {
+  override def exists(f: HPath): Boolean = {
+    val found = super.exists(f)
+    if (f.getName.endsWith(".manifest"))
+      try barrier.await(5, TimeUnit.SECONDS)
+      catch { case _: java.util.concurrent.TimeoutException |
+          _: java.util.concurrent.BrokenBarrierException => () }
+    found
+  }
+}
 
 /** Cross-PROCESS writer-writer serialization (VERDICT r14 #3): every
   * prior race proof ran two threads in ONE JVM, but the reference's
@@ -126,5 +145,21 @@ class DmlCrossProcessSpec extends SparkSpec {
 
   test("two forked JVMs racing commit() on the non-atomic scheme via conditional-put claim") {
     raceOnce("racylock")
+  }
+
+  test("create-exclusive on file: one winner when both writers pass exists together") {
+    val fs = new PausingLocalFileSystem(new CyclicBarrier(2))
+    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    val dir = java.nio.file.Files.createTempDirectory("graft_excl")
+    val m = new HPath(dir.toUri.toString, "v00001.manifest")
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val publishes = Seq("alpha", "beta").map(label => pool.submit(() =>
+        label -> CommitArbiter.CreateExclusive.publish(fs, m, label.getBytes("UTF-8"))))
+      val won = publishes.map(_.get(60, TimeUnit.SECONDS)).filter(_._2).map(_._1)
+      assert(won.size == 1, s"winners: $won")
+      assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir.toString, "v00001.manifest")), "UTF-8") == won.head)
+    } finally pool.shutdownNow()
   }
 }

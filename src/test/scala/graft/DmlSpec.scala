@@ -113,6 +113,22 @@ class DmlSpec extends SparkSpec {
     intercept[IllegalArgumentException](t.read(0))
   }
 
+  test("vacuum leaves no data directory without a live file") {
+    val loc = freshLoc()
+    val t = VersionedTable.create(spark, loc,
+      (1 to 40).map(i => (i.toLong, i)).toDF("id", "v"), initialFiles = 2)
+    for (k <- 1 to 4) t.update(col("id") === k, Map("v" -> lit(-k)))
+    t.insert(Seq((41L, 41)).toDF("id", "v"))
+    t.vacuum(keepVersions = 1)
+    val dataDirs = Files.list(Paths.get(loc)).iterator.asScala
+      .filter(_.getFileName.toString.startsWith("data_")).toSet
+    val liveDirs = t.read().inputFiles
+      .map(f => Paths.get(new java.net.URI(f)).getParent).toSet
+    assert(liveDirs.nonEmpty)
+    assert(dataDirs == liveDirs)
+    assert(t.read().count() == 41)
+  }
+
   test("writer-writer conflict: losing commit raises, winner's state stands") {
     // Two writers that both observed version N race to publish N+1;
     // the manifest's create-exclusive is the arbiter (the DBRM

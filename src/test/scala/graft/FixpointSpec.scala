@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.execution.CacheProbe
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import graft.llm.Dedup
-import graft.operators.{GraphRank, KCore}
+import graft.operators.{Csr, Fixpoint, GraphRank, KCore, LongIds}
 
 /** The adaptive driver-or-distributed gate (`operators/Fixpoint`)
   * across its callers: the driver step equals the distributed step bit
@@ -162,5 +164,140 @@ class FixpointSpec extends SparkSpec {
     assert(forced._1 > 2, s"the distributed plan ran only $forced jobs")
     // one document of budget is far under the frame's estimate
     assert(run(1L) == forced)
+  }
+
+  // per id type, ids at both ends of its range (strings take the Long
+  // ones), so a narrowing or a mixed-up key would show as a difference
+  private val typedIds: Seq[(DataType, Gen[Long])] = Seq(
+    ByteType -> Gen.oneOf(Gen.choose(0L, 6L), Gen.choose(123L, 127L)),
+    ShortType -> Gen.oneOf(Gen.choose(0L, 6L), Gen.choose(32763L, 32767L)),
+    IntegerType -> Gen.oneOf(Gen.choose(0L, 6L), Gen.choose(Int.MaxValue - 4L, Int.MaxValue.toLong)),
+    LongType -> id,
+    StringType -> id)
+
+  /** The graph operators over `es` with both endpoints of type `dt`,
+    * at one bound, as sorted (node, value) strings; dupClusters only
+    * for integral ids, the only ones its driver step takes. */
+  private def typedResults(es: Seq[(Long, Long)], dt: DataType, bound: Long) = {
+    val e = es.toDF("a", "b").select(col("a").cast(dt).as("a"), col("b").cast(dt).as("b"))
+    def rows(df: DataFrame) =
+      df.collect().map(r => (String.valueOf(r.get(0)), String.valueOf(r.get(1)))).sorted.toSeq
+    Seq(rows(GraphRank.pageRank(e, "a", "b", driverMaxEdges = bound)),
+      rows(KCore.coreness(e, "a", "b", driverMaxEdges = bound))) ++
+      (if (dt == StringType) Nil
+       else Seq(rows(Dedup.dupClusters(e.toDF("id_a", "id_b"), driverMaxPairs = bound))))
+  }
+
+  test("driver and distributed graph steps agree for Byte, Short, Int, Long and string ids") {
+    for ((dt, ids) <- typedIds) {
+      val g = for {
+        n <- Gen.choose(1, 10)
+        es <- Gen.listOfN(n, Gen.zip(ids, ids))
+        dups <- Gen.someOf(es)
+      } yield es ++ dups
+      val prop = Prop.forAllNoShrink(g) { es =>
+        val viaDriver = typedResults(es, dt, 1000000L)
+        val viaDistributed = typedResults(es, dt, 0L)
+        Prop(viaDriver == viaDistributed) :| s"$dt graph $es: $viaDriver vs $viaDistributed"
+      }
+      val params = Test.Parameters.default.withMinSuccessfulTests(3)
+        .withInitialSeed(Seed(20261020L)).withWorkers(1)
+      val res = Test.check(params, prop)
+      assert(res.passed, s"$dt: ${res.status}")
+    }
+  }
+
+  /** Whether `df` is a driver step's result: [[Fixpoint.localResult]]'s
+    * one-partition local relation, not a plan over the input. */
+  private def driverStep(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case Repartition(1, false, _: LocalRelation) => true
+    case _ => false
+  }
+
+  // repeated n-grams within one text (equal shingles before the
+  // kernel's distinct), twins and under-3-token texts
+  private val repeating: Gen[String] = Gen.frequency(
+    3 -> Gen.oneOf("a b c a b c a b c", "a b a b a b a", "c c c c", "a b c d a b c d e"),
+    1 -> Gen.oneOf("a", "b a"),
+    4 -> Gen.choose(3, 8).flatMap(Gen.listOfN(_, Gen.oneOf("a", "b", "c", "d")))
+      .map(_.mkString(" ")))
+
+  test("set-similarity joins: driver equals distributed for Byte and Short ids and repeated shingles") {
+    for (dt <- Seq(ByteType, ShortType); threshold <- Seq(0.3, 0.6, 1.0)) {
+      val g = for {
+        texts <- Gen.choose(2, 9).flatMap(Gen.listOfN(_, repeating))
+        twins <- Gen.someOf(texts)
+        all = texts ++ twins
+        ids <- Gen.pick(all.size, (0L to 20L) ++ (120L to 127L))
+      } yield ids.toSeq.zip(all)
+      val prop = Prop.forAllNoShrink(g) { rows =>
+        val docs = rows.toDF("doc_id", "text").select(col("doc_id").cast(dt).as("doc_id"),
+          col("text"))
+        val viaDriver = setJoins(docs, threshold, 1000000L)
+        val viaDistributed = setJoins(docs, threshold, 0L)
+        val local = viaDriver.forall(f => driverStep(f._1))
+        (Prop(local) :| "a join left the driver step") &&
+          (Prop(viaDriver.map(_._2) == viaDistributed.map(_._2)) :|
+            s"$dt t=$threshold docs $rows: ${viaDriver.map(_._2)} vs ${viaDistributed.map(_._2)}")
+      }
+      val params = Test.Parameters.default.withMinSuccessfulTests(2)
+        .withInitialSeed(Seed(20261021L)).withWorkers(1)
+      val res = Test.check(params, prop)
+      assert(res.passed, s"$dt t=$threshold: ${res.status}")
+    }
+  }
+
+  test("the candidate bound: a clique of exactly the bound stays on the driver, one over leaves") {
+    // five identical texts: every one of the 10 pairs is a candidate
+    val docs = (1L to 5L).map(i => (i, "the same five words here")).toDF("doc_id", "text")
+    def local(bound: Long) = driverStep(Dedup.jaccardDupPairs(docs, 0.5, driverMaxDocs = bound))
+    assert(local(10L))
+    assert(!local(9L))
+    assert(Dedup.jaccardDupPairs(docs, 0.5, driverMaxDocs = 10L).count() == 10)
+  }
+
+  test("LongIds: dense first-seen ids and set membership across resizes") {
+    val rnd = new scala.util.Random(7)
+    val keys = Seq.fill(50000)(rnd.nextLong() >> rnd.nextInt(64)) ++
+      Seq(0L, -1L, Long.MinValue, Long.MaxValue, 0L, Long.MinValue)
+    val ids = new LongIds(2) // starts at 8 slots: grows many times
+    val ref = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
+    keys.foreach { k =>
+      val fresh = !ref.contains(k)
+      if (fresh) ref(k) = ref.size
+      assert(ids.add(k) == fresh, s"add($k)")
+    }
+    assert(ids.size == ref.size)
+    assert(ids.toArray.toSeq == ref.keys.toSeq)
+    ref.foreach { case (k, i) => assert(ids.find(k) == i && ids.id(k) == i && ids.key(i) == k) }
+    assert(ids.find(12345678901L) == -1 || ref.contains(12345678901L))
+  }
+
+  test("Csr groups entries by key in entry order") {
+    val key = Array(2, 0, 2, 1, 0, 2)
+    val csr = Csr(4, key, Array(10, 11, 12, 13, 14, 15), 6)
+    assert(csr.start.toSeq == Seq(0, 2, 3, 6, 6))
+    assert(csr.values.toSeq == Seq(11, 14, 13, 10, 12, 15))
+  }
+
+  test("a driver-resident input: the gate launches no job and returns the collect path's rows") {
+    val docs = (1L to 6L).map(i => (i, if (i % 2 == 0) "a b c d e" else "a b c d f"))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.jaccardDupPairs(docs, 0.3) // a driver step's one-partition result
+    val edges = Fixpoint.edgeList(pairs, "id_a", "id_b", "id_a", "id_b")
+    var resident: Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = None
+    var clusters: DataFrame = null
+    val (sqlJobs, otherJobs) = jobs {
+      resident = Fixpoint.gate(edges, 1000L)
+      clusters = Dedup.dupClusters(pairs)
+    }
+    assert((sqlJobs, otherJobs) == ((0, 0)))
+    def longs(rows: Option[Array[org.apache.spark.sql.catalyst.InternalRow]]) =
+      rows.map(_.map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    val collected = Fixpoint.collectBounded(edges, 1000L)._2
+    assert(resident.isDefined)
+    assert(longs(resident) == longs(collected))
+    assert(clusters.as[(Long, Long)].collect().sorted.toSeq ==
+      Dedup.dupClusters(pairs, driverMaxPairs = 0L).as[(Long, Long)].collect().sorted.toSeq)
   }
 }
