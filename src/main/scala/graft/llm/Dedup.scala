@@ -1124,7 +1124,7 @@ object Dedup {
       java.util.Arrays.sort(byHash)
       // stable counting sort of the hash-sorted shingles by df: order(s)
       // is shingle s's place under (df asc, hash asc)
-      val at = new Array[Int](df.max + 2)
+      val at = new Array[Int](df.foldLeft(0)(math.max) + 2) // no docs: no shingles
       df.foreach(f => at(f + 1) += 1)
       for (f <- 1 until at.length) at(f) += at(f - 1)
       val order, byOrder = new Array[Int](u)

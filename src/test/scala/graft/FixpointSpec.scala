@@ -256,6 +256,26 @@ class FixpointSpec extends SparkSpec {
     assert(Dedup.jaccardDupPairs(docs, 0.5, driverMaxDocs = 10L).count() == 10)
   }
 
+  test("empty and all-NULL inputs: the driver steps return no rows, as the distributed plans do") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    // a resident frame filtered to nothing by the joins' NULL filter
+    val nulls = Seq[(Option[Long], Option[String])]((None, Some("a b c")), (Some(1L), None),
+      (None, None)).toDF("doc_id", "text")
+    // not a local relation: the gate's collect job returns no rows
+    val collected = spark.range(3).select(col("id").as("doc_id"),
+      org.apache.spark.sql.functions.lit(null).cast(StringType).as("text"))
+    for (docs <- Seq(empty, nulls, collected); threshold <- Seq(0.5, 1.0)) {
+      val viaDriver = setJoins(docs, threshold, 10000L) // the joins' default bound
+      assert(viaDriver.forall(f => driverStep(f._1)), "a join left the driver step")
+      assert(viaDriver.forall(_._2.isEmpty))
+      assert(viaDriver.map(_._2) == setJoins(docs, threshold, 0L).map(_._2))
+    }
+    val noEdges = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(GraphRank.pageRank(noEdges, "a", "b").collect().isEmpty)
+    assert(KCore.coreness(noEdges, "a", "b").collect().isEmpty)
+    assert(Dedup.dupClusters(noEdges.toDF("id_a", "id_b")).collect().isEmpty)
+  }
+
   test("LongIds: dense first-seen ids and set membership across resizes") {
     val rnd = new scala.util.Random(7)
     val keys = Seq.fill(50000)(rnd.nextLong() >> rnd.nextInt(64)) ++
