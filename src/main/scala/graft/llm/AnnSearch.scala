@@ -51,17 +51,23 @@ object AnnSearch {
     * it P·L times per vector. */
   private def asDouble(v: Column): Column = v.cast(ArrayType(DoubleType))
 
-  /** Unit-normalize, so downstream cosine is a single dot fold per
-    * pair instead of dot + two norms (a 3× cut on the pair-verify
-    * hot path; the normalize cost is paid once per VECTOR, the dot
-    * cost once per PAIR). Zero vectors stay zero. The division is the
-    * one remaining per-element HOF on a vector path; it runs once per
-    * vector inside a projection whose output is immediately shuffled
-    * (never inlined into per-pair code), so the interpreted cost is
-    * O(N·dim), not O(pairs·dim). */
+  /** Unit-normalize; zero vectors stay zero. Only the spherical
+    * k-means trainer and its objective use it: a Lloyd mean and a
+    * mean cosine need unit vectors. Search never does — a sign, an
+    * argmax and a top-k by [[cosine]] are all unchanged when a vector
+    * is scaled — and the division is an interpreted per-element HOF
+    * outside whole-stage codegen. */
   private def normalized(v: Column): Column = {
     val n = norm(v)
     when(n > 0, transform(v, x => x / n)).otherwise(v)
+  }
+
+  /** Top-k rows per `qid` by `score` descending, ties toward the lower
+    * `vec_id` (deterministic, so every ANN answer is a pure function of
+    * its inputs). Adds `rank`. */
+  private[llm] def rankTopK(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col(score).desc, col("vec_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Exact cosine top-k per query vector. `queries` is expected to be
@@ -73,10 +79,8 @@ object AnnSearch {
       qid: String = "qid", qvec: String = "qvec"): DataFrame = {
     val c = corpus.select(col(id).as("vec_id"), asDouble(col(vec)).as("_v"))
     val q = queries.select(col(qid).as("qid"), asDouble(col(qvec)).as("_q"))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"), cosine(col("_v"), col("_q")).as("cosine"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    rankTopK(c.crossJoin(broadcast(q))
+      .select(col("qid"), col("vec_id"), cosine(col("_v"), col("_q")).as("cosine")), "cosine", k)
   }
 
   /** Deterministic seeded hyperplanes: numPlanes × dim in [-1, 1]
@@ -93,6 +97,32 @@ object AnnSearch {
       when(dot(v, lit(p)) > 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
+  /** The `numTables` seeded hyperplane sets of the multi-table LSH
+    * (table t draws from seed 42 + t). */
+  private def lshTables(numPlanes: Int, numTables: Int, dim: Int): Seq[Array[Array[Double]]] =
+    (0 until numTables).map(t => hyperplanes(numPlanes, dim, seed = 42L + t))
+
+  /** The stored side of the multi-table LSH: one (t, b) row per table,
+    * `b` the vector's sign bucket in table `t`. Buckets take the RAW
+    * vector — the sign of a plane dot does not change when the vector
+    * is scaled. */
+  private[graft] def lshBucketRows(v: Column,
+      numPlanes: Int, numTables: Int, dim: Int): Column =
+    explode(array(lshTables(numPlanes, numTables, dim).zipWithIndex.map { case (p, t) =>
+      struct(lit(t).as("t"), bucketOf(v, p).as("b"))
+    }: _*))
+
+  /** The probe side: per table, the vector's own bucket and every
+    * 1-bit flip of it — (P+1)·L (t, b) rows, joined to
+    * [[lshBucketRows]] on the struct. */
+  private[graft] def lshProbeRows(v: Column,
+      numPlanes: Int, numTables: Int, dim: Int): Column =
+    explode(flatten(array(lshTables(numPlanes, numTables, dim).zipWithIndex.map { case (p, t) =>
+      transform(
+        array(lit(0L) +: (0 until numPlanes).map(i => lit(1L << i)): _*),
+        m => struct(lit(t).as("t"), bucketOf(v, p).bitwiseXOR(m).as("b")))
+    }: _*)))
+
   /** LSH-bucketed cosine top-k: the classic multi-table structure —
     * `numTables` independent hash tables of `numPlanes` hyperplanes
     * each, query probes its bucket plus every 1-bit flip in every
@@ -100,65 +130,74 @@ object AnnSearch {
     * per-plane agreement p, recall per neighbor is
     * 1 − (1 − (p^P + P·p^(P−1)(1−p)))^L — tables are the knob that
     * buys recall without scanning more of the corpus per bucket.
-    * Returns (qid, vec_id, cosine, rank) — a subset of brute force. */
+    *
+    * Buckets take the raw vectors; candidates score by [[cosine]],
+    * bit-identical to DuckDB's list_cosine_similarity, and ties break
+    * toward the lower vec_id. The hyperplanes are seeded, so the whole
+    * probe is a pure function of the corpus and the DuckDB oracle
+    * replays it (q_ann_lsh). Returns (qid, vec_id, cosine, rank) — a
+    * subset of brute force. */
   def lshTopK(
       corpus: DataFrame, queries: DataFrame, k: Int,
       numPlanes: Int = 6, numTables: Int = 8, dim: Int = 64,
       id: String = "vec_id", vec: String = "embedding",
       qid: String = "qid", qvec: String = "qvec"): DataFrame = {
-    val tables = (0 until numTables).map(t => hyperplanes(numPlanes, dim, seed = 42L + t))
-    val c0 = corpus.select(col(id).as("vec_id"), normalized(asDouble(col(vec))).as("_v"))
-    // corpus: one (table, bucket) row per table — L narrow rows per vector
-    val c = c0.select(col("vec_id"), col("_v"),
-      explode(array(tables.zipWithIndex.map { case (p, t) =>
-        struct(lit(t).as("t"), bucketOf(col("_v"), p).as("b"))
-      }: _*)).as("_tb"))
-    val q0 = queries.select(col(qid).as("qid"), normalized(asDouble(col(qvec))).as("_q"))
-    // queries: per table, own bucket + all 1-bit flips
-    val probed = q0.select(col("qid"), col("_q"),
-      explode(flatten(array(tables.zipWithIndex.map { case (p, t) =>
-        transform(
-          array(lit(0L) +: (0 until numPlanes).map(i => lit(1L << i)): _*),
-          m => struct(lit(t).as("t"), bucketOf(col("_q"), p).bitwiseXOR(m).as("b")))
-      }: _*))).as("_tb"))
-    // normalized vectors: cosine = clamped dot, one fold per candidate
-    val scored = c.join(broadcast(probed), "_tb")
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(max(least(greatest(dot(col("_v"), col("_q")), lit(-1.0)), lit(1.0))).as("cosine"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Oracle-replayable LSH: same multi-table 1-bit-flip structure as
-    * [[lshTopK]], pinned to engine-identical arithmetic — bucketing
-    * signs over RAW dots (sign is norm-invariant), candidate scoring
-    * via [[cosine]] (bit-matched to DuckDB), deterministic top-k
-    * ties. With seeded hyperplanes the query is a pure function of
-    * the corpus, so the driver hash-checks the whole LSH probe
-    * (q_ann_lsh_seeded); `lshTopK` stays the production path. */
-  def lshTopKExact(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      numPlanes: Int = 6, numTables: Int = 8, dim: Int = 64,
-      id: String = "vec_id", vec: String = "embedding",
-      qid: String = "qid", qvec: String = "qvec"): DataFrame = {
-    val tables = (0 until numTables).map(t => hyperplanes(numPlanes, dim, seed = 42L + t))
     val c = corpus.select(col(id).as("vec_id"), asDouble(col(vec)).as("_v"))
       .select(col("vec_id"), col("_v"),
-        explode(array(tables.zipWithIndex.map { case (p, t) =>
-          struct(lit(t).as("t"), bucketOf(col("_v"), p).as("b"))
-        }: _*)).as("_tb"))
+        lshBucketRows(col("_v"), numPlanes, numTables, dim).as("_tb"))
     val probed = queries.select(col(qid).as("qid"), asDouble(col(qvec)).as("_q"))
       .select(col("qid"), col("_q"),
-        explode(flatten(array(tables.zipWithIndex.map { case (p, t) =>
-          transform(
-            array(lit(0L) +: (0 until numPlanes).map(i => lit(1L << i)): _*),
-            m => struct(lit(t).as("t"), bucketOf(col("_q"), p).bitwiseXOR(m).as("b")))
-        }: _*))).as("_tb"))
-    val scored = c.join(broadcast(probed), "_tb")
+        lshProbeRows(col("_q"), numPlanes, numTables, dim).as("_tb"))
+    rankTopK(c.join(broadcast(probed), "_tb")
       .groupBy(col("qid"), col("vec_id"))
-      .agg(max(cosine(col("_v"), col("_q"))).as("cosine"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .agg(max(cosine(col("_v"), col("_q"))).as("cosine")), "cosine", k)
+  }
+
+  /** The centroid table as a literal array of (i, c) structs — the
+    * explode side of every cell argmax. */
+  private def centroidArr(centroids: Array[Array[Double]]): Column =
+    array(centroids.zipWithIndex.map { case (cv, i) =>
+      struct(lit(i).as("i"), lit(cv).as("c"))
+    }.toIndexedSeq: _*)
+
+  /** The IVF cell of every row of a (vec_id, _v) frame: the centroid
+    * with the largest dot(_v, c), ties toward the lower cell id, so the
+    * cell is a pure function of the vector and not of shuffle order.
+    * One (vector, centroid) row per candidate cell feeds a codegen'd
+    * max_by — not an argsort column whose lambda would re-evaluate the
+    * vector per centroid (measured 25 s vs ~1 s at sf0.1). `_v` rides
+    * along for the trainer; a caller that drops it has it pruned from
+    * the aggregate. Returns (vec_id, _v, _cell). */
+  private def assignCells(c: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    c.select(col("vec_id"), col("_v"), explode(centroidArr(centroids)).as("_ce"))
+      .select(col("vec_id"), col("_v"),
+        col("_ce.i").as("_celli"), dot(col("_v"), col("_ce.c")).as("_cd"))
+      .groupBy(col("vec_id"))
+      .agg(max_by(col("_celli"), struct(col("_cd"), -col("_celli"))).as("_cell"),
+        first(col("_v")).as("_v"))
+
+  /** IVF cell per corpus vector, on the RAW vector: an argmax over
+    * dot(v, c) does not change when v is scaled, so no normalize runs.
+    * Shared by [[ivfTopK]], `Quantize.ivfPqTopK` and the persisted
+    * IVF∘PQ index writers. Returns (vec_id, _cell). */
+  def cellAssignments(corpus: DataFrame, centroids: Array[Array[Double]],
+      id: String = "vec_id", vec: String = "embedding"): DataFrame =
+    assignCells(corpus.select(col(id).as("vec_id"), asDouble(col(vec)).as("_v")), centroids)
+      .select(col("vec_id"), col("_cell"))
+
+  /** The `nprobe` cells per query whose centroids have the largest raw
+    * dot with the query, ties toward the lower cell id — the same
+    * arithmetic as [[cellAssignments]]. Returns (qid, _q, _cell), `_q`
+    * the query as double[]. */
+  def probeCells(queries: DataFrame, centroids: Array[Array[Double]], nprobe: Int,
+      qid: String = "qid", qvec: String = "qvec"): DataFrame = {
+    val qw = Window.partitionBy(col("qid")).orderBy(col("_cd").desc, col("_celli"))
+    queries.select(col(qid).as("qid"), asDouble(col(qvec)).as("_q"))
+      .select(col("qid"), col("_q"), explode(centroidArr(centroids)).as("_ce"))
+      .select(col("qid"), col("_q"),
+        col("_ce.i").as("_celli"), dot(col("_q"), col("_ce.c")).as("_cd"))
+      .withColumn("_cr", row_number().over(qw)).filter(col("_cr") <= nprobe)
+      .select(col("qid"), col("_q"), col("_celli").as("_cell"))
   }
 
   /** IVF (inverted-file) ANN: corpus is partitioned into cells by
@@ -167,12 +206,14 @@ object AnnSearch {
     * billion-vector scale (cell lists persist as partition dirs; a
     * query touches nprobe/nlist of the corpus).
     *
-    * Centroids here are a deterministic seeded sample of the corpus
-    * domain (unit-normalized pseudo-random vectors) rather than
-    * trained k-means — the assignment/probe machinery is identical,
-    * and training better centroids is an offline job that feeds the
-    * same operator. Recall is asserted against brute force in
-    * LlmSpec. */
+    * `centroids0` takes trained centroids ([[trainIvfCentroids]]);
+    * without it the centroids are a deterministic seeded sample of the
+    * corpus domain — the assignment/probe machinery is identical.
+    * Cells and probes come from [[cellAssignments]] and [[probeCells]];
+    * candidates score by [[cosine]]. With fixed centroids the query is
+    * a pure function of the corpus, so the DuckDB oracle replays
+    * assignment → probe → score → top-k (q_ann_ivf, q_ann_ivf_seeded).
+    * Recall is asserted against brute force in LlmSpec. */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4, dim: Int = 64,
@@ -180,83 +221,11 @@ object AnnSearch {
       qid: String = "qid", qvec: String = "qvec",
       centroids0: Option[Array[Array[Double]]] = None): DataFrame = {
     val centroids = centroids0.getOrElse(seededCentroids(nlist, dim))
-    // One (vector, centroid) ROW per candidate cell — a single dot
-    // fold per row feeding a codegen'd max_by/rank, instead of an
-    // argsort column whose lambda re-evaluates the normalized vector
-    // per centroid (the interpreted-HOF inlining trap; measured 25 s
-    // vs ~1 s at sf0.1).
-    val cenArr = array(centroids.zipWithIndex.map { case (cv, i) =>
-      struct(lit(i).as("i"), lit(cv).as("c"))
-    }.toIndexedSeq: _*)
-
-    val c = corpus.select(col(id).as("vec_id"), normalized(asDouble(col(vec))).as("_v"))
-      .select(col("vec_id"), col("_v"), explode(cenArr).as("_ce"))
-      .select(col("vec_id"), col("_v"),
-        col("_ce.i").as("_celli"), dot(col("_v"), col("_ce.c")).as("_cd"))
-      .groupBy(col("vec_id"))
-      // ties toward the lower cell id: assignment must be a pure
-      // function of the vector, not of shuffle row order — the property
-      // that makes the cell usable as a persisted partition key and the
-      // whole probe oracle-replayable
-      .agg(max_by(col("_celli"), struct(col("_cd"), -col("_celli"))).as("_cell"),
-        first(col("_v")).as("_v"))
-
-    val qw = Window.partitionBy(col("qid")).orderBy(col("_cd").desc, col("_celli"))
-    val q = queries.select(col(qid).as("qid"), normalized(asDouble(col(qvec))).as("_q"))
-      .select(col("qid"), col("_q"), explode(cenArr).as("_ce"))
-      .select(col("qid"), col("_q"),
-        col("_ce.i").as("_celli"), dot(col("_q"), col("_ce.c")).as("_cd"))
-      .withColumn("_cr", row_number().over(qw)).filter(col("_cr") <= nprobe)
-      .select(col("qid"), col("_q"), col("_celli").as("_cell"))
-    val scored = c.join(broadcast(q), "_cell")
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(max(least(greatest(dot(col("_v"), col("_q")), lit(-1.0)), lit(1.0))).as("cosine"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Oracle-replayable IVF: same cell-probe structure as [[ivfTopK]],
-    * pinned to arithmetic both engines spell identically —
-    *  - assignment/probe argmax over RAW dot(v, centroid) (argmax is
-    *    norm-invariant: ||v|| is a per-vector positive constant, so
-    *    skipping normalization removes a whole FP-divergence surface);
-    *  - deterministic ties (lower cell id) on BOTH the assignment
-    *    max_by and the probe rank;
-    *  - candidate scoring via [[cosine]], the fold already proven
-    *    bit-identical to DuckDB's list_cosine_similarity.
-    * With seeded centroids the whole query is a pure function of the
-    * corpus — the driver can hash-match it (q_ann_ivf_seeded), turning
-    * the IVF probe semantics from spec evidence into driver-enforced
-    * evidence. `ivfTopK` remains the production path (normalized
-    * dot-only scoring is the cheaper per-pair kernel). */
-  def ivfTopKExact(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, dim: Int = 64,
-      id: String = "vec_id", vec: String = "embedding",
-      qid: String = "qid", qvec: String = "qvec"): DataFrame = {
-    val centroids = seededCentroids(nlist, dim)
-    val cenArr = array(centroids.zipWithIndex.map { case (cv, i) =>
-      struct(lit(i).as("i"), lit(cv).as("c"))
-    }.toIndexedSeq: _*)
-    val cells = corpus.select(col(id).as("vec_id"), asDouble(col(vec)).as("_v"))
-      .select(col("vec_id"), col("_v"), explode(cenArr).as("_ce"))
-      .select(col("vec_id"),
-        col("_ce.i").as("_celli"), dot(col("_v"), col("_ce.c")).as("_cd"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("_celli"), struct(col("_cd"), -col("_celli"))).as("_cell"))
-    val qw = Window.partitionBy(col("qid")).orderBy(col("_cd").desc, col("_celli"))
-    val probes = queries.select(col(qid).as("qid"), asDouble(col(qvec)).as("_q"))
-      .select(col("qid"), col("_q"), explode(cenArr).as("_ce"))
-      .select(col("qid"), col("_q"),
-        col("_ce.i").as("_celli"), dot(col("_q"), col("_ce.c")).as("_cd"))
-      .withColumn("_cr", row_number().over(qw)).filter(col("_cr") <= nprobe)
-      .select(col("qid"), col("_q"), col("_celli").as("_cell"))
     val cand = corpus.select(col(id).as("vec_id"), asDouble(col(vec)).as("_v"))
-      .join(cells, "vec_id")
-      .join(broadcast(probes), "_cell")
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    cand.select(col("qid"), col("vec_id"), cosine(col("_v"), col("_q")).as("cosine"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .join(cellAssignments(corpus, centroids, id, vec), "vec_id")
+      .join(broadcast(probeCells(queries, centroids, nprobe, qid, qvec)), "_cell")
+    rankTopK(cand.select(col("qid"), col("vec_id"),
+      cosine(col("_v"), col("_q")).as("cosine")), "cosine", k)
   }
 
   /** Deterministic seeded unit-norm centroid init (shared by ivfTopK
@@ -272,9 +241,9 @@ object AnnSearch {
 
   /** Spherical k-means (Lloyd) centroid trainer for `ivfTopK` — the
     * offline job the IVF scaladoc promises. Each iteration is ONE
-    * distributed pass: assign every vector to its max-cosine centroid
-    * (the explode + max_by codegen row pipeline, same shape as the
-    * search-time assignment), then component-wise mean + renormalize.
+    * distributed pass: assign every unit vector to its max-cosine
+    * centroid (the search-time [[assignCells]] argmax), then
+    * component-wise mean + renormalize.
     * Only the (nlist × dim) centroid table is collected per iteration
     * — the same metadata-size driver exception as ANALYZE stats; the
     * corpus itself never leaves the executors, so the trainer scales
@@ -285,7 +254,7 @@ object AnnSearch {
   def trainIvfCentroids(corpus: DataFrame, nlist: Int = 16, iters: Int = 5,
       dim: Int = 64, id: String = "vec_id", vec: String = "embedding",
       seed: Long = 7L): Array[Array[Double]] = {
-    val c = corpus.select(col(id).as("_id"), normalized(asDouble(col(vec))).as("_v"))
+    val c = corpus.select(col(id).as("vec_id"), normalized(asDouble(col(vec))).as("_v"))
     var centroids = seededCentroids(nlist, dim, seed)
     for (_ <- 0 until iters) {
       val stats = assignCells(c, centroids)
@@ -305,33 +274,15 @@ object AnnSearch {
     centroids
   }
 
-  /** One assignment pass: (_id, _v) → (_id, _v, _cell) by max cosine,
-    * ties toward the lower cell id. */
-  private def assignCells(c: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
-    val cenArr = array(centroids.zipWithIndex.map { case (cv, i) =>
-      struct(lit(i).as("i"), lit(cv).as("c"))
-    }.toIndexedSeq: _*)
-    c.select(col("_id"), col("_v"), explode(cenArr).as("_ce"))
-      .select(col("_id"), col("_v"),
-        col("_ce.i").as("_celli"), dot(col("_v"), col("_ce.c")).as("_cd"))
-      .groupBy(col("_id"))
-      .agg(max_by(col("_celli"), struct(col("_cd"), -col("_celli"))).as("_cell"),
-        first(col("_v")).as("_v"))
-  }
-
   /** Mean max-cosine of the corpus to its assigned centroid — the
     * spherical k-means objective (non-decreasing under Lloyd steps). */
   def meanAssignCosine(corpus: DataFrame, centroids: Array[Array[Double]],
-      id: String = "vec_id", vec: String = "embedding"): Double = {
-    val c = corpus.select(col(id).as("_id"), normalized(asDouble(col(vec))).as("_v"))
-    val cenArr = array(centroids.zipWithIndex.map { case (cv, i) =>
-      struct(lit(i).as("i"), lit(cv).as("c"))
-    }.toIndexedSeq: _*)
-    c.select(col("_id"), col("_v"), explode(cenArr).as("_ce"))
+      id: String = "vec_id", vec: String = "embedding"): Double =
+    corpus.select(col(id).as("_id"), normalized(asDouble(col(vec))).as("_v"))
+      .select(col("_id"), col("_v"), explode(centroidArr(centroids)).as("_ce"))
       .select(col("_id"), dot(col("_v"), col("_ce.c")).as("_cd"))
       .groupBy(col("_id")).agg(max(col("_cd")).as("_m"))
       .agg(avg(col("_m"))).head().getDouble(0)
-  }
 
   /** Shared pair-verify: cosine = dot/(‖a‖·‖b‖) with ‖v‖ cached once
     * per VECTOR, clamped — the exact evaluation order of DuckDB's
@@ -457,7 +408,7 @@ object AnnSearch {
       probeBits: Int, dim: Int): DataFrame = {
     require(numPlanes <= 62, "numPlanes must fit a long bucket id")
     require(probeBits >= 0 && probeBits <= numPlanes, "probeBits out of range")
-    val tables = (0 until numTables).map(t => hyperplanes(numPlanes, dim, seed = 42L + t))
+    val tables = lshTables(numPlanes, numTables, dim)
     // buckets computed ONCE per (vector, table) — P·L dots per vector;
     // probe variants are cheap literal XORs on the materialized bucket
     // (not re-evaluations of bucketOf, which would re-run the dots

@@ -504,21 +504,19 @@ object Dedup {
     * per-pair intersect verify. The only quadratic term is
     * within-bucket, which banding keeps small; a degenerate bucket
     * (e.g. millions of empty docs) should be excluded upstream by an
-    * exact-dedup pass.
+    * exact-dedup pass. The signature is the minhash64 kernel's fixed
+    * 64 hashes, so `bands` must divide 64.
     */
   def minhashDupPairs(
       docs: DataFrame,
       id: String = "doc_id",
       text: String = "text",
-      numHashes: Int = 64,
       bands: Int = 16,
       shingleN: Int = 3,
       threshold: Double = 0.6,
       driverMaxDocs: Long = DriverMaxDocs): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
+    require(64 % bands == 0, "bands must divide the 64-hash minhash64 signature")
     require(threshold > 0, "threshold must be positive (zero-overlap pairs are never emitted)")
-    require(numHashes == 64, "the minhash64 kernel signature is fixed at 64 hashes")
     setSimilarityJoin(docs, id, text, shingleN, Jaccard, threshold, driverMaxDocs,
       signatures = true)(minhashCandidates(_, bands, shingleN, _))(
       minhashDriverCandidates(_, bands, _))

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -139,28 +139,29 @@ object Quantize {
     }
 
   /** The literal (sub, centroid-id, centroid, ‖c‖²) table of a
-    * codebook set — the broadcast-sized assignment side. */
-  private def codebookArr(codebooks: Array[Array[Array[Double]]]) =
-    array((for {
-      (cb, s) <- codebooks.zipWithIndex
-      (cv, i) <- cb.zipWithIndex
-    } yield struct(lit(s).as("s"), lit(i).as("i"), lit(cv).as("c"),
-      lit(cv.map(x => x * x).sum).as("cc"))).toIndexedSeq: _*)
+    * codebook set — the broadcast-sized side of both the encoder's
+    * nearest-centroid assignment and the query's lookup table. Returns
+    * (_sub, _code, _c, _cc). */
+  private def codebookTable(spark: SparkSession,
+      codebooks: Array[Array[Array[Double]]]): DataFrame =
+    spark.range(1).select(explode(array((for {
+        (cb, s) <- codebooks.zipWithIndex
+        (cv, i) <- cb.zipWithIndex
+      } yield struct(lit(s).as("s"), lit(i).as("i"), lit(cv).as("c"),
+        lit(cv.map(x => x * x).sum).as("cc"))).toIndexedSeq: _*)).as("_cb"))
+      .select(col("_cb.s").as("_sub"), col("_cb.i").as("_code"),
+        col("_cb.c").as("_c"), col("_cb.cc").as("_cc"))
 
   /** Nearest-centroid assignment rows (id, sub, code, subvec):
     * ‖x−c‖² = x·x − 2·x·c + c·c minimized ⇔ (2·x·c − c·c) maximized —
     * two native vec_dot folds per candidate row feeding a codegen'd
     * max_by; ties toward the lower code id for determinism. */
   private def assignRows(sub: DataFrame, codebooks: Array[Array[Array[Double]]]): DataFrame =
-    sub.join(broadcast(
-        sub.sparkSession.range(1).select(explode(codebookArr(codebooks)).as("_cb"))
-          .select(col("_cb.s").as("_sub"), col("_cb.i").as("_ci"),
-            col("_cb.c").as("_c"), col("_cb.cc").as("_cc"))),
-        Seq("_sub"))
-      .select(col("_id"), col("_sub"), col("_ci"), col("_sv"),
+    sub.join(broadcast(codebookTable(sub.sparkSession, codebooks)), Seq("_sub"))
+      .select(col("_id"), col("_sub"), col("_code"), col("_sv"),
         (call_function("vec_dot", col("_sv"), col("_c")) * 2 - col("_cc")).as("_score"))
       .groupBy(col("_id"), col("_sub"))
-      .agg(max_by(col("_ci"), struct(col("_score"), -col("_ci"))).as("_code"),
+      .agg(max_by(col("_code"), struct(col("_score"), -col("_code"))).as("_code"),
         first(col("_sv")).as("_sv"))
 
   /** Per-subspace k-means (Lloyd) over the corpus — one distributed
@@ -204,97 +205,60 @@ object Quantize {
       .select(col("_id").as(id), col("codes"))
   }
 
+  /** The ADC lookup table: (qid, _sub, _code, _qdot), one row per
+    * query, subspace and centroid — the inner product of the
+    * unit-normalized query's subvector with that centroid. Built once
+    * per query, broadcast-sized (|queries| · m · ksub rows). */
+  private def adcLut(queries: DataFrame, codebooks: Array[Array[Array[Double]]],
+      dim: Int, qid: String, qvec: String): DataFrame =
+    subRows(queries, dim, codebooks.length, qid, qvec)
+      .withColumnRenamed("_id", "qid")
+      .join(broadcast(codebookTable(queries.sparkSession, codebooks)), Seq("_sub"))
+      .select(col("qid"), col("_sub"), col("_code"),
+        call_function("vec_dot", col("_sv"), col("_c")).as("_qdot"))
+
+  /** ADC score per (qid, vec_id) from its (qid, vec_id, _sub, _qdot)
+    * term rows: the m terms added in FIXED subspace order (an m-term
+    * expression over one-row pivot sums), never an agg over rows in
+    * the order the shuffle delivers them — so a score is the same
+    * double on any partitioning, and the DuckDB oracle spells the same
+    * sum. Returns (qid, vec_id, score). */
+  private def adcScores(terms: DataFrame, m: Int): DataFrame = {
+    val parts = (0 until m).map(s =>
+      sum(when(col("_sub") === s, col("_qdot"))).as(s"_s$s"))
+    terms.groupBy(col("qid"), col("vec_id"))
+      .agg(parts.head, parts.tail: _*)
+      .select(col("qid"), col("vec_id"),
+        (0 until m).map(s => col(s"_s$s")).reduce(_ + _).as("score"))
+  }
+
+  /** Exact re-rank of a (qid, vec_id) shortlist: only those ids join
+    * back to the FLOAT corpus, scored by [[AnnSearch.cosine]]
+    * (bit-matched to DuckDB). Returns (qid, vec_id, cosine, rank ≤ k). */
+  private def rerank(short: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int,
+      id: String, vec: String, qid: String, qvec: String): DataFrame = {
+    val c = corpus.select(col(id).as("vec_id"), col(vec).cast(ArrayType(DoubleType)).as("_v"))
+    val q = queries.select(col(qid).as("qid"), col(qvec).cast(ArrayType(DoubleType)).as("_q"))
+    AnnSearch.rankTopK(short.join(c, "vec_id").join(broadcast(q), "qid")
+      .select(col("qid"), col("vec_id"), AnnSearch.cosine(col("_v"), col("_q")).as("cosine")),
+      "cosine", k)
+  }
+
   /** ADC top-k: approximate cosine = Σ_sub q_sub · c_sub(code), the
     * inner product of the (unit-normalized) query with the corpus
     * vector's RECONSTRUCTION — the corpus is never decoded. Plan
     * shape: encoded corpus explodes to (id, sub, code) narrow rows;
     * each query's m × ksub lookup table is built once (broadcast);
-    * the join + partial-aggregable sum is one codegen pipeline.
-    * Returns (qid, vec_id, score, rank). */
+    * the join + [[adcScores]]'s fixed-order sum is one codegen
+    * pipeline. Returns (qid, vec_id, score, rank). */
   def pqAdcTopK(encoded: DataFrame, codebooks: Array[Array[Array[Double]]],
       queries: DataFrame, k: Int, dim: Int = 64,
       id: String = "vec_id", qid: String = "qid", qvec: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = codebooks.length
     val corpusRows = encoded.select(col(id).as("vec_id"),
       posexplode(col("codes")).as(Seq("_sub", "_code")))
-    val lut = subRows(queries, dim, m, qid, qvec)
-      .withColumnRenamed("_id", "qid")
-      .join(broadcast(
-          queries.sparkSession.range(1).select(explode(codebookArr(codebooks)).as("_cb"))
-            .select(col("_cb.s").as("_sub"), col("_cb.i").as("_code"), col("_cb.c").as("_c"))),
-        Seq("_sub"))
-      .select(col("qid"), col("_sub"), col("_code"),
-        call_function("vec_dot", col("_sv"), col("_c")).as("_qdot"))
-    val scored = corpusRows.join(broadcast(lut), Seq("_sub", "_code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("_qdot")).as("score"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Oracle-replayable ADC + exact rerank: same two-stage search as
-    * [[pqRerankTopK]], with the one nondeterminism squeezed out — the
-    * ADC score is the sum of m=|codebooks| single-row terms added in
-    * FIXED subspace order (an 8-term expression over one-row pivot
-    * sums), not an agg over rows whose order the shuffle decides; the
-    * rerank scores with [[AnnSearch.cosine]] (bit-matched to DuckDB).
-    * With seeded codebooks the whole query is a pure function of the
-    * corpus, so the driver hash-checks encode → ADC → shortlist →
-    * rerank end to end (q_ann_pq_seeded). */
-  def pqRerankTopKExact(encoded: DataFrame, codebooks: Array[Array[Array[Double]]],
-      corpus: DataFrame, queries: DataFrame, k: Int, shortlist: Int = 50,
-      dim: Int = 64, id: String = "vec_id",
-      vec: String = "embedding", qid: String = "qid", qvec: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = codebooks.length
-    val corpusRows = encoded.select(col(id).as("vec_id"),
-      posexplode(col("codes")).as(Seq("_sub", "_code")))
-    val lut = subRows(queries, dim, m, qid, qvec)
-      .withColumnRenamed("_id", "qid")
-      .join(broadcast(
-          queries.sparkSession.range(1).select(explode(codebookArr(codebooks)).as("_cb"))
-            .select(col("_cb.s").as("_sub"), col("_cb.i").as("_code"), col("_cb.c").as("_c"))),
-        Seq("_sub"))
-      .select(col("qid"), col("_sub"), col("_code"),
-        call_function("vec_dot", col("_sv"), col("_c")).as("_qdot"))
-    val terms = (0 until m).map(s =>
-      sum(when(col("_sub") === s, col("_qdot"))).as(s"_s$s"))
-    val scored = corpusRows.join(broadcast(lut), Seq("_sub", "_code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(terms.head, terms.tail: _*)
-      .select(col("qid"), col("vec_id"),
-        (0 until m).map(s => col(s"_s$s")).reduce(_ + _).as("score"))
-    val sw = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("vec_id"))
-    val short = scored.withColumn("_sr", row_number().over(sw))
-      .filter(col("_sr") <= shortlist).select(col("qid"), col("vec_id"))
-    val c = corpus.select(col(id).as("vec_id"), col(vec).cast(ArrayType(DoubleType)).as("_v"))
-    val q = queries.select(col(qid).as("qid"), col(qvec).cast(ArrayType(DoubleType)).as("_q"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    short.join(c, "vec_id").join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"), AnnSearch.cosine(col("_v"), col("_q")).as("cosine"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Max-cosine coarse cell per corpus vector — the IVF assignment,
-    * shared by the inline `ivfPqTopK` path and the persisted index
-    * writer. Returns (vec_id, _cell). */
-  def cellAssignments(corpus: DataFrame, centroids: Array[Array[Double]],
-      id: String = "vec_id", vec: String = "embedding"): DataFrame = {
-    val cenArr = array(centroids.zipWithIndex.map { case (cv, i) =>
-      struct(lit(i).as("i"), lit(cv).as("c"))
-    }.toIndexedSeq: _*)
-    val unit = {
-      val v = col(vec).cast(ArrayType(DoubleType))
-      val n = sqrt(call_function("vec_dot", v, v))
-      when(n > 0, transform(v, x => x / n)).otherwise(v)
-    }
-    corpus.select(col(id).as("vec_id"), unit.as("_u"))
-      .select(col("vec_id"), col("_u"), explode(cenArr).as("_ce"))
-      .select(col("vec_id"),
-        col("_ce.i").as("_celli"), call_function("vec_dot", col("_u"), col("_ce.c")).as("_cd"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("_celli"), struct(col("_cd"), -col("_celli"))).as("_cell"))
+    AnnSearch.rankTopK(adcScores(corpusRows.join(
+      broadcast(adcLut(queries, codebooks, dim, qid, qvec)), Seq("_sub", "_code")),
+      codebooks.length), "score", k)
   }
 
   /** Persist the IVF∘PQ index: PQ codes hive-partitioned by `_cell`
@@ -310,7 +274,7 @@ object Quantize {
       centroids: Array[Array[Double]], codebooks: Array[Array[Array[Double]]],
       dim: Int = 64, id: String = "vec_id", vec: String = "embedding"): Unit =
     pqEncode(corpus, codebooks, dim, id, vec)
-      .join(cellAssignments(corpus, centroids, id, vec), "vec_id")
+      .join(AnnSearch.cellAssignments(corpus, centroids, id, vec), "vec_id")
       .write.mode("overwrite").partitionBy("_cell").parquet(path)
 
   /** INCREMENTAL index maintenance: encode + cell-assign only the NEW
@@ -327,13 +291,12 @@ object Quantize {
       centroids: Array[Array[Double]], codebooks: Array[Array[Array[Double]]],
       dim: Int = 64, id: String = "vec_id", vec: String = "embedding"): Unit =
     pqEncode(newVectors, codebooks, dim, id, vec)
-      .join(cellAssignments(newVectors, centroids, id, vec), "vec_id")
+      .join(AnnSearch.cellAssignments(newVectors, centroids, id, vec), "vec_id")
       .write.mode("append").partitionBy("_cell").parquet(path)
 
   /** Read back the rows of the probed cells from a persisted index —
     * the `_cell` filter lands in the scan's PartitionFilters. */
-  def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      probeCells: Seq[Int]): DataFrame =
+  def readIvfPqIndex(spark: SparkSession, path: String, probeCells: Seq[Int]): DataFrame =
     spark.read.parquet(path).filter(col("_cell").isin(probeCells: _*))
 
   /** IVF ∘ PQ: coarse cells prune WHICH vectors are scored (a query
@@ -347,121 +310,29 @@ object Quantize {
     * (qid × probed-cell) table is broadcast-sized, candidate rows
     * stay (vec_id, sub, code) narrow. Exact re-rank on the
     * `shortlist` ids closes the loop (touches float vectors for
-    * shortlist · |queries| rows only). */
+    * shortlist · |queries| rows only).
+    *
+    * Cells and probes are [[AnnSearch.cellAssignments]] and
+    * [[AnnSearch.probeCells]] (raw-dot argmax, lower-id ties), the ADC
+    * is [[adcScores]]'s fixed-order sum: with fixed centroids and
+    * codebooks the query is a pure function of the corpus, so the
+    * DuckDB oracle replays prune → encode → ADC → shortlist → rerank
+    * (q_ann_ivfpq_seeded). */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       centroids: Array[Array[Double]], codebooks: Array[Array[Array[Double]]],
       nprobe: Int = 4, shortlist: Int = 50, dim: Int = 64,
       id: String = "vec_id", vec: String = "embedding",
       qid: String = "qid", qvec: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = codebooks.length
-    val cenArr = array(centroids.zipWithIndex.map { case (cv, i) =>
-      struct(lit(i).as("i"), lit(cv).as("c"))
-    }.toIndexedSeq: _*)
-    // corpus: max-cosine cell per vector (explode + max_by row
-    // pipeline), then PQ codes — the persisted (cell, codes) layout
-    val encoded = pqEncode(corpus, codebooks, dim, id, vec)
-      .join(cellAssignments(corpus, centroids, id, vec), "vec_id")
-    val corpusRows = encoded.select(col("vec_id"), col("_cell"),
-      posexplode(col("codes")).as(Seq("_sub", "_code")))
-    // queries: nprobe closest cells + the ADC lookup table
-    val qUnit = {
-      val v = col(qvec).cast(ArrayType(DoubleType))
-      val n = sqrt(call_function("vec_dot", v, v))
-      when(n > 0, transform(v, x => x / n)).otherwise(v)
-    }
-    val qw = Window.partitionBy(col("qid")).orderBy(col("_cd").desc, col("_celli"))
-    val probes = queries.select(col(qid).as("qid"), qUnit.as("_q"))
-      .select(col("qid"), explode(cenArr).as("_ce"), col("_q"))
-      .select(col("qid"), col("_ce.i").as("_celli"),
-        call_function("vec_dot", col("_q"), col("_ce.c")).as("_cd"))
-      .withColumn("_cr", row_number().over(qw)).filter(col("_cr") <= nprobe)
-      .select(col("qid"), col("_celli").as("_cell"))
-    val lut = subRows(queries, dim, m, qid, qvec)
-      .withColumnRenamed("_id", "qid")
-      .join(broadcast(
-          queries.sparkSession.range(1).select(explode(codebookArr(codebooks)).as("_cb"))
-            .select(col("_cb.s").as("_sub"), col("_cb.i").as("_code"), col("_cb.c").as("_c"))),
-        Seq("_sub"))
-      .select(col("qid"), col("_sub"), col("_code"),
-        call_function("vec_dot", col("_sv"), col("_c")).as("_qdot"))
-    val cand = corpusRows.join(broadcast(probes), Seq("_cell"))
-      .join(broadcast(lut), Seq("qid", "_sub", "_code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("_qdot")).as("score"))
-    val sw = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("vec_id"))
-    val short = cand.withColumn("_sr", row_number().over(sw)).filter(col("_sr") <= shortlist)
-      .select(col("qid"), col("vec_id"))
-    // exact re-rank of the shortlist
-    val c = corpus.select(col(id).as("vec_id"), col(vec).cast(ArrayType(DoubleType)).as("_v"))
-    val q = queries.select(col(qid).as("qid"), col(qvec).cast(ArrayType(DoubleType)).as("_q"))
-    val scored = short.join(c, "vec_id").join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"), AnnSearch.cosine(col("_v"), col("_q")).as("cosine"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Oracle-replayable IVF ∘ PQ: the composed billion-vector search
-    * shape ([[ivfPqTopK]]) with every FP sequence pinned — cell
-    * assignment/probes on the normalized-dot argmax with lower-id
-    * ties ([[cellAssignments]]'s arithmetic), ADC as the FIXED-order
-    * m-term sum ([[pqRerankTopKExact]]'s arithmetic), exact-cosine
-    * rerank. With seeded centroids + codebooks the query is a pure
-    * function of the corpus, so the driver hash-checks
-    * prune → encode → ADC → shortlist → rerank end to end
-    * (q_ann_ivfpq_seeded); `ivfPqTopK` stays the production path. */
-  def ivfPqTopKExact(corpus: DataFrame, queries: DataFrame, k: Int,
-      centroids: Array[Array[Double]], codebooks: Array[Array[Array[Double]]],
-      nprobe: Int = 4, shortlist: Int = 50, dim: Int = 64,
-      id: String = "vec_id", vec: String = "embedding",
-      qid: String = "qid", qvec: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = codebooks.length
-    val cenArr = array(centroids.zipWithIndex.map { case (cv, i) =>
-      struct(lit(i).as("i"), lit(cv).as("c"))
-    }.toIndexedSeq: _*)
-    val encoded = pqEncode(corpus, codebooks, dim, id, vec)
-      .join(cellAssignments(corpus, centroids, id, vec), "vec_id")
-    val corpusRows = encoded.select(col("vec_id"), col("_cell"),
-      posexplode(col("codes")).as(Seq("_sub", "_code")))
-    val qUnit = {
-      val v = col(qvec).cast(ArrayType(DoubleType))
-      val n = sqrt(call_function("vec_dot", v, v))
-      when(n > 0, transform(v, x => x / n)).otherwise(v)
-    }
-    val qw = Window.partitionBy(col("qid")).orderBy(col("_cd").desc, col("_celli"))
-    val probes = queries.select(col(qid).as("qid"), qUnit.as("_q"))
-      .select(col("qid"), explode(cenArr).as("_ce"), col("_q"))
-      .select(col("qid"), col("_ce.i").as("_celli"),
-        call_function("vec_dot", col("_q"), col("_ce.c")).as("_cd"))
-      .withColumn("_cr", row_number().over(qw)).filter(col("_cr") <= nprobe)
-      .select(col("qid"), col("_celli").as("_cell"))
-    val lut = subRows(queries, dim, m, qid, qvec)
-      .withColumnRenamed("_id", "qid")
-      .join(broadcast(
-          queries.sparkSession.range(1).select(explode(codebookArr(codebooks)).as("_cb"))
-            .select(col("_cb.s").as("_sub"), col("_cb.i").as("_code"), col("_cb.c").as("_c"))),
-        Seq("_sub"))
-      .select(col("qid"), col("_sub"), col("_code"),
-        call_function("vec_dot", col("_sv"), col("_c")).as("_qdot"))
-    // cell-restricted ADC with the deterministic fixed-order sum
-    val terms = (0 until m).map(s =>
-      sum(when(col("_sub") === s, col("_qdot"))).as(s"_s$s"))
-    val scored = corpusRows.join(broadcast(probes), Seq("_cell"))
-      .join(broadcast(lut), Seq("qid", "_sub", "_code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(terms.head, terms.tail: _*)
-      .select(col("qid"), col("vec_id"),
-        (0 until m).map(s => col(s"_s$s")).reduce(_ + _).as("score"))
-    val sw = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("vec_id"))
-    val short = scored.withColumn("_sr", row_number().over(sw))
-      .filter(col("_sr") <= shortlist).select(col("qid"), col("vec_id"))
-    val c = corpus.select(col(id).as("vec_id"), col(vec).cast(ArrayType(DoubleType)).as("_v"))
-    val q = queries.select(col(qid).as("qid"), col(qvec).cast(ArrayType(DoubleType)).as("_q"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    short.join(c, "vec_id").join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"), AnnSearch.cosine(col("_v"), col("_q")).as("cosine"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val corpusRows = pqEncode(corpus, codebooks, dim, id, vec)
+      .join(AnnSearch.cellAssignments(corpus, centroids, id, vec), "vec_id")
+      .select(col("vec_id"), col("_cell"), posexplode(col("codes")).as(Seq("_sub", "_code")))
+    val probes = AnnSearch.probeCells(queries, centroids, nprobe, qid, qvec)
+      .select(col("qid"), col("_cell"))
+    val scored = adcScores(corpusRows.join(broadcast(probes), Seq("_cell"))
+      .join(broadcast(adcLut(queries, codebooks, dim, qid, qvec)), Seq("qid", "_sub", "_code")),
+      codebooks.length)
+    rerank(AnnSearch.rankTopK(scored, "score", shortlist).select(col("qid"), col("vec_id")),
+      corpus, queries, k, id, vec, qid, qvec)
   }
 
   /** ADC shortlist → exact re-rank: PQ scores pick `shortlist`
@@ -469,21 +340,14 @@ object Quantize {
     * back to the FLOAT corpus for exact cosine — the standard
     * two-stage deployment (the full corpus is scanned as 1-byte
     * codes; float vectors are touched for shortlist · |queries| rows
-    * only). Returns (qid, vec_id, cosine, rank) with rank ≤ k. */
+    * only). With fixed codebooks the query is a pure function of the
+    * corpus, so the DuckDB oracle replays encode → ADC → shortlist →
+    * rerank (q_ann_pq, q_ann_pq_seeded). Returns (qid, vec_id, cosine,
+    * rank) with rank ≤ k. */
   def pqRerankTopK(encoded: DataFrame, codebooks: Array[Array[Array[Double]]],
       corpus: DataFrame, queries: DataFrame, k: Int, shortlist: Int = 50,
       dim: Int = 64, id: String = "vec_id",
-      vec: String = "embedding", qid: String = "qid", qvec: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cand = pqAdcTopK(encoded, codebooks, queries, shortlist, dim, id, qid, qvec)
-      .select(col("qid"), col("vec_id"))
-    val c = corpus.select(col(id).as("vec_id"),
-      col(vec).cast(ArrayType(DoubleType)).as("_v"))
-    val q = queries.select(col(qid).as("qid"),
-      col(qvec).cast(ArrayType(DoubleType)).as("_q"))
-    val scored = cand.join(c, "vec_id").join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"), AnnSearch.cosine(col("_v"), col("_q")).as("cosine"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+      vec: String = "embedding", qid: String = "qid", qvec: String = "qvec"): DataFrame =
+    rerank(pqAdcTopK(encoded, codebooks, queries, shortlist, dim, id, qid, qvec)
+      .select(col("qid"), col("vec_id")), corpus, queries, k, id, vec, qid, qvec)
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import graft.llm.{AnnSearch, Chunking, Dedup, Multimodal, Quantize, Retrieval, TextAnalysis}
@@ -140,6 +141,22 @@ object LlmQueries {
     require(offset > 0, s"twins gate: non-positive clone-id offset $offset")
     df.unionByName(df.withColumn(idCol, col(idCol) + lit(offset)))
   }
+
+  /** A ranked `q_ann_` query: `search(corpus, queries)` over the
+    * embeddings table, the vectors with vec_id < 5 as queries, answered
+    * as (qid, vec_id, cosine, rnk) in rank order. */
+  private def annRanked(s: SparkSession, dir: String)(
+      search: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    val queries = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    search(emb, queries)
+      .select(col("qid"), col("vec_id"), col("cosine"), col("rank").cast("int").as("rnk"))
+      .orderBy(col("qid"), col("rnk"))
+  }
+
+  /** Multi-table seeded LSH top-10 — q_ann_lsh and q_ann_lsh_seeded. */
+  private def annLsh: QFn = (s, dir) => annRanked(s, dir)(AnnSearch.lshTopK(_, _, k = 10))
 
   val queries: Map[String, QFn] = Map(
     // ---- text analysis (oracle: integer stats only — ratio rounding
@@ -642,15 +659,7 @@ object LlmQueries {
     }),
 
     // ---- similarity search ----
-    "q_ann_brute" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      AnnSearch.bruteForceTopK(emb, queries, k = 10)
-        .select(col("qid"), col("vec_id"), col("cosine"), col("rank").cast("int").as("rnk"))
-        .drop("rank")
-        .orderBy(col("qid"), col("rnk"))
-    }),
+    "q_ann_brute" -> ((s, dir) => annRanked(s, dir)(AnnSearch.bruteForceTopK(_, _, k = 10))),
     "q_hard_negatives" -> ((s, dir) => {
       // contrastive hard-negative mining: each query's positive is
       // itself (self-retrieval), so the miner must drop the exact hit
@@ -665,121 +674,56 @@ object LlmQueries {
           col("rank").cast("int").as("rnk"))
         .orderBy(col("qid"), col("rnk"))
     }),
-    "q_ann_lsh" -> ((s, dir) => {
-      // Oracle-checked (r8): the production normalized path replays in
-      // DuckDB — unit-normalize (the fold q_ann_pq_seeded proved
-      // bit-identical), sign buckets over the normalized vector,
-      // 1-bit-flip probes, clamped-dot scoring. Recall vs brute force
-      // stays spec-asserted (LlmSpec).
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      AnnSearch.lshTopK(emb, queries, k = 10)
-        .select(col("qid"), col("vec_id"), col("cosine"), col("rank").cast("int").as("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    }),
+    "q_ann_lsh" -> annLsh,
+    // one query under two names: committed artifacts key on both
+    "q_ann_lsh_seeded" -> annLsh,
 
     "q_ann_ivf" -> ((s, dir) => {
-      // TRAINED IVF, oracle-checked (r8): Lloyd-trained centroids
-      // (TrainedModels — the query and the oracle builder share one
-      // cached array, embedded as literals on both sides) through the
-      // production normalized cell-probe path. Assignment ties break
-      // toward the lower cell id, so the whole query is a pure
-      // function of (corpus, centroids) and DuckDB replays it.
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      graft.llm.AnnSearch.ivfTopK(emb, queries, k = 10, nlist = 16, nprobe = 6,
-          centroids0 = Some(graft.llm.TrainedModels.ivfCentroids(s, dir)))
-        .select(col("qid"), col("vec_id"), col("cosine"), col("rank").cast("int").as("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    }),
-
-    "q_ann_lsh_seeded" -> ((s, dir) => {
-      // Oracle-checked LSH: seeded hyperplanes + lshTopKExact pin the
-      // multi-table 1-bit-flip probe to engine-identical arithmetic
-      // (raw-dot sign buckets, bit-matched cosine) — DuckDB replays
-      // bucket → probe → score → top-k. q_ann_lsh keeps the
-      // normalized production path as rows-only + recall spec.
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      AnnSearch.lshTopKExact(emb, queries, k = 10)
-        .select(col("qid"), col("vec_id"), col("cosine"), col("rank").cast("int").as("rnk"))
-        .orderBy(col("qid"), col("rnk"))
+      // TRAINED IVF: Lloyd-trained centroids (TrainedModels — the query
+      // and the oracle builder share one cached array, embedded as
+      // literals on both sides). Assignment and probe ties break toward
+      // the lower cell id, so the whole query is a pure function of
+      // (corpus, centroids) and DuckDB replays it.
+      annRanked(s, dir)(AnnSearch.ivfTopK(_, _, k = 10, nlist = 16, nprobe = 6,
+        centroids0 = Some(graft.llm.TrainedModels.ivfCentroids(s, dir))))
     }),
     "q_ann_ivf_seeded" -> ((s, dir) => {
-      // Oracle-checked IVF: seeded centroids make the whole cell-probe
-      // query a pure function of the corpus, and ivfTopKExact pins
-      // every FP sequence to one both engines spell identically (raw
-      // dots for the norm-invariant argmax, deterministic ties, the
-      // bit-matched cosine fold for scoring) — so DuckDB replays
-      // assignment → probe → score → top-k and the driver hash-checks
-      // the IVF semantics end to end. q_ann_ivf keeps the trained/
-      // normalized production path as a rows-only + spec entry.
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      AnnSearch.ivfTopKExact(emb, queries, k = 10, nlist = 16, nprobe = 6)
-        .select(col("qid"), col("vec_id"), col("cosine"), col("rank").cast("int").as("rnk"))
-        .orderBy(col("qid"), col("rnk"))
+      // the same cell-probe search over seeded centroids: DuckDB
+      // replays assignment → probe → score → top-k with no trained
+      // model in the loop
+      annRanked(s, dir)(AnnSearch.ivfTopK(_, _, k = 10, nlist = 16, nprobe = 6))
     }),
 
     "q_ann_pq" -> ((s, dir) => {
-      // TRAINED PQ, oracle-checked (r8): k-means-trained codebooks
-      // (TrainedModels — one cached array feeds both the query's Spark
-      // literals and the oracle's VALUES literals) through the
-      // fixed-order ADC + exact-rerank path, so DuckDB replays
-      // encode → ADC → shortlist → rerank with the trained model. The
-      // agg-ordered production ADC sum (pqRerankTopK) stays covered by
-      // QuantizeSpec; q_ann_pq_seeded keeps the seeded twin.
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      // TRAINED PQ: k-means-trained codebooks (TrainedModels — one
+      // cached array feeds both the query's Spark literals and the
+      // oracle's VALUES literals) through the fixed-order ADC +
+      // exact-rerank path, so DuckDB replays
+      // encode → ADC → shortlist → rerank with the trained model.
       val cb = graft.llm.TrainedModels.pqCodebooks(s, dir)
-      Quantize.pqRerankTopKExact(Quantize.pqEncode(emb, cb), cb, emb, queries,
-          k = 10, shortlist = 50)
-        .select(col("qid"), col("vec_id"), col("cosine"), col("rank").cast("int").as("rnk"))
-        .orderBy(col("qid"), col("rnk"))
+      annRanked(s, dir)((emb, queries) => Quantize.pqRerankTopK(
+        Quantize.pqEncode(emb, cb), cb, emb, queries, k = 10, shortlist = 50))
     }),
-
     "q_ann_pq_seeded" -> ((s, dir) => {
-      // Oracle-checked PQ: encode (argmin ||x−c||² via the 2x·c − c·c
-      // form, ties to the lower code) → ADC with a FIXED-order 8-term
-      // score → shortlist → exact cosine rerank. Every FP sequence is
-      // one both engines spell identically, and seeded codebooks make
-      // the query a pure function of the corpus — the driver
-      // hash-checks the PQ family end to end. q_ann_pq keeps the
-      // production path (agg-ordered ADC sum) as rows-only + spec.
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      // Seeded PQ: encode (argmin ||x−c||² via the 2x·c − c·c form,
+      // ties to the lower code) → ADC with a FIXED-order 8-term score
+      // → shortlist → exact cosine rerank. Seeded codebooks make the
+      // query a pure function of the corpus.
       val cb = Quantize.seededCodebooks(m = 8, ksub = 16, dsub = 8)
-      Quantize.pqRerankTopKExact(Quantize.pqEncode(emb, cb), cb, emb, queries,
-          k = 10, shortlist = 50)
-        .select(col("qid"), col("vec_id"), col("cosine"), col("rank").cast("int").as("rnk"))
-        .orderBy(col("qid"), col("rnk"))
+      annRanked(s, dir)((emb, queries) => Quantize.pqRerankTopK(
+        Quantize.pqEncode(emb, cb), cb, emb, queries, k = 10, shortlist = 50))
     }),
 
     "q_ann_ivfpq_seeded" -> ((s, dir) => {
-      // Oracle-checked IVF∘PQ: the composed billion-vector search
-      // (coarse cells prune WHICH vectors are scored, PQ codes shrink
-      // WHAT a score costs) with pinned arithmetic throughout —
-      // normalized-dot cell argmax with lower-id ties, fixed-order
-      // 8-term ADC, exact-cosine rerank. Seeded centroids+codebooks
-      // make it a pure function of the corpus, so the driver
-      // hash-checks the full composition; ivfPqTopK stays the
-      // production path (QuantizeSpec asserts its recall + measured
-      // partition pruning of the persisted index).
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      // IVF∘PQ: coarse cells prune WHICH vectors are scored, PQ codes
+      // shrink WHAT a score costs — raw-dot cell argmax with lower-id
+      // ties, fixed-order 8-term ADC, exact-cosine rerank. Seeded
+      // centroids + codebooks make it a pure function of the corpus;
+      // QuantizeSpec asserts recall and the persisted index's
+      // partition pruning.
       val cen = AnnSearch.seededCentroids(nlist = 16, dim = 64)
       val cb = Quantize.seededCodebooks(m = 8, ksub = 16, dsub = 8)
-      Quantize.ivfPqTopKExact(emb, queries, k = 10, cen, cb,
-          nprobe = 6, shortlist = 50)
-        .select(col("qid"), col("vec_id"), col("cosine"), col("rank").cast("int").as("rnk"))
-        .orderBy(col("qid"), col("rnk"))
+      annRanked(s, dir)(Quantize.ivfPqTopK(_, _, k = 10, cen, cb, nprobe = 6, shortlist = 50))
     }),
 
     // ---- multimodal ----
@@ -968,8 +912,69 @@ object LlmQueries {
     org.apache.spark.sql.SparkSession.getActiveSession
       .getOrElse(graft.GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
 
+  /** The multi-table LSH replay (AnnSearch.lshTopK): raw-vector sign
+    * buckets per table, own bucket + 1-bit-flip probes, candidates
+    * scored by list_cosine_similarity — shared by q_ann_lsh and
+    * q_ann_lsh_seeded, which are one query. */
+  private def lshOracleSql: String =
+    s"""WITH pl(t, i, p) AS (VALUES
+      |$lshPlaneRows),
+      |corp AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      |q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
+      |cb AS (
+      |  SELECT vec_id, t,
+      |    CAST(SUM(CASE WHEN list_inner_product(v, p) > 0 THEN 1 << i ELSE 0 END) AS BIGINT) AS b
+      |  FROM corp CROSS JOIN pl GROUP BY vec_id, t),
+      |qb AS (
+      |  SELECT qid, t,
+      |    CAST(SUM(CASE WHEN list_inner_product(qv, p) > 0 THEN 1 << i ELSE 0 END) AS BIGINT) AS b
+      |  FROM q CROSS JOIN pl GROUP BY qid, t),
+      |probes AS (
+      |  SELECT qid, t, CAST(xor(b, m) AS BIGINT) AS b
+      |  FROM qb CROSS JOIN (SELECT CAST(unnest([0, 1, 2, 4, 8, 16, 32]) AS BIGINT) AS m)),
+      |cand AS (SELECT DISTINCT p.qid, c.vec_id
+      |         FROM probes p JOIN cb c ON p.t = c.t AND p.b = c.b)
+      |SELECT qid, vec_id, cosine, CAST(rnk AS INT) AS rnk FROM (
+      |  SELECT cand.qid, cand.vec_id,
+      |    list_cosine_similarity(corp.v, q.qv) AS cosine,
+      |    row_number() OVER (PARTITION BY cand.qid
+      |      ORDER BY list_cosine_similarity(corp.v, q.qv) DESC, cand.vec_id) AS rnk
+      |  FROM cand JOIN corp ON cand.vec_id = corp.vec_id JOIN q ON cand.qid = q.qid) t
+      |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin
+
+  /** The IVF cell-probe replay (AnnSearch.ivfTopK): raw-dot argmax
+    * assignment and nprobe = 6 probe rank, both with lower-cell ties,
+    * candidates scored by list_cosine_similarity — parameterized by
+    * the centroid VALUES rows, shared by the trained and seeded
+    * entries. */
+  private def ivfOracleSql(cenRows: String): String =
+    s"""WITH cen(ci, c) AS (VALUES
+      |$cenRows),
+      |corp AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      |q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
+      |asg AS (
+      |  SELECT vec_id, ci,
+      |    row_number() OVER (PARTITION BY vec_id
+      |      ORDER BY list_inner_product(v, c) DESC, ci) AS rn
+      |  FROM corp CROSS JOIN cen),
+      |cells AS (SELECT vec_id, ci AS cell FROM asg WHERE rn = 1),
+      |pr AS (
+      |  SELECT qid, ci,
+      |    row_number() OVER (PARTITION BY qid
+      |      ORDER BY list_inner_product(qv, c) DESC, ci) AS rn
+      |  FROM q CROSS JOIN cen),
+      |probes AS (SELECT qid, ci AS cell FROM pr WHERE rn <= 6),
+      |cand AS (SELECT p.qid, cl.vec_id FROM probes p JOIN cells cl ON p.cell = cl.cell)
+      |SELECT qid, vec_id, cosine, CAST(rnk AS INT) AS rnk FROM (
+      |  SELECT cand.qid, cand.vec_id,
+      |    list_cosine_similarity(corp.v, q.qv) AS cosine,
+      |    row_number() OVER (PARTITION BY cand.qid
+      |      ORDER BY list_cosine_similarity(corp.v, q.qv) DESC, cand.vec_id) AS rnk
+      |  FROM cand JOIN corp ON cand.vec_id = corp.vec_id JOIN q ON cand.qid = q.qid) t
+      |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin
+
   /** The PQ encode → ADC → shortlist → exact-rerank replay
-    * (pqRerankTopKExact's arithmetic), parameterized by the codebook
+    * (Quantize.pqRerankTopK's arithmetic), parameterized by the codebook
     * VALUES rows — shared by the seeded and trained oracle entries. */
   private def pqOracleSql(cbRows: String): String =
     s"""WITH cb(s, i, c, cc) AS (VALUES
@@ -1589,74 +1594,11 @@ object LlmQueries {
       // from the cached k-means training run (see TrainedModels)
       pqOracleSql(codebookRows(
         graft.llm.TrainedModels.pqCodebooks(oracleSpark, oracleSfDir))),
-    "q_ann_lsh" ->
-      // Production normalized LSH replay: unit-normalize (bit-matched
-      // fold), sign buckets over u, 1-bit-flip probes, clamped-dot
-      // scoring — the exact arithmetic of AnnSearch.lshTopK.
-      s"""WITH pl(t, i, p) AS (VALUES
-        |$lshPlaneRows),
-        |corp AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cu AS (SELECT vec_id,
-        |         CASE WHEN sqrt(list_inner_product(v, v)) > 0
-        |           THEN list_transform(v, x -> x / sqrt(list_inner_product(v, v)))
-        |           ELSE v END AS u
-        |       FROM corp),
-        |qu AS (SELECT vec_id AS qid, u FROM cu WHERE vec_id < 5),
-        |cb AS (
-        |  SELECT vec_id, t,
-        |    CAST(SUM(CASE WHEN list_inner_product(u, p) > 0 THEN 1 << i ELSE 0 END) AS BIGINT) AS b
-        |  FROM cu CROSS JOIN pl GROUP BY vec_id, t),
-        |qb AS (
-        |  SELECT qid, t,
-        |    CAST(SUM(CASE WHEN list_inner_product(u, p) > 0 THEN 1 << i ELSE 0 END) AS BIGINT) AS b
-        |  FROM qu CROSS JOIN pl GROUP BY qid, t),
-        |probes AS (
-        |  SELECT qid, t, CAST(xor(b, m) AS BIGINT) AS b
-        |  FROM qb CROSS JOIN (SELECT CAST(unnest([0, 1, 2, 4, 8, 16, 32]) AS BIGINT) AS m)),
-        |cand AS (SELECT DISTINCT p.qid, c.vec_id
-        |         FROM probes p JOIN cb c ON p.t = c.t AND p.b = c.b)
-        |SELECT qid, vec_id, cosine, CAST(rnk AS INT) AS rnk FROM (
-        |  SELECT cand.qid, cand.vec_id,
-        |    least(greatest(list_inner_product(cu.u, qu.u), -1.0), 1.0) AS cosine,
-        |    row_number() OVER (PARTITION BY cand.qid
-        |      ORDER BY least(greatest(list_inner_product(cu.u, qu.u), -1.0), 1.0) DESC,
-        |        cand.vec_id) AS rnk
-        |  FROM cand JOIN cu ON cand.vec_id = cu.vec_id JOIN qu ON cand.qid = qu.qid) t
-        |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin,
+    "q_ann_lsh" -> lshOracleSql,
     "q_ann_ivf" ->
-      // TRAINED centroids through the production normalized cell-probe
-      // path: assignment argmax (ties → lower cell), nprobe=6 probe
-      // rank, clamped-dot scoring — AnnSearch.ivfTopK exactly.
-      s"""WITH cen(ci, c) AS (VALUES
-        |${centroidRows(graft.llm.TrainedModels.ivfCentroids(oracleSpark, oracleSfDir))}),
-        |corp AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cu AS (SELECT vec_id,
-        |         CASE WHEN sqrt(list_inner_product(v, v)) > 0
-        |           THEN list_transform(v, x -> x / sqrt(list_inner_product(v, v)))
-        |           ELSE v END AS u
-        |       FROM corp),
-        |qu AS (SELECT vec_id AS qid, u FROM cu WHERE vec_id < 5),
-        |asg AS (
-        |  SELECT vec_id, ci,
-        |    row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY list_inner_product(u, c) DESC, ci) AS rn
-        |  FROM cu CROSS JOIN cen),
-        |cells AS (SELECT vec_id, ci AS cell FROM asg WHERE rn = 1),
-        |pr AS (
-        |  SELECT qid, ci,
-        |    row_number() OVER (PARTITION BY qid
-        |      ORDER BY list_inner_product(u, c) DESC, ci) AS rn
-        |  FROM qu CROSS JOIN cen),
-        |probes AS (SELECT qid, ci AS cell FROM pr WHERE rn <= 6),
-        |cand AS (SELECT p.qid, cl.vec_id FROM probes p JOIN cells cl ON p.cell = cl.cell)
-        |SELECT qid, vec_id, cosine, CAST(rnk AS INT) AS rnk FROM (
-        |  SELECT cand.qid, cand.vec_id,
-        |    least(greatest(list_inner_product(cu.u, qu.u), -1.0), 1.0) AS cosine,
-        |    row_number() OVER (PARTITION BY cand.qid
-        |      ORDER BY least(greatest(list_inner_product(cu.u, qu.u), -1.0), 1.0) DESC,
-        |        cand.vec_id) AS rnk
-        |  FROM cand JOIN cu ON cand.vec_id = cu.vec_id JOIN qu ON cand.qid = qu.qid) t
-        |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin,
+      // TRAINED centroids: the cached Lloyd run's literals
+      ivfOracleSql(centroidRows(
+        graft.llm.TrainedModels.ivfCentroids(oracleSpark, oracleSfDir))),
     "q_ann_ivfpq_seeded" ->
       s"""WITH cen(ci, c) AS (VALUES
         |$ivfCentroidRows),
@@ -1676,12 +1618,12 @@ object LlmQueries {
         |       FROM q),
         |cells AS (SELECT vec_id, ci AS cell FROM (
         |  SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY list_inner_product(u, c) DESC, ci) AS rn
-        |  FROM cu CROSS JOIN cen) t WHERE rn = 1),
+        |    ORDER BY list_inner_product(v, c) DESC, ci) AS rn
+        |  FROM corp CROSS JOIN cen) t WHERE rn = 1),
         |probes AS (SELECT qid, ci AS cell FROM (
         |  SELECT qid, ci, row_number() OVER (PARTITION BY qid
-        |    ORDER BY list_inner_product(u, c) DESC, ci) AS rn
-        |  FROM qu CROSS JOIN cen) t WHERE rn <= 6),
+        |    ORDER BY list_inner_product(qv, c) DESC, ci) AS rn
+        |  FROM q CROSS JOIN cen) t WHERE rn <= 6),
         |subs(sub) AS (SELECT unnest(range(0, 8))),
         |cs AS (SELECT vec_id, sub, u[sub*8+1 : sub*8+8] AS sv FROM cu CROSS JOIN subs),
         |codes AS (SELECT vec_id, sub, code FROM (
@@ -1713,56 +1655,8 @@ object LlmQueries {
         |      ORDER BY list_cosine_similarity(corp.v, q.qv) DESC, short.vec_id) AS rnk
         |  FROM short JOIN corp ON short.vec_id = corp.vec_id JOIN q ON short.qid = q.qid) t
         |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin,
-    "q_ann_lsh_seeded" ->
-      s"""WITH pl(t, i, p) AS (VALUES
-        |$lshPlaneRows),
-        |corp AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
-        |cb AS (
-        |  SELECT vec_id, t,
-        |    CAST(SUM(CASE WHEN list_inner_product(v, p) > 0 THEN 1 << i ELSE 0 END) AS BIGINT) AS b
-        |  FROM corp CROSS JOIN pl GROUP BY vec_id, t),
-        |qb AS (
-        |  SELECT qid, t,
-        |    CAST(SUM(CASE WHEN list_inner_product(qv, p) > 0 THEN 1 << i ELSE 0 END) AS BIGINT) AS b
-        |  FROM q CROSS JOIN pl GROUP BY qid, t),
-        |probes AS (
-        |  SELECT qid, t, CAST(xor(b, m) AS BIGINT) AS b
-        |  FROM qb CROSS JOIN (SELECT CAST(unnest([0, 1, 2, 4, 8, 16, 32]) AS BIGINT) AS m)),
-        |cand AS (SELECT DISTINCT p.qid, c.vec_id
-        |         FROM probes p JOIN cb c ON p.t = c.t AND p.b = c.b)
-        |SELECT qid, vec_id, cosine, CAST(rnk AS INT) AS rnk FROM (
-        |  SELECT cand.qid, cand.vec_id,
-        |    list_cosine_similarity(corp.v, q.qv) AS cosine,
-        |    row_number() OVER (PARTITION BY cand.qid
-        |      ORDER BY list_cosine_similarity(corp.v, q.qv) DESC, cand.vec_id) AS rnk
-        |  FROM cand JOIN corp ON cand.vec_id = corp.vec_id JOIN q ON cand.qid = q.qid) t
-        |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin,
-    "q_ann_ivf_seeded" ->
-      s"""WITH cen(ci, c) AS (VALUES
-        |$ivfCentroidRows),
-        |corp AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
-        |asg AS (
-        |  SELECT vec_id, ci,
-        |    row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY list_inner_product(v, c) DESC, ci) AS rn
-        |  FROM corp CROSS JOIN cen),
-        |cells AS (SELECT vec_id, ci AS cell FROM asg WHERE rn = 1),
-        |pr AS (
-        |  SELECT qid, ci,
-        |    row_number() OVER (PARTITION BY qid
-        |      ORDER BY list_inner_product(qv, c) DESC, ci) AS rn
-        |  FROM q CROSS JOIN cen),
-        |probes AS (SELECT qid, ci AS cell FROM pr WHERE rn <= 6),
-        |cand AS (SELECT p.qid, cl.vec_id FROM probes p JOIN cells cl ON p.cell = cl.cell)
-        |SELECT qid, vec_id, cosine, CAST(rnk AS INT) AS rnk FROM (
-        |  SELECT cand.qid, cand.vec_id,
-        |    list_cosine_similarity(corp.v, q.qv) AS cosine,
-        |    row_number() OVER (PARTITION BY cand.qid
-        |      ORDER BY list_cosine_similarity(corp.v, q.qv) DESC, cand.vec_id) AS rnk
-        |  FROM cand JOIN corp ON cand.vec_id = corp.vec_id JOIN q ON cand.qid = q.qid) t
-        |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin,
+    "q_ann_lsh_seeded" -> lshOracleSql,
+    "q_ann_ivf_seeded" -> ivfOracleSql(ivfCentroidRows),
     "q_mm_probe" ->
       """SELECT doc_id,
         |  CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 2 THEN 'wav'

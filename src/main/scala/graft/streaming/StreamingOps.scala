@@ -366,8 +366,8 @@ object StreamingOps {
 
   /** Streaming similarity probe vs a STATIC vector corpus — the
     * embedding sibling of [[nearDupVsCorpus]]: each incoming vector is
-    * sign-LSH-bucketed (multi-table, 1-bit multiprobe — the same
-    * structure as `AnnSearch.lshTopK`) and joined to the corpus's
+    * sign-LSH-bucketed (multi-table, 1-bit multiprobe — the bucket
+    * and probe rows of `AnnSearch.lshTopK`) and joined to the corpus's
     * precomputed bucket table; bucket-collision candidates score by
     * exact cosine and rows ≥ `threshold` emit. Stream-static join =
     * NO streaming state beyond the emit-dedup watermark; the corpus
@@ -380,26 +380,14 @@ object StreamingOps {
       id: String = "vec_id", vec: String = "embedding",
       sid: String = "doc_id", svec: String = "embedding"): DataFrame = {
     import graft.llm.AnnSearch
-    import org.apache.spark.sql.Column
-    val tables = (0 until numTables)
-      .map(t => AnnSearch.hyperplanes(numPlanes, dim, seed = 42L + t))
-    def vdouble(c: Column): Column =
-      c.cast(org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType))
-    val c = corpus.select(col(id).as("corpus_id"), vdouble(col(vec)).as("_v"))
+    val doubles = org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)
+    val c = corpus.select(col(id).as("corpus_id"), col(vec).cast(doubles).as("_v"))
       .select(col("corpus_id"), col("_v"),
-        explode(array(tables.zipWithIndex.map { case (p, t) =>
-          struct(lit(t).as("t"), AnnSearch.bucketOf(col("_v"), p).as("b"))
-        }: _*)).as("_tb"))
+        AnnSearch.lshBucketRows(col("_v"), numPlanes, numTables, dim).as("_tb"))
     val s = stream.withWatermark("ts", watermark)
-      .select(col(sid).as("stream_id"), col("ts"), vdouble(col(svec)).as("_q"))
+      .select(col(sid).as("stream_id"), col("ts"), col(svec).cast(doubles).as("_q"))
       .select(col("stream_id"), col("ts"), col("_q"),
-        explode(flatten(array(tables.zipWithIndex.map { case (p, t) =>
-          transform(
-            array(lit(0L) +: (0 until numPlanes).map(i => lit(1L << i)): _*),
-            m => struct(lit(t).as("t"),
-              AnnSearch.bucketOf(col("_q"), p).bitwiseXOR(m).as("b")))
-        }: _*))).as("_tb"))
+        AnnSearch.lshProbeRows(col("_q"), numPlanes, numTables, dim).as("_tb"))
     s.join(c, "_tb")
       .withColumn("cosine", AnnSearch.cosine(col("_q"), col("_v")))
       .filter(col("cosine") >= threshold)

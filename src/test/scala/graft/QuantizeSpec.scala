@@ -99,6 +99,39 @@ class QuantizeSpec extends SparkSpec {
     assert(trained >= 0.5, s"trained containment $trained")
   }
 
+  test("pq ADC scores are deterministic: 1 and 7 corpus partitions agree bit for bit") {
+    // the fixed-order m-term sum adds a vector's subspace terms in
+    // subspace order whatever partitioning delivers its code rows
+    val cb = Quantize.seededCodebooks(m = 8, ksub = 16, dsub = 8)
+    val queries = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val enc = Quantize.pqEncode(emb, cb)
+    def adc(parts: Int): Seq[(Long, Long, Double, Int)] =
+      Quantize.pqAdcTopK(enc.repartition(parts), cb, queries, k = 50)
+        .select(col("qid"), col("vec_id"), col("score"), col("rank"))
+        .as[(Long, Long, Double, Int)].collect().toSeq.sortBy(r => (r._1, r._4))
+    val (one, seven) = (adc(1), adc(7))
+    assert(one.nonEmpty && one.size == seven.size)
+    assert(one.map(r => java.lang.Double.doubleToRawLongBits(r._3)) ==
+      seven.map(r => java.lang.Double.doubleToRawLongBits(r._3)))
+    assert(one == seven)
+    // each score is its m lookup-table terms added left to right in
+    // subspace order, replayed here with the vec_dot kernel's
+    // sequential accumulation
+    def dot(a: Seq[Double], b: Seq[Double]): Double =
+      a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i))
+    val q0 = emb.filter(col("vec_id") === 0)
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    val n0 = math.sqrt(dot(q0, q0))
+    val unit = q0.map(_ / n0)
+    val codes = enc.as[(Long, Seq[Int])].collect().toMap
+    val want = one.filter(_._1 == 0L).map { case (_, v, _, _) =>
+      (0 until 8).map(sub => dot(unit.slice(sub * 8, sub * 8 + 8), cb(sub)(codes(v)(sub)).toSeq))
+        .reduce(_ + _)
+    }
+    assert(one.filter(_._1 == 0L).map(_._3) == want)
+  }
+
   test("ivf-pq: reasonable recall with cell pruning, exact rerank cosines") {
     val cb = Quantize.seededCodebooks(m = 8, ksub = 16, dsub = 8)
     val cen = AnnSearch.seededCentroids(nlist = 8, dim = 64)
